@@ -1092,6 +1092,31 @@ def q_source_arrow_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def fk_audit(child: DataFrame, ckey: str, parent: DataFrame, pkey: str,
+             name: str) -> DataFrame:
+    """One FK relation's audit row: ``n_child`` child rows, ``n_orphans``
+    of them without a parent, and the ``fk_ok`` verdict — one left join
+    of the child's key onto the parent's key.  The parent projection is
+    deduplicated so the join preserves the child row count even when
+    ``pkey`` is not unique (a no-op for a primary key)."""
+    joined = child.select(F.col(ckey).alias("__ck")).join(
+        parent.select(F.col(pkey).alias("__pk")).dropDuplicates(["__pk"]),
+        F.col("__ck") == F.col("__pk"),
+        "left",
+    )
+    return joined.agg(
+        F.count(F.lit(1)).cast("long").alias("n_child"),
+        F.count(F.when(F.col("__pk").isNull(), 1))
+        .cast("long")
+        .alias("n_orphans"),
+    ).select(
+        F.lit(name).alias("relation"),
+        "n_child",
+        "n_orphans",
+        (F.col("n_orphans") == 0).alias("fk_ok"),
+    )
+
+
 @query(
     "q_quality_referential_integrity",
     oracle="""
@@ -1153,39 +1178,20 @@ def q_quality_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFra
     scheduler can overlap.  Output is five rows of exact integers.
     """
 
-    def audit(child: DataFrame, ckey: str, parent: DataFrame, pkey: str,
-              name: str) -> DataFrame:
-        joined = child.select(F.col(ckey).alias("__ck")).join(
-            parent.select(F.col(pkey).alias("__pk")),
-            F.col("__ck") == F.col("__pk"),
-            "left",
-        )
-        return joined.agg(
-            F.count(F.lit(1)).cast("long").alias("n_child"),
-            F.count(F.when(F.col("__pk").isNull(), 1))
-            .cast("long")
-            .alias("n_orphans"),
-        ).select(
-            F.lit(name).alias("relation"),
-            "n_child",
-            "n_orphans",
-            (F.col("n_orphans") == 0).alias("fk_ok"),
-        )
-
     orders = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
     out = (
-        audit(orders, "o_custkey", table(spark, sf_dir, "customer"),
-              "c_custkey", "orders->customer")
-        .unionAll(audit(li, "l_orderkey", orders, "o_orderkey",
-                        "lineitem->orders"))
-        .unionAll(audit(li, "l_partkey", table(spark, sf_dir, "part"),
-                        "p_partkey", "lineitem->part"))
-        .unionAll(audit(li, "l_suppkey", table(spark, sf_dir, "supplier"),
-                        "s_suppkey", "lineitem->supplier"))
-        .unionAll(audit(table(spark, sf_dir, "customer"), "c_nationkey",
-                        table(spark, sf_dir, "nation"), "n_nationkey",
-                        "customer->nation"))
+        fk_audit(orders, "o_custkey", table(spark, sf_dir, "customer"),
+                 "c_custkey", "orders->customer")
+        .unionAll(fk_audit(li, "l_orderkey", orders, "o_orderkey",
+                           "lineitem->orders"))
+        .unionAll(fk_audit(li, "l_partkey", table(spark, sf_dir, "part"),
+                           "p_partkey", "lineitem->part"))
+        .unionAll(fk_audit(li, "l_suppkey", table(spark, sf_dir, "supplier"),
+                           "s_suppkey", "lineitem->supplier"))
+        .unionAll(fk_audit(table(spark, sf_dir, "customer"), "c_nationkey",
+                           table(spark, sf_dir, "nation"), "n_nationkey",
+                           "customer->nation"))
     )
     return out.orderBy("relation")
 

@@ -141,10 +141,10 @@ def _npy_events_fixture(spark: SparkSession, sf_dir: str) -> str:
     import os
     import tempfile
 
-    from i3cols_spark.operators.similarity import _data_fingerprint
+    from i3cols_spark.sources.mirrors import data_fingerprint
     from i3cols_spark.sources.npy_cols import write_npy_columns
 
-    fp = _data_fingerprint(os.path.join(sf_dir, "events.parquet"))
+    fp = data_fingerprint(os.path.join(sf_dir, "events.parquet"))
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     out = os.path.join(tempfile.gettempdir(), f"i3cols_npy_events_{tag}")
     marker = os.path.join(out, "_SUCCESS")

@@ -27,6 +27,7 @@ from pyspark.storagelevel import StorageLevel
 from i3cols_spark.functions.arrays import pair_structs
 from i3cols_spark.functions.vectors import as_double, cosine, dot, lsh_bucket, norm_l2
 from i3cols_spark.operators.registry import query
+from i3cols_spark.sources.mirrors import data_fingerprint
 from i3cols_spark.sources.tables import table
 
 #: Fixed random hyperplanes (seed 42) shared by the Spark plan and the
@@ -360,35 +361,6 @@ _IVF_NLIST = 64
 _IVF_NPROBE = 4
 
 
-def _data_fingerprint(path: str) -> str:
-    """Cheap content fingerprint of a parquet file/dir: names + sizes +
-    mtimes of every data file, PLUS the tail bytes of each file — for
-    parquet that's the footer, whose row-group statistics change
-    whenever values change.  The metadata-only stat walk misses a
-    regeneration that preserves sizes and mtimes (``rsync -a`` /
-    ``tar -p`` restores — ADVICE r04 item 3); the 4 KiB footer sample
-    closes that hole for a few metadata-sized reads, no data scan.  On
-    a real cluster both the stat-walk and the ranged tail read go to
-    the shared filesystem."""
-    import hashlib
-    import os
-
-    h = hashlib.md5()
-    if os.path.isdir(path):
-        files = sorted(
-            os.path.join(dp, f) for dp, _, fs in os.walk(path) for f in fs
-        )
-    else:
-        files = [path]
-    for f in files:
-        st = os.stat(f)
-        h.update(f"{os.path.relpath(f, path)}:{st.st_size}:{st.st_mtime_ns}\n".encode())
-        with open(f, "rb") as fh:
-            fh.seek(max(0, st.st_size - 4096))
-            h.update(fh.read(4096))
-    return h.hexdigest()
-
-
 def _index_root(spark: SparkSession) -> str:
     """Index home = the warehouse dir — shared storage on a real
     cluster (every executor and future driver sees the same index),
@@ -504,7 +476,7 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, refine_iters: int = 0) -> 
     import os
 
     src = os.path.join(sf_dir, "embeddings.parquet")
-    fp = _data_fingerprint(src)
+    fp = data_fingerprint(src)
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     suffix = f"_r{refine_iters}" if refine_iters else ""
     out = os.path.join(_index_root(spark), f"ivf_{tag}{suffix}")

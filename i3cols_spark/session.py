@@ -35,15 +35,32 @@ _RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+#: The confs that change VALUES, not just speed: every timestamp the
+#: engine returns, and the parquet schema memo in sources/tables.py,
+#: depend on them, so a session that refuses one must fail loudly.
+_VALUE_CONFS = ("spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong")
+
+
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply required runtime confs; idempotent, foreign-session-safe."""
+    """Apply required runtime confs; idempotent, foreign-session-safe.
+
+    Raises ``RuntimeError`` naming the key when a session refuses one
+    of the value-affecting confs (``_VALUE_CONFS``); refusals of the
+    performance-only keys are tolerated."""
     for key, value in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
         except Exception:
-            # A locked-down session may refuse some keys; queries that
-            # truly need one will fail loudly on their own.
+            # A locked-down session may refuse some keys; the
+            # value-affecting ones are read back below.
             pass
+    for key in _VALUE_CONFS:
+        actual = spark.conf.get(key, None)
+        if actual != _RUNTIME_CONFS[key]:
+            raise RuntimeError(
+                f"session refused {key}={_RUNTIME_CONFS[key]!r} (reads back "
+                f"{actual!r}); timestamp values would silently differ"
+            )
     try:
         # Only touch shuffle.partitions when it's still Spark's stock 200
         # (a deliberate user setting is respected): 200 tiny shuffle

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from i3cols_spark.session import configure
-from i3cols_spark.sources.tables import normalize_events_ts, table
+from i3cols_spark.sources.tables import normalize_events_ts, table, table_schema
 
 
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -37,7 +37,7 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization rule as the batch reader (sources/tables.py — both
     fixture flavors: epoch-nanos bigint and µs TIMESTAMP_NTZ)."""
     configure(spark)
-    batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    batch_schema = table_schema(spark, f"{sf_dir}/events.parquet")
     # The sf dir holds all tables; pathGlobFilter selects just events.
     stream = (
         spark.readStream.schema(batch_schema)
@@ -433,7 +433,7 @@ def stream_media_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     configure(spark)
-    batch_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    batch_schema = table_schema(spark, f"{sf_dir}/documents.parquet")
     docs = (
         spark.readStream.schema(batch_schema)
         .format("parquet")
@@ -495,7 +495,7 @@ def stream_histogram_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             "no extrema to pin the histogram geometry from"
         )
     width = (mx - mn) / float(_HIST_BINS) if mx > mn else 1.0
-    batch_schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
+    batch_schema = table_schema(spark, f"{sf_dir}/orders.parquet")
     stream = (
         spark.readStream.schema(batch_schema)
         .format("parquet")
@@ -535,7 +535,7 @@ def stream_dp_class_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     configure(spark)
     nat = table(spark, sf_dir, "nation")
-    batch_schema = spark.read.parquet(f"{sf_dir}/customer.parquet").schema
+    batch_schema = table_schema(spark, f"{sf_dir}/customer.parquet")
     stream = (
         spark.readStream.schema(batch_schema)
         .format("parquet")

@@ -298,3 +298,126 @@ def test_observe_collects_ingest_audit_metrics_in_one_pass(spark, sf_dir):
     assert got["n_corrupt"] == len(_BAD_LINES)
     assert got["total"] == expect_total
     assert n_statuses == 4  # 3 real statuses + the corrupt-null group
+
+
+def _jobs_in_group(spark, group: str, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` launches, counted through a job
+    group.  The status tracker is fed asynchronously by the listener
+    bus, so a sentinel job in its own group is awaited first: once it
+    is visible, every earlier job event has been processed."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sentinel = group + "-sentinel"
+    for gid, action in ((group, fn), (sentinel, lambda: sc.parallelize([1], 1).count())):
+        sc.setJobGroup(gid, gid)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(sentinel) and time.time() < deadline:
+        time.sleep(0.05)
+    return list(tracker.getJobIdsForGroup(group))
+
+
+def test_table_schema_inferred_once_per_session(spark, sf_dir, tmp_path):
+    """The first ``table()`` on a path infers the parquet schema (one
+    Spark job); later opens are served from the session's schema memo
+    with ``spark.read.schema`` and launch no job at all."""
+    import shutil
+    import uuid
+
+    from i3cols_spark.sources.tables import table
+
+    shutil.copy(f"{sf_dir}/lineitem.parquet", tmp_path / "lineitem.parquet")
+    tag = uuid.uuid4().hex
+
+    def open_lineitem():
+        table(spark, str(tmp_path), "lineitem")
+
+    first = _jobs_in_group(spark, f"memo-first-{tag}", open_lineitem)
+    second = _jobs_in_group(spark, f"memo-second-{tag}", open_lineitem)
+    assert len(first) == 1, first
+    assert second == [], second
+    # a memo-served open reads the same rows as an inferred one
+    assert table(spark, str(tmp_path), "lineitem").count() == spark.read.parquet(
+        f"{sf_dir}/lineitem.parquet"
+    ).count()
+
+
+def test_table_schema_memo_sees_in_place_rewrite(spark, tmp_path):
+    """Rewriting a dataset in place with a different parquet schema (a
+    new ``events.ts`` flavor) changes its content fingerprint, so the
+    next open re-infers instead of serving the memoised schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from i3cols_spark.sources.tables import table, table_schema
+
+    us = 1_700_000_000_123_456
+    path = str(tmp_path / "events.parquet")
+
+    def write(ts_arr):
+        pq.write_table(pa.table({
+            "event_id": pa.array([1], pa.int64()), "ts": ts_arr,
+            "user_id": pa.array([7], pa.int64()),
+            "event_type": pa.array(["click"], pa.string()),
+            "value": pa.array([1.5], pa.float64()),
+            "props": pa.array(["{}"], pa.string()),
+        }), path)
+
+    write(pa.array([us], pa.timestamp("us")))
+    table(spark, str(tmp_path), "events")
+    assert table_schema(spark, path, "events")["ts"].dataType.typeName() == "timestamp_ntz"
+    write(pa.array([us * 1000], pa.timestamp("ns")))
+    df = table(spark, str(tmp_path), "events")
+    assert table_schema(spark, path, "events")["ts"].dataType.typeName() == "long"
+    row = df.select(F.unix_micros("ts").alias("us"), "ts_ns").head()
+    assert (row["us"], row["ts_ns"]) == (us, us * 1000)
+
+
+def test_schema_drift_raises_on_every_open(spark, sf_dir, tmp_path):
+    """A drifted file never enters the schema memo: every open raises,
+    including after a good version of the same path was memoised."""
+    import shutil
+
+    import pytest
+
+    from i3cols_spark.sources.tables import SchemaDriftError, table
+
+    good = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    path = str(tmp_path / "nation.parquet")
+    shutil.copy(f"{sf_dir}/nation.parquet", path)
+    assert table(spark, str(tmp_path), "nation").count() == good.count()
+    os.remove(path)
+    good.withColumn("n_regionkey", F.col("n_regionkey").cast("string")) \
+        .toPandas().to_parquet(path)
+    for _ in range(2):
+        with pytest.raises(SchemaDriftError, match="n_regionkey"):
+            table(spark, str(tmp_path), "nation")
+
+
+def test_schema_memo_keys_on_inference_confs(spark, sf_dir):
+    """Flipping ``inferTimestampNTZ`` on the same path changes what
+    inference yields for a tz-less timestamp column; the memo must
+    follow the conf rather than serve the other flavor."""
+    from i3cols_spark.sources.tables import table
+
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    old = spark.conf.get(key, None)
+    try:
+        seen = {}
+        for value in ("true", "false", "true"):
+            spark.conf.set(key, value)
+            seen.setdefault(value, set()).add(
+                dict(table(spark, sf_dir, "orders").dtypes)["o_orderdate"]
+            )
+        assert seen == {"true": {"timestamp_ntz"}, "false": {"timestamp"}}, seen
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)

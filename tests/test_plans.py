@@ -417,18 +417,18 @@ def test_data_fingerprint_detects_mtime_preserving_rewrite(tmp_path):
     (parquet footer) sample is what catches it (ADVICE r04 item 3)."""
     import os
 
-    from i3cols_spark.operators.similarity import _data_fingerprint
+    from i3cols_spark.sources.mirrors import data_fingerprint
 
     d = tmp_path / "ds"
     d.mkdir()
     f = d / "part-0.parquet"
     f.write_bytes(b"A" * 10_000)
     st = os.stat(f)
-    fp1 = _data_fingerprint(str(d))
+    fp1 = data_fingerprint(str(d))
     # same size, same mtime, different bytes
     f.write_bytes(b"A" * 5_000 + b"B" * 5_000)
     os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns))
-    fp2 = _data_fingerprint(str(d))
+    fp2 = data_fingerprint(str(d))
     assert fp1 != fp2
 
 

@@ -1832,6 +1832,17 @@ def test_referential_integrity_clean_fixture_and_detects_orphans(spark, sf_dir):
     assert rows2["customer->nation"]["fk_ok"]
 
 
+def test_fk_audit_does_not_inflate_children_on_duplicate_parent_key(spark):
+    """The FK audit's left join must not multiply child rows when the
+    parent key repeats: n_child counts each child row once."""
+    from i3cols_spark.operators.quality import fk_audit
+
+    child = spark.createDataFrame([(1,), (1,), (2,), (3,)], "k long")
+    parent = spark.createDataFrame([(1,), (1,), (2,), (2,)], "pk long")
+    r = fk_audit(child, "k", parent, "pk", "c->p").collect()[0]
+    assert (r["n_child"], r["n_orphans"], r["fk_ok"]) == (4, 1, False)
+
+
 def test_embedding_audit_matches_numpy(spark, sf_dir):
     """q_quality_embedding_audit: per-label norm stats must match a
     numpy recomputation, and the structural counts must be zero on
