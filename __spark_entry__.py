@@ -32,16 +32,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.3.
-
-    The driver consumes this dict in insertion order under a finite
-    (50-row) budget, so ordering is evidence strategy: round 11 leads
-    with the rotation block — two re-checks of names whose logic the
-    ADVICE-r10 fixes changed, the full 28-name never-officially-
-    checked backlog (15 POST_R9 overflow + 13 POST_R10), then the 20
-    stalest round-5 rows (see registry._R11_PRIORITY) — then the
-    remaining contract + extras in §-order.
-    """
+    """One entry per registered query: the 60 SURVEY.md §2.3 contract
+    queries in §-order, then every other registered name in
+    registration order (``registry.surface_order()``)."""
     return {name: QUERIES[name] for name in surface_order()}
 
 

@@ -17,30 +17,19 @@ from __future__ import annotations
 import inspect
 import re
 
-from i3cols_spark.operators import ORACLES, QUERIES
-from i3cols_spark.operators import registry as _reg
-
-#: Registration blocks, oldest first — each name's block is the FIRST
-#: tuple that contains it (contract names also appearing in later
-#: waves keep the contract label).
-_BLOCKS: tuple[tuple[str, str], ...] = (
-    ("contract", "CONTRACT_QUERIES"),
-    ("extra", "EXTRA_QUERIES"),
-    ("post-r7", "POST_R7_ADDITIONS"),
-    ("post-r8", "POST_R8_ADDITIONS"),
-    ("post-r9", "POST_R9_ADDITIONS"),
-    ("post-r10", "POST_R10_ADDITIONS"),
-)
+from i3cols_spark.operators import CONTRACT_QUERIES, ORACLES, QUERIES
 
 
 def _first_sentence(doc: str) -> str:
     """First sentence of a docstring, whitespace-flattened."""
     flat = re.sub(r"\s+", " ", doc.strip())
     # Sentence end = ". " not inside an abbreviation we use (e.g.,
-    # "vs.", "cf.") — the operator docstrings start with a plain
-    # declarative sentence, so a simple split suffices; fall back to
-    # the first " -- "-style dash clause or the whole first line.
-    m = re.search(r"(?<!\bvs)(?<!\bcf)(?<!\be\.g)(?<!\bi\.e)\.(?:\s|$)", flat)
+    # "vs.", "cf.", "et al.") — the operator docstrings start with a
+    # plain declarative sentence, so a simple split suffices; fall back
+    # to the whole flattened docstring.
+    m = re.search(
+        r"(?<!\bvs)(?<!\bcf)(?<!\bal)(?<!\be\.g)(?<!\bi\.e)\.(?:\s|$)", flat
+    )
     return flat[: m.start() + 1] if m else flat
 
 
@@ -54,18 +43,7 @@ def _scale_note(doc: str) -> str:
 
 
 def _block_of(name: str) -> str:
-    for label, attr in _BLOCKS:
-        if name in getattr(_reg, attr):
-            return label
-    # Fail loudly (the surface_order discipline): a silent "extra"
-    # fallback would mis-catalogue a future registration wave whose
-    # tuple (e.g. POST_R11_ADDITIONS) nobody added to _BLOCKS — and
-    # test_catalog_current could not catch it, since the committed
-    # file would match the equally-wrong fresh render.
-    raise KeyError(
-        f"operator {name!r} is in no registration-block tuple — add its "
-        "wave to i3cols_spark.catalog._BLOCKS"
-    )
+    return "contract" if name in CONTRACT_QUERIES else "extra"
 
 
 def _escape_cell(s: str) -> str:
@@ -106,10 +84,10 @@ def build_catalog() -> str:
         "     file matches a fresh render. -->",
         "",
         f"{n} registered entries, {n_oracle} DuckDB-oracle-backed, grouped "
-        "by implementing module.  *Block* is the registration wave "
-        "(contract = the binding 60-name SURVEY §2.3 inventory).  *Scale "
-        "note* is the docstring's own 100 TB plan-shape claim, where the "
-        "operator states one.",
+        "by implementing module.  *Block* is contract (the binding 60-name "
+        "SURVEY §2.3 inventory) or extra (every other registered name).  "
+        "*Scale note* is the docstring's own 100 TB plan-shape claim, where "
+        "the operator states one.",
         "",
     ]
     for mod in sorted(by_module):

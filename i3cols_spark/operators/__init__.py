@@ -3,7 +3,6 @@ from SURVEY §2.3 into ``QUERIES`` / ``ORACLES``."""
 
 from i3cols_spark.operators.registry import (
     CONTRACT_QUERIES,
-    EXTRA_QUERIES,
     ORACLES,
     QUERIES,
     query,
@@ -34,7 +33,6 @@ from i3cols_spark.operators import sql_surface  # noqa: E402,F401  (SQL entry pa
 
 __all__ = [
     "CONTRACT_QUERIES",
-    "EXTRA_QUERIES",
     "ORACLES",
     "QUERIES",
     "query",

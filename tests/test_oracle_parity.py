@@ -50,105 +50,36 @@ def test_entry_smoke(spark):
     assert set(df.columns) == {"n_name", "revenue", "n_items"}
 
 
-def test_surface_order_round11_rotation():
-    """The driver consumes queries() in dict order under a 50-row
-    budget.  After round 10, the names without official CORRECTNESS
-    rows are exactly the 15 _R11_DEFERRED (POST_R9 overflow) + the 13
-    POST_R10_ADDITIONS = 28 — the whole remaining backlog fits one
-    window (VERDICT r10 item 1), and the leftover 22 slots go to
-    re-checks (item 2): 2 names whose executable logic the ADVICE-r10
-    fixes changed, then the 20 stalest (round-5) official rows.  The
-    window is recomputed here from the committed artifacts so a
-    drifted rotation fails loudly:
-      * slots 1-2 are the ADVICE-fix re-checks — each HAS a prior
-        official row (they are re-witnesses, not first-times);
-      * slots 3-17 are the 15 _R11_DEFERRED, slots 18-30 the 13
-        POST_R10_ADDITIONS — each must have NO row in any committed
-        artifact r1-r10 (first-time official evidence);
-      * slots 31-50 are 20 names whose newest official row is r5 —
-        the oldest stamps in the repo;
-      * every window name must HAVE a DuckDB oracle;
-      * NOTHING oracle-backed and never-checked is left out — after
-        this window lands, official coverage is 324/324."""
-    import json
-    import pathlib
-
+def test_surface_order_is_contract_then_registration_order():
+    """The surface rule: the 60 SURVEY §2.3 contract queries in
+    §-order, then every other registered name in registration order,
+    each exactly once; every contract query has a DuckDB oracle."""
     import __spark_entry__ as entrymod
     from i3cols_spark.operators import CONTRACT_QUERIES
-    from i3cols_spark.operators.registry import (
-        _R11_DEFERRED,
-        _R11_PRIORITY,
-        _R11_RECHECK_CHANGED,
-        _R11_STALE_RECHECKS,
-        _R12_DEFERRED,
-        POST_R9_ADDITIONS,
-        POST_R10_ADDITIONS,
-    )
 
-    # Historical check since round 12: the r11 window is no longer the
-    # live surface prefix (tests/test_rotation_r12.py owns that), but
-    # its composition is still recomputed from the r1-r10 artifacts so
-    # edits to the frozen tuples fail loudly.
     order = list(entrymod.queries())
     assert len(CONTRACT_QUERIES) == 60
-    assert len(_R11_PRIORITY) == 50
-    assert len(set(_R11_PRIORITY)) == 50
+    assert order[:60] == list(CONTRACT_QUERIES)
+    assert order[60:] == [n for n in QUERIES if n not in CONTRACT_QUERIES]
     assert sorted(order) == sorted(QUERIES)
-
-    repo = pathlib.Path(__file__).resolve().parent.parent
-    newest: dict[str, int] = {}
-    for r in range(1, 11):
-        art = repo / f"CORRECTNESS_r{r:02d}.json"
-        if art.exists():
-            for name in json.loads(art.read_text()):
-                newest[name] = r
-
-    window = list(_R11_PRIORITY)
-    assert tuple(window[:2]) == _R11_RECHECK_CHANGED
-    assert tuple(window[2:17]) == _R11_DEFERRED
-    assert tuple(window[17:30]) == POST_R10_ADDITIONS
-    assert tuple(window[30:]) == _R11_STALE_RECHECKS
-
-    # Re-check slots must already carry official evidence...
-    for n in (*_R11_RECHECK_CHANGED, *_R11_STALE_RECHECKS):
-        assert n in newest, f"re-check slot {n} has no prior official row"
-    # ...stale slots specifically the oldest (round-5) stamps...
-    for n in _R11_STALE_RECHECKS:
-        assert newest[n] == 5, (n, newest[n])
-    # ...and first-time slots none at all.
-    already_checked = [n for n in window[2:30] if n in newest]
-    assert not already_checked, (
-        f"first-time window names with official rows: {already_checked}"
-    )
-
-    # Every window slot must produce a hash row, never a no_oracle
-    # record — the registry is fully oracle-backed since round 10.
-    no_oracle_in_window = [n for n in window if n not in ORACLES]
-    assert not no_oracle_in_window, no_oracle_in_window
-    rows_only_left = [n for n in QUERIES if n not in ORACLES]
-    assert rows_only_left == [], rows_only_left
-
-    # Accounting: the never-checked set is EXACTLY the first-time
-    # block — nothing silently dropped, nothing deferred past r11.
-    never_checked = [n for n in QUERIES if n not in newest]
-    assert sorted(never_checked) == sorted(window[2:30]), sorted(
-        set(never_checked) ^ set(window[2:30])
-    )
-    assert _R12_DEFERRED == ()
-    assert len(_R11_DEFERRED) == 15
-    assert set(_R11_DEFERRED) <= set(POST_R9_ADDITIONS)
-
-    # Staleness accounting: the r11 window's 20 stale slots plus the
-    # declared round-12 queue cover the round-5-stamped set EXACTLY.
-    from i3cols_spark.operators.registry import _R12_STALE_QUEUE
-
-    r5 = {n for n, r in newest.items() if r == 5 and n in QUERIES}
-    assert set(_R11_STALE_RECHECKS) | set(_R12_STALE_QUEUE) == r5
-    assert not set(_R11_STALE_RECHECKS) & set(_R12_STALE_QUEUE)
-
-    # Every contract query has an oracle entry.
     missing = [n for n in CONTRACT_QUERIES if n not in ORACLES]
     assert not missing, f"contract queries without oracle: {missing}"
+
+
+def test_catalog_first_sentence_keeps_et_al():
+    """An "et al." inside the first sentence does not end it."""
+    from i3cols_spark.catalog import _first_sentence
+
+    doc = (
+        "KMV distinct estimator (Bar-Yossef et al. 2002) over\n"
+        "    user ids.  Second sentence."
+    )
+    assert _first_sentence(doc) == (
+        "KMV distinct estimator (Bar-Yossef et al. 2002) over user ids."
+    )
+    assert _first_sentence("Compare vs. baseline, cf. SURVEY. Rest.") == (
+        "Compare vs. baseline, cf. SURVEY."
+    )
 
 
 def test_catalog_current():
