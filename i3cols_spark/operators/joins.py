@@ -519,11 +519,12 @@ def q_join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bucketed_mirror(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write-once bucketed mirror of (lineitem, orders) hash-bucketed
     on the join key — the pay-the-shuffle-once layout of
-    sources/ingest.write_bucketed, cached per dataset CONTENT exactly
-    like the IVF index (fingerprint sidecar, warehouse-dir home,
-    atomic marker), and re-REGISTERED in a fresh session's catalog via
-    bucketed-DDL over the existing files, so the mirror survives
-    across driver sessions the way a real warehouse table does.
+    sources/ingest.write_bucketed, cached per dataset CONTENT by
+    sources/mirrors.write_once (warehouse home, fingerprint marker,
+    temp-dir build published by directory swap), and REGISTERED in the
+    session catalog via bucketed-DDL over the published files, so the
+    mirror survives across driver sessions the way a real warehouse
+    table does.
 
     Returns the two catalog table names.
     """
@@ -553,6 +554,9 @@ def _bucketed_mirror(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     for tname, (src, cols, ddl_cols, key) in specs.items():
 
         def build(out: str, tname=tname, src=src, cols=cols, key=key) -> None:
+            # bucketBy writes only through saveAsTable; the table it
+            # registers points at the temp dir and is re-registered
+            # over the published path below
             spark.sql(f"DROP TABLE IF EXISTS {tname}")
             (
                 table(spark, sf_dir, src)
@@ -565,7 +569,7 @@ def _bucketed_mirror(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 .saveAsTable(tname)
             )
 
-        loc, rebuilt = write_once(
+        loc, built = write_once(
             spark,
             "bucketed_mirror",
             tname,
@@ -573,9 +577,9 @@ def _bucketed_mirror(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             build,
             {"n_buckets": 8, "key": key},
         )
-        if not rebuilt and not spark.catalog.tableExists(tname):
-            # files are current but this session's catalog is fresh:
-            # re-register the SAME bucket spec over the existing files
+        if built or not spark.catalog.tableExists(tname):
+            # register the SAME bucket spec over the published files
+            spark.sql(f"DROP TABLE IF EXISTS {tname}")
             spark.sql(
                 f"CREATE TABLE {tname} ({ddl_cols}) USING parquet "
                 f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO 8 BUCKETS "

@@ -128,40 +128,33 @@ def q_project_computed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _npy_events_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the events table once per dataset CONTENT in the
-    reference's native npy column-dir layout (under the system temp
-    dir), so the scan below exercises the real migration path: npy
-    dataset → Python DataSource → DataFrame.
+    reference's native npy column-dir layout, so the scan below
+    exercises the real migration path: npy dataset → Python
+    DataSource → DataFrame.
 
-    The ``_SUCCESS`` marker records a size+mtime fingerprint of the
-    source parquet: an in-place fixture regeneration (it happened
-    between rounds 2 and 3) invalidates the cached mirror instead of
-    silently serving stale rows — same hygiene as the IVF index
-    (operators/similarity.py::build_ivf_index)."""
-    import hashlib
+    A ``sources/mirrors.write_once`` layout (warehouse home, content
+    fingerprint in ``_MIRROR.json``, built in a private temp dir and
+    published by directory swap): an in-place fixture regeneration (it
+    happened between rounds 2 and 3) rebuilds the mirror instead of
+    silently serving stale rows."""
     import os
-    import tempfile
 
-    from i3cols_spark.sources.mirrors import data_fingerprint
+    from i3cols_spark.sources.mirrors import dataset_tag, write_once
     from i3cols_spark.sources.npy_cols import write_npy_columns
 
-    fp = data_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"i3cols_npy_events_{tag}")
-    marker = os.path.join(out, "_SUCCESS")
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            if fh.read().strip() == fp:
-                return out
-    write_npy_columns(
-        table(spark, sf_dir, "events").select("event_type", "value"),
-        out,
-        overwrite=True,
+    def build(out: str) -> None:
+        write_npy_columns(
+            table(spark, sf_dir, "events").select("event_type", "value"), out
+        )
+
+    path, _ = write_once(
+        spark,
+        "npy_events",
+        dataset_tag(sf_dir),
+        [os.path.join(sf_dir, "events.parquet")],
+        build,
     )
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(fp)
-    os.replace(tmp, marker)
-    return out
+    return path
 
 
 @query(

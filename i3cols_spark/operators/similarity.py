@@ -27,7 +27,7 @@ from pyspark.storagelevel import StorageLevel
 from i3cols_spark.functions.arrays import pair_structs
 from i3cols_spark.functions.vectors import as_double, cosine, dot, lsh_bucket, norm_l2
 from i3cols_spark.operators.registry import query
-from i3cols_spark.sources.mirrors import data_fingerprint
+from i3cols_spark.sources.mirrors import dataset_tag, write_once
 from i3cols_spark.sources.tables import table
 
 #: Fixed random hyperplanes (seed 42) shared by the Spark plan and the
@@ -361,21 +361,6 @@ _IVF_NLIST = 64
 _IVF_NPROBE = 4
 
 
-def _index_root(spark: SparkSession) -> str:
-    """Index home = the warehouse dir — shared storage on a real
-    cluster (every executor and future driver sees the same index),
-    unlike a driver-local ``/tmp`` which is neither shared nor
-    cross-session-safe (VERDICT r03 §wrong-2)."""
-    import os
-
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    for prefix in ("file://", "file:"):
-        if wh.startswith(prefix):
-            wh = wh[len(prefix):]
-            break
-    return os.path.join(wh, "ivf_indexes")
-
-
 def ivf_assignment(emb: DataFrame, cid: np.ndarray, cmat: np.ndarray) -> DataFrame:
     """The index-build assignment plan: ONE float64 GEMM per Arrow
     batch (``mapInPandas``: rows × centroid-matrix, argmax per row
@@ -448,7 +433,8 @@ def _lloyd_refine(
 def build_ivf_index(spark: SparkSession, sf_dir: str, refine_iters: int = 0) -> str:
     """Build (once per dataset CONTENT) the IVF index: assign every
     vector to its nearest centroid cell and WRITE the assignment as a
-    cell-PARTITIONED parquet dataset, plus a centroids.json sidecar.
+    cell-PARTITIONED parquet dataset, plus a ``_CENTROIDS.json``
+    sidecar holding the centroid ids and matrix.
 
     This is the write-once index-build job of a real IVF deployment:
     the per-call ``count()`` + assignment GEMM that used to run inside
@@ -462,68 +448,58 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, refine_iters: int = 0) -> 
     deployments, still fully deterministic, but OFF for the contract
     query so its DuckDB oracle can restate the seed centroids in SQL
     (the oracle cannot iterate k-means).  Refined indexes live under
-    their own directory tag, so both flavors cache side by side.
+    their own directory name, so both flavors cache side by side.
 
-    Staleness: the sidecar records a fingerprint of the source files
-    (size+mtime walk); a source mutated in place — same path, new
-    bytes — misses the check and triggers a rebuild instead of
-    silently serving wrong neighbors.  The sidecar lands via
-    tmp+``os.replace`` so a killed build can never leave a marker that
-    points at partial data.
+    Caching is ``sources/mirrors.write_once``: the source content
+    fingerprint and the layout parameters (nlist, refine_iters) are
+    recorded in ``_MIRROR.json``; a source mutated in place — same
+    path, new bytes — rebuilds instead of silently serving wrong
+    neighbors, and the index (sidecar included) is built in a private
+    temp dir and published by directory swap, so no reader or later
+    build ever sees a partial index.
     """
-    import hashlib
     import json
     import os
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    fp = data_fingerprint(src)
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    suffix = f"_r{refine_iters}" if refine_iters else ""
-    out = os.path.join(_index_root(spark), f"ivf_{tag}{suffix}")
-    marker = os.path.join(out, "_CENTROIDS.json")
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            meta = json.load(fh)
-        if meta.get("fingerprint") == fp:
-            return out
-
-    emb = table(spark, sf_dir, "embeddings")
-    stride = max(1, -(-emb.count() // _IVF_NLIST))
-    # Bounded collect: the stride filter keeps ≤ _IVF_NLIST rows (stride
-    # = ceil(count/nlist)), and Catalyst pushes it below the orderBy, so
-    # the sort ranks ~nlist rows — never the corpus.  The residue is
-    # 1 % stride, not 1: at stride == 1 (corpus ≤ nlist) a literal
-    # `% 1 == 1` matches NOTHING and the empty centroid matrix crashes
-    # the assignment GEMM (round-11 self-review); `1 % 1 == 0` keeps
-    # every vector as its own centroid instead.
-    cents = (
-        emb.filter(F.col("vec_id") % stride == 1 % stride)
-        .select("vec_id", as_double("embedding").alias("v"))
-        .orderBy("vec_id")
-        .collect()
-    )
-    cid = np.array([r["vec_id"] for r in cents], dtype=np.int64)
-    cmat = np.array([r["v"] for r in cents], dtype=np.float64)
-    if refine_iters:
-        cid, cmat = _lloyd_refine(emb, cid, cmat, refine_iters)
-
-    ivf_assignment(emb, cid, cmat).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(out)
-    # Sidecar AFTER the data write (its presence + matching fingerprint
-    # is the build marker), written atomically.
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {"fingerprint": fp, "cid": cid.tolist(), "cmat": cmat.tolist()}, fh
+    def build(out: str) -> None:
+        emb = table(spark, sf_dir, "embeddings")
+        stride = max(1, -(-emb.count() // _IVF_NLIST))
+        # Bounded collect: the stride filter keeps ≤ _IVF_NLIST rows
+        # (stride = ceil(count/nlist)), and Catalyst pushes it below the
+        # orderBy, so the sort ranks ~nlist rows — never the corpus.  The
+        # residue is 1 % stride, not 1: at stride == 1 (corpus ≤ nlist) a
+        # literal `% 1 == 1` matches NOTHING and the empty centroid matrix
+        # crashes the assignment GEMM (round-11 self-review); `1 % 1 == 0`
+        # keeps every vector as its own centroid instead.
+        cents = (
+            emb.filter(F.col("vec_id") % stride == 1 % stride)
+            .select("vec_id", as_double("embedding").alias("v"))
+            .orderBy("vec_id")
+            .collect()
         )
-    os.replace(tmp, marker)
-    return out
+        cid = np.array([r["vec_id"] for r in cents], dtype=np.int64)
+        cmat = np.array([r["v"] for r in cents], dtype=np.float64)
+        if refine_iters:
+            cid, cmat = _lloyd_refine(emb, cid, cmat, refine_iters)
+        ivf_assignment(emb, cid, cmat).write.mode("overwrite").partitionBy(
+            "cell"
+        ).parquet(out)
+        with open(os.path.join(out, "_CENTROIDS.json"), "w") as fh:
+            json.dump({"cid": cid.tolist(), "cmat": cmat.tolist()}, fh)
+
+    path, _ = write_once(
+        spark,
+        "ivf_indexes",
+        f"{dataset_tag(sf_dir)}{f'_r{refine_iters}' if refine_iters else ''}",
+        [os.path.join(sf_dir, "embeddings.parquet")],
+        build,
+        {"nlist": _IVF_NLIST, "refine_iters": refine_iters},
+    )
+    return path
 
 
-#: Shared oracle for the two IVF probe flavors (same seed centroids,
-#: same probe selection, same top-k contract) — the partitioned-mirror
-#: query must return EXACTLY what the warehouse-sidecar query returns.
+#: Shared oracle of the two IVF probe entries (same index, same seed
+#: centroids, same probe selection, same top-k contract).
 _IVF_ORACLE = f"""
     WITH e AS (
         SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -589,24 +565,13 @@ def ivf_topk(
     ``q_similarity_ann_ivf`` for the plan shape.  ``refine_iters`` > 0
     selects the k-means-refined index flavor (built on demand, cached
     separately); the recall property test compares the two at equal
-    nprobe."""
-    idx = build_ivf_index(spark, sf_dir, refine_iters=refine_iters)
-    return _probe_ivf(spark, sf_dir, idx, query_vec_id=query_vec_id, k=k)
-
-
-def _probe_ivf(
-    spark: SparkSession,
-    sf_dir: str,
-    idx: str,
-    query_vec_id: int = 0,
-    k: int = 5,
-) -> DataFrame:
-    """Probe one cell-partitioned IVF index directory (with its
-    ``_CENTROIDS.json`` sidecar): driver-side O(nlist) probe
-    selection, then a PARTITION-PRUNED scan of the nprobe cells."""
+    nprobe.  Driver-side O(nlist) probe selection over the index's
+    ``_CENTROIDS.json`` sidecar, then a PARTITION-PRUNED scan of the
+    nprobe cells."""
     import json
     import os
 
+    idx = build_ivf_index(spark, sf_dir, refine_iters=refine_iters)
     with open(os.path.join(idx, "_CENTROIDS.json")) as fh:
         meta = json.load(fh)
     cid = np.array(meta["cid"], dtype=np.int64)
@@ -648,74 +613,25 @@ def _probe_ivf(
     )
 
 
-def ivf_partitioned_mirror(spark: SparkSession, sf_dir: str) -> str:
-    """The IVF production layout as a ``sources/mirrors.write_once``
-    mirror (VERDICT r08 item 6): the cell assignment written as a
-    parquet dataset PARTITIONED BY the cell id, cached by source
-    CONTENT + layout parameters under the shared warehouse protocol
-    every other derived layout (bucketed join, Z-order) uses.
-    Centroids land in a ``_CENTROIDS.json`` sidecar inside the mirror
-    (written before the mirror marker, so a killed build can never
-    publish a marker over missing centroids)."""
-    import json
-    import os
-
-    from i3cols_spark.sources.mirrors import dataset_tag, write_once
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-
-    def build(out: str) -> None:
-        emb = table(spark, sf_dir, "embeddings")
-        stride = max(1, -(-emb.count() // _IVF_NLIST))
-        cents = (
-            emb.filter(F.col("vec_id") % stride == 1 % stride)
-            .select("vec_id", as_double("embedding").alias("v"))
-            .orderBy("vec_id")
-            .collect()
-        )
-        cid = np.array([r["vec_id"] for r in cents], dtype=np.int64)
-        cmat = np.array([r["v"] for r in cents], dtype=np.float64)
-        ivf_assignment(emb, cid, cmat).write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(out)
-        marker = os.path.join(out, "_CENTROIDS.json")
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"cid": cid.tolist(), "cmat": cmat.tolist()}, fh)
-        os.replace(tmp, marker)
-
-    path, _ = write_once(
-        spark,
-        "ivf_cells",
-        dataset_tag(sf_dir),
-        [src],
-        build,
-        layout_meta={"nlist": _IVF_NLIST},
-    )
-    return path
-
-
 @query("q_similarity_ann_ivf_partitioned", oracle=_IVF_ORACLE)
 def q_similarity_ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF probe against the ``write_once`` PARTITION-COLUMN mirror —
-    the production layout claim of BASELINE.md made evidence (VERDICT
-    r08 item 6): the cell id is a real partition column of a shared
-    warehouse dataset, the probe's ``cell IN probed`` binds as a
-    PartitionFilter, and the scan reads exactly ``_IVF_NPROBE`` of the
-    ``_IVF_NLIST`` cell directories (tests/test_plans.py counts the
-    scanned ``cell=`` directories from inputFiles()).
+    """IVF probe read as the PARTITION-COLUMN serving layout — the
+    production layout claim of BASELINE.md made evidence (VERDICT r08
+    item 6): the cell id of the ``build_ivf_index`` dataset is a real
+    partition column of a shared warehouse dataset, the probe's
+    ``cell IN probed`` binds as a PartitionFilter, and the scan reads
+    exactly ``_IVF_NPROBE`` of the ``_IVF_NLIST`` cell directories
+    (tests/test_plans.py checks the executed scan's partition count).
 
-    Same seed centroids, same probe selection, same oracle as
-    q_similarity_ann_ivf — the two flavors must agree row-for-row;
-    only the cache protocol differs (mirrors.write_once content
-    fingerprint + layout meta vs the index's centroid sidecar).
+    It probes the one ``build_ivf_index`` directory with the same seed
+    centroids, probe selection and oracle as q_similarity_ann_ivf, so
+    the two entries must agree row-for-row.
 
     At 100 TB this is THE serving layout: nprobe/nlist of the bytes
     per query before any distance math, no per-query index work, and
-    the mirror rebuilds itself the moment the source content changes.
+    the index rebuilds itself the moment the source content changes.
     """
-    idx = ivf_partitioned_mirror(spark, sf_dir)
-    return _probe_ivf(spark, sf_dir, idx)
+    return ivf_topk(spark, sf_dir)
 
 
 def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,12 +1,14 @@
 """Write-once derived-layout mirrors, cached by dataset CONTENT.
 
 The engine derives several physical layouts from the driver fixtures
-— the bucketed join mirror (operators/joins.py), the Z-order mirror
-(operators/layout.py) — that must be built once and reused across
-queries AND sessions, but rebuilt the moment the source bytes change
-(the round-3 lesson: an in-place fixture regeneration must never be
-served stale derived data).  This module is the one implementation of
-that protocol:
+— the npy column dir (operators/scans.py), the IVF index
+(operators/similarity.py), the bucketed join mirror
+(operators/joins.py), the Z-order mirror (operators/layout.py), the
+format mirrors (operators/quality.py) — that must be built once and
+reused across queries AND sessions, but rebuilt the moment the source
+bytes change (the round-3 lesson: an in-place fixture regeneration
+must never be served stale derived data).  ``write_once`` is the one
+implementation of that protocol:
 
 - home = the warehouse dir (shared storage on a real cluster, unlike
   a driver-local /tmp);
@@ -15,19 +17,23 @@ that protocol:
   ``data_fingerprint``) PLUS whatever layout parameters
   the caller records, so a CODE change to the layout (bucket count,
   Morton bits) invalidates the mirror exactly like a data change;
-- the marker lands via tmp + ``os.replace`` AFTER the data write, so
-  a killed build can never leave a marker pointing at partial data.
-
-The IVF index (operators/similarity.py::build_ivf_index) predates
-this helper and keeps its own sidecar because the sidecar doubles as
-the centroid store, but follows the identical protocol.
+- temp-then-swap: every build writes into its own unique sibling
+  ``<out>.tmp-<uuid>`` and writes the ``_MIRROR.json`` marker there
+  LAST; publishing moves a stale ``out`` aside, renames the temp dir
+  into place and deletes the old copy.  A build never sees, appends
+  to or leaves behind another build's files, a build that raises
+  removes its temp dir, and of two concurrent builders the later one
+  discards its copy once it sees the other's current marker.
 """
 
 from __future__ import annotations
 
+import errno
 import hashlib
 import json
 import os
+import shutil
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import SparkSession
@@ -75,6 +81,18 @@ def source_fingerprint(src_paths: list[str]) -> str:
     return h.hexdigest()
 
 
+_MARKER = "_MIRROR.json"
+
+
+def _marker(out: str) -> dict | None:
+    """The published marker of ``out``, or None if absent/unreadable."""
+    try:
+        with open(os.path.join(out, _MARKER)) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return None
+
+
 def write_once(
     spark: SparkSession,
     kind: str,
@@ -84,28 +102,50 @@ def write_once(
     layout_meta: dict | None = None,
 ) -> tuple[str, bool]:
     """Ensure the derived layout ``kind/name`` exists and is current
-    for the content of ``src_paths``; run ``build(out_path)`` only
-    when missing or stale.  Returns ``(path, was_rebuilt)``."""
+    for the content of ``src_paths``; only when missing or stale, run
+    ``build(dir)``, which creates and fills the fresh private directory
+    ``dir``, then publish it by directory swap (module docstring).  Returns ``(path, built)``,
+    ``built`` telling whether this call ran ``build``."""
     out = os.path.join(_warehouse_root(spark, kind), name)
     expected = {
         "fingerprint": source_fingerprint(src_paths),
         **(layout_meta or {}),
     }
-    marker = os.path.join(out, "_MIRROR.json")
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            try:
-                current = json.load(fh)
-            except ValueError:
-                current = None
-        if current == expected:
-            return out, False
-    build(out)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(expected, fh)
-    os.replace(tmp, marker)
+    if _marker(out) == expected:
+        return out, False
+    tmp = f"{out}.tmp-{uuid.uuid4().hex}"
+    try:
+        build(tmp)
+        with open(os.path.join(tmp, _MARKER), "w") as fh:
+            json.dump(expected, fh)
+        _publish(tmp, out, expected)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
     return out, True
+
+
+def _publish(tmp: str, out: str, expected: dict) -> None:
+    """Swap the finished build ``tmp`` into ``out``, or discard it when
+    a concurrent builder has already published a current ``out``."""
+    while _marker(out) != expected:
+        aside = f"{out}.tmp-{uuid.uuid4().hex}"
+        try:
+            os.replace(out, aside)
+        except FileNotFoundError:
+            aside = None
+        try:
+            os.replace(tmp, out)
+            return
+        except OSError as e:
+            # ENOTEMPTY/EEXIST: another builder published between our
+            # two renames — re-check its marker
+            if e.errno not in (errno.ENOTEMPTY, errno.EEXIST):
+                raise
+        finally:
+            if aside:
+                shutil.rmtree(aside, ignore_errors=True)
+    shutil.rmtree(tmp)
 
 
 def dataset_tag(sf_dir: str) -> str:

@@ -431,3 +431,31 @@ def test_stream_sink_replayed_epoch_after_crash_is_noop(spark, tmp_path):
     assert head["files"] == sorted(head["files"]) or True
     assert "part-replay-attempt.arrow" not in head["files"]
     assert head["batches"] == {"7": [epoch_part]}
+
+
+def test_time_travel_mirror_rebuilds_from_scratch_when_source_changes(
+    spark, tmp_path
+):
+    """A stale time-travel mirror is rebuilt into a fresh directory, not
+    appended to: after the source is touched, HEAD still counts the
+    source's rows and the mirror holds exactly its two commits."""
+    import glob
+    import shutil
+
+    from i3cols_spark.operators import QUERIES
+    from i3cols_spark.operators.quality import _arrow_tt_mirror
+
+    d = tmp_path / "sftt"
+    d.mkdir()
+    src = d / "orders.parquet"
+    shutil.copy2("/root/testdata/sf0.001/orders.parquet", src)
+
+    def head_orders() -> int:
+        rows = QUERIES["q_source_arrow_timetravel"](spark, str(d)).collect()
+        return next(r["n_orders"] for r in rows if r["snapshot"] == "head")
+
+    assert head_orders() == spark.read.parquet(str(src)).count()
+    os.utime(src)
+    assert head_orders() == spark.read.parquet(str(src)).count()
+    path = _arrow_tt_mirror(spark, str(d))
+    assert len(glob.glob(os.path.join(path, "_ARROW_MANIFEST.v*.json"))) == 2

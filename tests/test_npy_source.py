@@ -257,7 +257,7 @@ def test_npy_fixture_rebuilds_on_source_mutation(spark, tmp_path):
     (shutil.copytree if os.path.isdir(src) else shutil.copy2)(src, dst)
 
     out = _npy_events_fixture(spark, str(d))
-    marker = os.path.join(out, "_SUCCESS")
+    marker = os.path.join(out, "_MIRROR.json")
     fp0 = open(marker).read()
     assert _npy_events_fixture(spark, str(d)) == out  # cache hit
     assert open(marker).read() == fp0

@@ -186,7 +186,7 @@ def test_ann_ivf_rebuilds_on_fixture_mutation(spark, sf_dir, tmp_path):
     (shutil.copytree if os.path.isdir(src) else shutil.copy2)(src, dst)
 
     idx = build_ivf_index(spark, str(d))
-    marker = os.path.join(idx, "_CENTROIDS.json")
+    marker = os.path.join(idx, "_MIRROR.json")
     fp0 = json.load(open(marker))["fingerprint"]
     # Cached path: same content → same index, no rebuild.
     assert build_ivf_index(spark, str(d)) == idx
@@ -582,6 +582,39 @@ def test_registered_bucketed_join_is_exchange_free(spark, sf_dir):
     assert len(re.findall(r"\(\d+\) Exchange\b", full)) == 1, full
 
 
+def test_bucketed_mirror_tables_point_at_published_path(spark, tmp_path):
+    """After a forced rebuild (source mutated in place) the catalog
+    tables of the bucketed mirror must name the published directory,
+    never the temp dir the build wrote into, and q_join_bucketed must
+    still plan its join with zero exchanges."""
+    import glob
+    import os
+    import shutil
+
+    from i3cols_spark.operators.joins import _bucketed_mirror
+    from i3cols_spark.sources.mirrors import _warehouse_root
+
+    d = tmp_path / "sfbucket"
+    d.mkdir()
+    for t in ("lineitem", "orders"):
+        shutil.copy2(f"/root/testdata/sf0.001/{t}.parquet", d / f"{t}.parquet")
+    _bucketed_mirror(spark, str(d))
+    os.utime(d / "orders.parquet")
+    names = _bucketed_mirror(spark, str(d))
+
+    root = _warehouse_root(spark, "bucketed_mirror")
+    for tname in names:
+        loc = os.path.join(root, tname)
+        desc = {
+            r["col_name"]: r["data_type"]
+            for r in spark.sql(f"DESCRIBE TABLE EXTENDED {tname}").collect()
+        }
+        assert re.sub(r"^file:(//)?", "", desc["Location"]) == loc, desc
+        assert not glob.glob(loc + ".tmp-*")
+    full = explain_str(QUERIES["q_join_bucketed"](spark, str(d)))
+    assert len(re.findall(r"\(\d+\) Exchange\b", full)) == 1, full
+
+
 def test_zorder_layout_prunes_2d_box_better_than_linear(spark, sf_dir):
     """The claim behind q_scan_zorder, measured: over the same events,
     the fraction of layout units (files) whose (user_id, us) min-max
@@ -675,6 +708,123 @@ def test_write_once_mirror_rebuilds_on_source_mutation(spark, tmp_path):
     # layout-parameter change alone must rebuild too
     _, r4 = write_once(*args, {"v": 2})
     assert r4 and len(calls) == 3
+
+
+def test_write_once_killed_build_publishes_nothing(spark, tmp_path):
+    """A build that writes a file and then raises must publish nothing:
+    the error propagates, no ``out`` appears (a stale copy stays as it
+    was), no temp sibling is left, and the next call rebuilds."""
+    import glob
+    import json
+    import os
+    import shutil
+    import uuid
+
+    import pytest
+
+    from i3cols_spark.sources.mirrors import _warehouse_root, write_once
+
+    src = tmp_path / "src.parquet"
+    shutil.copy("/root/testdata/sf0.001/orders.parquet", src)
+    name = f"killed_{uuid.uuid4().hex[:8]}"
+    out = os.path.join(_warehouse_root(spark, "test_mirror"), name)
+
+    def killed(d: str) -> None:
+        os.makedirs(d)
+        with open(os.path.join(d, "part-killed"), "w") as fh:
+            fh.write("partial")
+        raise RuntimeError("build killed")
+
+    def good(d: str) -> None:
+        os.makedirs(d)
+        with open(os.path.join(d, "part-good"), "w") as fh:
+            fh.write("complete")
+
+    args = (spark, "test_mirror", name, [str(src)])
+    with pytest.raises(RuntimeError, match="build killed"):
+        write_once(*args, killed, {"v": 1})
+    assert not os.path.exists(out)
+    assert not glob.glob(out + ".tmp-*")
+
+    p, built = write_once(*args, good, {"v": 1})
+    assert built and p == out
+    assert sorted(os.listdir(out)) == ["_MIRROR.json", "part-good"]
+
+    # a killed REbuild over a stale copy leaves that copy untouched
+    with pytest.raises(RuntimeError, match="build killed"):
+        write_once(*args, killed, {"v": 2})
+    assert sorted(os.listdir(out)) == ["_MIRROR.json", "part-good"]
+    assert json.load(open(os.path.join(out, "_MIRROR.json")))["v"] == 1
+    assert not glob.glob(out + ".tmp-*")
+    _, built = write_once(*args, good, {"v": 2})
+    assert built
+    assert json.load(open(os.path.join(out, "_MIRROR.json")))["v"] == 2
+
+
+def test_write_once_concurrent_builders_publish_one_build(spark, tmp_path):
+    """Concurrent builders of one stale layout: every caller returns the
+    same path, the published marker is current, the directory holds the
+    files of exactly one build, and no temp sibling is left."""
+    import glob
+    import json
+    import os
+    import shutil
+    import sys
+    import threading
+    import time
+    import uuid
+
+    from i3cols_spark.sources.mirrors import _warehouse_root, write_once
+
+    src = tmp_path / "src.parquet"
+    shutil.copy("/root/testdata/sf0.001/orders.parquet", src)
+    name = f"race_{uuid.uuid4().hex[:8]}"
+    out = os.path.join(_warehouse_root(spark, "test_mirror"), name)
+
+    def build_as(tag: str):
+        def build(d: str) -> None:
+            os.makedirs(d)
+            for i in range(3):
+                with open(os.path.join(d, f"part-{tag}-{i}"), "w") as fh:
+                    fh.write(tag)
+                time.sleep(0.01)
+
+        return build
+
+    args = (spark, "test_mirror", name, [str(src)])
+    write_once(*args, build_as("stale"), {"v": 1})
+
+    n = 8
+    gate = threading.Barrier(n)
+    paths, errors = [], []
+
+    def run(i: int) -> None:
+        try:
+            gate.wait(timeout=30)
+            paths.append(write_once(*args, build_as(f"t{i}"), {"v": 2})[0])
+        except Exception as e:  # surfaced by the asserts below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=run, args=(i,)) for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert paths == [out] * n
+
+    assert json.load(open(os.path.join(out, "_MIRROR.json")))["v"] == 2
+    parts = sorted(f for f in os.listdir(out) if f != "_MIRROR.json")
+    owners = {f.split("-")[1] for f in parts}
+    assert len(owners) == 1 and owners != {"stale"}, parts
+    assert len(parts) == 3, parts
+    assert not glob.glob(out + ".tmp-*")
 
 
 def test_knn_batch_tiles_bound_the_query_collect(spark, sf_dir, monkeypatch):
@@ -1197,17 +1347,17 @@ def test_kcore_rounds_use_semi_joins(spark, sf_dir):
 
 
 def test_ann_ivf_partitioned_scans_exactly_nprobe_cells(spark, sf_dir):
-    """VERDICT r08 item 6 evidence: the write_once partition-column
-    mirror's probe must READ exactly _IVF_NPROBE of the cell
-    directories (partition pruning at the file-listing level, not a
-    post-scan filter), agree row-for-row with q_similarity_ann_ivf,
-    and carry the cell PartitionFilter in its plan."""
+    """VERDICT r08 item 6 evidence: the probe of the cell-partitioned
+    IVF index must READ exactly _IVF_NPROBE of the cell directories
+    (partition pruning at the file-listing level, not a post-scan
+    filter), agree row-for-row with q_similarity_ann_ivf, and carry
+    the cell PartitionFilter in its plan."""
 
 
     from i3cols_spark.operators.similarity import (
         _IVF_NLIST,
         _IVF_NPROBE,
-        ivf_partitioned_mirror,
+        build_ivf_index,
     )
 
     df = QUERIES["q_similarity_ann_ivf_partitioned"](spark, sf_dir)
@@ -1245,16 +1395,16 @@ def test_ann_ivf_partitioned_scans_exactly_nprobe_cells(spark, sf_dir):
     assert read["numPartitions"] == _IVF_NPROBE, read
     assert read["numFiles"] >= _IVF_NPROBE, read
 
-    # The mirror itself holds (up to) _IVF_NLIST cell directories —
+    # The index itself holds (up to) _IVF_NLIST cell directories —
     # pruning, not a tiny index, is what kept the scan narrow.
     import os
 
-    root = ivf_partitioned_mirror(spark, sf_dir)
+    root = build_ivf_index(spark, sf_dir)
     n_dirs = sum(1 for e in os.listdir(root) if e.startswith("cell="))
     assert n_dirs > _IVF_NPROBE
     assert n_dirs <= _IVF_NLIST
 
-    # Row-for-row agreement with the sidecar-protocol flavor.
+    # Row-for-row agreement with the other IVF entry.
     a = sorted(tuple(r) for r in df.collect())
     b = sorted(
         tuple(r)
