@@ -420,6 +420,15 @@ def cms_bucket(key_col, d_col):
     )
 
 
+def cms_cells(keyed: DataFrame) -> DataFrame:
+    """Each row of ``keyed`` once per depth row ``d``, with its grid
+    cell ``bucket`` for the key ``user_id`` — the depth explode of
+    q_agg_sketch_countmin and its streaming twin."""
+    return keyed.select(
+        "*", F.explode(F.array([F.lit(d) for d in range(_CMS_DEPTH)])).alias("d")
+    ).withColumn("bucket", cms_bucket(F.col("user_id"), F.col("d")))
+
+
 @query(
     "q_agg_sketch_countmin",
     oracle=f"""
@@ -480,11 +489,7 @@ def q_agg_sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = table(spark, sf_dir, "events")
     counts = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("cnt"))
-    hashed = counts.select(
-        "user_id",
-        "cnt",
-        F.explode(F.array([F.lit(d) for d in range(_CMS_DEPTH)])).alias("d"),
-    ).withColumn("bucket", cms_bucket(F.col("user_id"), F.col("d")))
+    hashed = cms_cells(counts)
     sketch = hashed.groupBy("d", "bucket").agg(F.sum("cnt").alias("bsum"))
     est = (
         hashed.join(F.broadcast(sketch), ["d", "bucket"])
@@ -950,32 +955,9 @@ def q_agg_sketch_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     incrementally.
     """
     orders = table(spark, sf_dir, "orders").select("o_totalprice")
-    ext = orders.agg(
-        F.min("o_totalprice").alias("mn"),
-        F.max("o_totalprice").alias("mx"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    width = (F.col("mx") - F.col("mn")) / F.lit(float(_HIST_BINS))
-    # Binning guard (ADVICE r07): a constant-valued column makes
-    # width 0 and the unguarded index NULL (double div-by-zero) — the
-    # fallback maps everything to bin 0, while the ESTIMATE keeps the
-    # true width (0 in that case), so the degenerate quantile is
-    # exactly mn.  Non-degenerate inputs take the identical path as
-    # before, so the oracle is unaffected.
-    bin_width = F.when(F.col("mx") > F.col("mn"), width).otherwise(F.lit(1.0))
-    cells = (
-        orders.join(F.broadcast(ext))
-        .select(
-            F.least(
-                F.lit(_HIST_BINS - 1),
-                F.floor((F.col("o_totalprice") - F.col("mn")) / bin_width),
-            )
-            .cast("bigint")
-            .alias("bin")
-        )
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    ext = hist_extrema(orders)
+    width = _hist_width()
+    cells = hist_cells(orders.join(F.broadcast(ext)))
     w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
     cum = cells.select(
         "bin",
@@ -1031,6 +1013,45 @@ def q_agg_sketch_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def hist_extrema(orders: DataFrame) -> DataFrame:
+    """The 1-row (mn, mx, n) of ``o_totalprice`` that fixes the
+    histogram geometry."""
+    return orders.agg(
+        F.min("o_totalprice").alias("mn"),
+        F.max("o_totalprice").alias("mx"),
+        F.count(F.lit(1)).alias("n"),
+    )
+
+
+def _hist_width() -> "F.Column":
+    return (F.col("mx") - F.col("mn")) / F.lit(float(_HIST_BINS))
+
+
+def hist_cells(priced: DataFrame) -> DataFrame:
+    """(bin, cnt) of the ≤256-cell equi-width grid over a frame of
+    (o_totalprice, mn, mx) — q_agg_sketch_histogram and its streaming
+    twin.  Binning guard (ADVICE r07): a constant-valued column makes
+    the width 0 and the unguarded index NULL (double div-by-zero), so
+    the index falls back to width 1.0 and maps everything to bin 0;
+    the quantile ESTIMATE keeps the true width (0 then), so the
+    degenerate quantile is exactly mn."""
+    bin_width = F.when(F.col("mx") > F.col("mn"), _hist_width()).otherwise(
+        F.lit(1.0)
+    )
+    return (
+        priced.select(
+            F.least(
+                F.lit(_HIST_BINS - 1),
+                F.floor((F.col("o_totalprice") - F.col("mn")) / bin_width),
+            )
+            .cast("bigint")
+            .alias("bin")
+        )
+        .groupBy("bin")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
 #: HyperLogLog geometry: p = 8 → m = 256 registers (SE ≈ 1.04/√m ≈
 #: 6.5%), 24-bit remainder for the rank.  Small enough that the
 #: sf0.01 fixture lands in the LINEAR-COUNTING regime and sf0.1 in
@@ -1038,6 +1059,31 @@ def q_agg_sketch_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: and value-hash-checked.
 _HLL_M = 256
 _HLL_REM_BITS = 24
+
+
+def hll_hashes(ev: DataFrame) -> DataFrame:
+    """One ``h32`` per row: 32 bits of md5(user_id), the cross-engine
+    HLL hash family."""
+    return ev.select(
+        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
+        .cast("bigint")
+        .alias("h32")
+    )
+
+
+def hll_registers(hashes: DataFrame) -> DataFrame:
+    """(bucket, m_rank) registers of an ``h32`` frame: the top 8 bits
+    pick the bucket, the rank is 24 − len(bin(w)) + 1 of the 24-bit
+    remainder ``w``.  Registers merge by MAX, so duplicate hashes (the
+    streaming twin skips the batch distinct) cannot move one."""
+    parts = hashes.select(
+        F.shiftright(F.col("h32"), _HLL_REM_BITS).alias("bucket"),
+        F.pmod(F.col("h32"), F.lit(2**_HLL_REM_BITS)).alias("w"),
+    )
+    rank = F.when(F.col("w") == 0, F.lit(_HLL_REM_BITS + 1)).otherwise(
+        F.lit(_HLL_REM_BITS) - F.length(F.bin(F.col("w"))) + 1
+    )
+    return parts.groupBy("bucket").agg(F.max(rank).alias("m_rank"))
 
 
 @query(
@@ -1120,21 +1166,7 @@ def q_agg_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shuffle is ≤256 rows per task regardless of key cardinality.
     """
     ev = table(spark, sf_dir, "events")
-    h32 = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
-    parts = (
-        ev.select(h32.alias("h32"))
-        .distinct()
-        .select(
-            F.shiftright(F.col("h32"), _HLL_REM_BITS).alias("bucket"),
-            F.pmod(F.col("h32"), F.lit(2**_HLL_REM_BITS)).alias("w"),
-        )
-    )
-    rank = F.when(F.col("w") == 0, F.lit(_HLL_REM_BITS + 1)).otherwise(
-        F.lit(_HLL_REM_BITS) - F.length(F.bin(F.col("w"))) + 1
-    )
-    regs = parts.groupBy("bucket").agg(F.max(rank).alias("m_rank"))
+    regs = hll_registers(hll_hashes(ev).distinct())
     spine = spark.range(_HLL_M).select(F.col("id").alias("bucket"))
     full_regs = spine.join(F.broadcast(regs), "bucket", "left").select(
         F.coalesce("m_rank", F.lit(0)).alias("m_rank")

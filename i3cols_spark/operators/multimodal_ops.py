@@ -621,16 +621,21 @@ def q_multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFram
     combined groupBy on a 16-bit key — the shuffle carries one (afp,
     count, min_id) partial per task at any corpus size.
     """
+    return audio_fingerprint_groups(table(spark, sf_dir, "documents"))
+
+
+def audio_fingerprint_groups(docs: DataFrame) -> DataFrame:
+    """(afp, n_clips, rep_id) over the synthetic WAV clips of a
+    documents frame, batch or streaming: decode and fingerprint run in
+    the Arrow-batched mapInPandas kernels, and the aggregate's state is
+    bounded by the 16-bit fingerprint space, never by clip count."""
     from i3cols_spark.functions.multimodal import audio_fingerprints
 
-    media = attach_synthetic_media(table(spark, sf_dir, "documents")).where(
-        F.col("media_type") == "audio/wav"
-    )
+    media = attach_synthetic_media(docs).where(F.col("media_type") == "audio/wav")
     return audio_fingerprints(media).groupBy("afp").agg(
         F.count(F.lit(1)).cast("long").alias("n_clips"),
         F.min("media_id").alias("rep_id"),
     )
-
 
 
 @query(

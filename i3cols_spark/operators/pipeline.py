@@ -1056,29 +1056,39 @@ def q_feature_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     by exp(−λ·Δ) — the decay's semigroup property) is what a daily
     refresh runs instead of rescanning history.
     """
+    ev = table(spark, sf_dir, "events")
+    return (
+        decayed_scores(ev.crossJoin(F.broadcast(decay_anchor(ev))), F.col("max_us"))
+        .orderBy(F.desc("decayed_value"), F.asc("user_id"))
+        .limit(50)
+    )
+
+
+def decay_anchor(ev: DataFrame) -> DataFrame:
+    """The 1-row ``max_us`` (corpus max timestamp, epoch µs) the decay
+    is anchored at."""
+    return ev.agg(F.unix_micros(F.max("ts")).alias("max_us"))
+
+
+def decayed_scores(ev: DataFrame, anchor_us: "F.Column") -> DataFrame:
+    """Per user: ``n_events`` and the HALF_UP 6-dp
+    Σ value·exp(−λ·age_days) at ``anchor_us`` — q_feature_time_decay
+    and its streaming twin.  With a fixed anchor the decayed value is
+    a per-row map, so partials merge by plain summation."""
     from i3cols_spark.functions.rounding import round_half_up
 
-    ev = table(spark, sf_dir, "events")
-    anchor = ev.agg(F.unix_micros(F.max("ts")).alias("max_us"))
-    scored = ev.crossJoin(F.broadcast(anchor)).select(
-        "user_id",
-        (
-            F.col("value")
-            * F.exp(
-                F.lit(-_DECAY_LAMBDA)
-                * (F.col("max_us") - F.unix_micros(F.col("ts")))
-                / F.lit(86400000000.0)
-            )
-        ).alias("dv"),
+    dv = F.col("value") * F.exp(
+        F.lit(-_DECAY_LAMBDA)
+        * (anchor_us - F.unix_micros(F.col("ts")))
+        / F.lit(86400000000.0)
     )
     return (
-        scored.groupBy("user_id")
+        ev.select("user_id", dv.alias("dv"))
+        .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
             round_half_up(F.sum("dv"), 6).alias("decayed_value"),
         )
-        .orderBy(F.desc("decayed_value"), F.asc("user_id"))
-        .limit(50)
     )
 
 

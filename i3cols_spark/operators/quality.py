@@ -579,6 +579,29 @@ def dp_laplace_noise(
     )
 
 
+def dp_classes(cust: DataFrame, nat: DataFrame) -> DataFrame:
+    """The (nation, segment) class histogram ``true_count`` of
+    customer joined to the broadcast nation dim."""
+    return (
+        cust.join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
+        .groupBy(F.col("n_name").alias("nation"), F.col("c_mktsegment").alias("segment"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("true_count"))
+    )
+
+
+def dp_release(classes: DataFrame) -> DataFrame:
+    """Add the cell's Laplace ``noise`` (keyed nation|segment|eps_label
+    at ``eps``) and the HALF_UP 6-dp ``noisy_count`` to a class frame
+    carrying ``eps_label``/``eps`` — q_quality_dp_counts and its
+    streaming twin."""
+    from i3cols_spark.functions.rounding import round_half_up
+
+    key = F.concat_ws("|", "nation", "segment", "eps_label")
+    return classes.withColumn("noise", dp_laplace_noise(key, F.col("eps"))).withColumn(
+        "noisy_count", round_half_up(F.col("true_count") + F.col("noise"), 6)
+    )
+
+
 @query(
     "q_quality_dp_counts",
     oracle="""
@@ -646,24 +669,14 @@ def q_quality_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from i3cols_spark.functions.rounding import round_half_up as half_up
 
-    cust = table(spark, sf_dir, "customer")
-    nat = table(spark, sf_dir, "nation")
-    classes = (
-        cust.join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
-        .groupBy(F.col("n_name").alias("nation"), F.col("c_mktsegment").alias("segment"))
-        .agg(F.count("*").cast("bigint").alias("true_count"))
-    )
+    classes = dp_classes(table(spark, sf_dir, "customer"), table(spark, sf_dir, "nation"))
     ladder = spark.createDataFrame(
         [("0.5", 0.5), ("2.0", 2.0)], "eps_label string, eps double"
     )
-    key = F.concat_ws("|", "nation", "segment", "eps_label")
-    noised = classes.crossJoin(F.broadcast(ladder)).withColumn(
-        "noise", dp_laplace_noise(key, F.col("eps"))
-    )
+    noised = dp_release(classes.crossJoin(F.broadcast(ladder)))
     return (
         noised.select(
-            "nation", "segment", "eps_label", "true_count",
-            half_up(F.col("true_count") + F.col("noise"), 6).alias("noisy_count"),
+            "nation", "segment", "eps_label", "true_count", "noisy_count",
             half_up(
                 F.avg(F.abs(F.col("noise"))).over(W.partitionBy("eps_label")), 6
             ).alias("mean_abs_noise"),

@@ -1,10 +1,14 @@
 """§2.3-E — streaming semantics, batch-checkable forms.
 
-These queries() entries run the SAME frame logic Structured Streaming
-executes (tumbling/sliding/session windows, stateful dedup) in batch
-mode so the DuckDB oracle can check them; streaming/jobs.py runs the
-true readStream/writeStream versions and tests assert
-``availableNow`` ≡ batch (SURVEY §2.3-E note).
+One frame per stream/batch twin: each window, aggregate and join here
+is a function of an events frame (``tumbling_counts``,
+``sliding_counts``, ``session_counts``, ``view_purchase_pairs``).  The
+``q_*`` query applies it to the batch table so the DuckDB oracle can
+check it; streaming/jobs.py applies the same function to a readStream
+source, and tests assert ``availableNow`` ≡ batch (SURVEY §2.3-E
+note).  The watermarks that bound streaming state are applied inside
+the frames; Spark's analyzer removes them from batch plans
+(``EliminateEventTimeWatermark``, pinned by test_plans).
 
 Window starts are emitted as epoch-µs BIGINT — integer in both
 engines, immune to timestamp-precision drift.
@@ -36,14 +40,17 @@ _GAP_US = 1_800_000_000  # 30 min session gap
     """,
 )
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events per type per 1-hour tumbling window.
+    """Events per type per 1-hour tumbling window (``tumbling_counts``
+    over the events table)."""
+    return tumbling_counts(table(spark, sf_dir, "events"))
 
-    Uses Spark's window() (epoch-aligned) — the very expression the
-    streaming job groups on, so batch ≡ streaming by construction.
-    """
-    ev = table(spark, sf_dir, "events")
+
+def tumbling_counts(ev: DataFrame) -> DataFrame:
+    """Events and rounded value per type per 1-hour tumbling window
+    (Spark's epoch-aligned window()), under a 10-min watermark."""
     return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        ev.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             F.round(F.sum("value"), 2).alias("total_value"),
@@ -70,9 +77,15 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour windows sliding every 15 min (each event lands in exactly
     4 windows).  Oracle derives the same 4 window starts with integer
     µs arithmetic — the definition of sliding-window assignment."""
-    ev = table(spark, sf_dir, "events")
+    return sliding_counts(table(spark, sf_dir, "events"))
+
+
+def sliding_counts(ev: DataFrame) -> DataFrame:
+    """Events per 1-hour window sliding every 15 min, under a 10-min
+    watermark."""
     return (
-        ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
+        ev.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
         .agg(F.count("*").alias("n_events"))
         .select(
             F.unix_micros("w.start").alias("window_start_us"),
@@ -116,9 +129,15 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction (lag → cumulative start flags → group), proving the
     two formulations agree.  session end = last event + gap.
     """
-    ev = table(spark, sf_dir, "events")
+    return session_counts(table(spark, sf_dir, "events"))
+
+
+def session_counts(ev: DataFrame) -> DataFrame:
+    """Events per user per 30-min-gap session window, under a 10-min
+    watermark."""
     return (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        ev.withWatermark("ts", "10 minutes")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",
@@ -129,16 +148,19 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_stream_dedup",
-    oracle="""
+_DEDUP_ORACLE = """
     SELECT user_id, event_type,
            min(epoch_us(ts))        AS first_ts_us,
            CAST(count(*) AS BIGINT) AS n_dropped_plus_one
     FROM events
     GROUP BY user_id, event_type
-    """,
-)
+    """
+
+
+# SURVEY §2.3-E declares this query as ``q_stream_dedup_stateful``;
+# both names are registered.
+@query("q_stream_dedup_stateful", oracle=_DEDUP_ORACLE)
+@query("q_stream_dedup", oracle=_DEDUP_ORACLE)
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-first dedup on (user_id, event_type) — the batch semantics
     of streaming dropDuplicates, with the duplicate count retained so
@@ -149,15 +171,6 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.unix_micros("ts")).alias("first_ts_us"),
         F.count("*").alias("n_dropped_plus_one"),
     )
-
-
-# SURVEY §2.3-E declares this query under the name
-# ``q_stream_dedup_stateful``; register the contract name as an alias
-# so both resolve (the driver may check either).
-from i3cols_spark.operators.registry import ORACLES, QUERIES  # noqa: E402
-
-QUERIES["q_stream_dedup_stateful"] = q_stream_dedup
-ORACLES["q_stream_dedup_stateful"] = ORACLES["q_stream_dedup"]
 
 
 @query(
@@ -179,22 +192,36 @@ ORACLES["q_stream_dedup_stateful"] = ORACLES["q_stream_dedup"]
 def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """View→purchase conversion join: each view paired with the same
     user's purchases in the following 30 minutes — the batch form of a
-    watermarked stream-stream interval join (streaming/jobs.py runs
-    the readStream twin; state per side is bounded by watermark + the
-    30-min join range, so it holds at unbounded input).
+    watermarked stream-stream interval join (``view_purchase_pairs``;
+    state per side is bounded by watermark + the 30-min join range, so
+    it holds at unbounded input).
 
     Batch plan: an equi-join on user_id with the interval predicate as
     a post-join filter — one shuffle on the join key, never a
     cartesian expansion.
     """
-    ev = table(spark, sf_dir, "events")
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id", F.col("event_id").alias("view_id"), F.col("ts").alias("v_ts")
+    return view_purchase_pairs(table(spark, sf_dir, "events"))
+
+
+def view_purchase_pairs(ev: DataFrame) -> DataFrame:
+    """Each view joined to the same user's purchases in the next 30
+    minutes, both sides under a 10-min watermark.  The event-time
+    bound in the join condition is what lets a streaming state store
+    drop a view after watermark + 30 min and a purchase after the
+    watermark."""
+    views = (
+        ev.filter(F.col("event_type") == "view")
+        .select("user_id", F.col("event_id").alias("view_id"), F.col("ts").alias("v_ts"))
+        .withWatermark("v_ts", "10 minutes")
     )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user_id"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("p_ts"),
+    purchases = (
+        ev.filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user_id"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("p_ts"),
+        )
+        .withWatermark("p_ts", "10 minutes")
     )
     return (
         views.join(

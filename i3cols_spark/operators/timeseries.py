@@ -64,22 +64,32 @@ def q_ts_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     a value stream to fixed-frequency candles (open / high / low /
     close / volume / turnover).
 
-    Spark shape: ONE map-side-combined groupBy.  ``min_by`` /
-    ``max_by`` over a ``struct(ts, event_id)`` order key pick the
-    first/last value per bar inside the partial aggregate, so open and
-    close ride the same single shuffle as the min/max/count — no
-    window, no per-bar sort.  The oracle can't express composite
-    arg_min, so it pins the same semantics via two row_number
-    windows; the Spark plan is the scale-correct one (at 100 TB a
-    groupBy with partial aggregation beats a per-bar window sort by
-    the full event volume).  The (ts, event_id) key is total-ordered —
-    ties on ts break on the unique event_id — so first/last are
-    reproducible across engines.
+    Spark shape: ONE map-side-combined groupBy (``ohlc_bars``).
+    ``min_by`` / ``max_by`` over a ``struct(ts, event_id)`` order key
+    pick the first/last value per bar inside the partial aggregate, so
+    open and close ride the same single shuffle as the min/max/count —
+    no window function, no per-bar sort.  The oracle can't express
+    composite arg_min, so it pins the same semantics via two
+    row_number windows; the Spark plan is the scale-correct one (at
+    100 TB a groupBy with partial aggregation beats a per-bar window
+    sort by the full event volume).  The (ts, event_id) key is
+    total-ordered — ties on ts break on the unique event_id — so
+    first/last are reproducible across engines.  Bars are 1-day
+    tumbling window() groups: with the session zone pinned UTC they
+    are the oracle's ``date_trunc('day')`` days.
     """
-    ev = table(spark, sf_dir, "events")
+    return ohlc_bars(table(spark, sf_dir, "events"))
+
+
+def ohlc_bars(ev: DataFrame) -> DataFrame:
+    """Daily OHLC bars per event type over any events frame, batch or
+    streaming, under a 10-min watermark.  Per-bar state is two
+    (value, order-key) extrema plus the min/max/count/sum scalars,
+    whatever the event volume."""
     ord_key = F.struct(F.col("ts"), F.col("event_id"))
     return (
-        ev.groupBy("event_type", F.date_trunc("day", "ts").alias("day"))
+        ev.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
         .agg(
             F.min_by("value", ord_key).alias("open"),
             F.max("value").alias("high"),
@@ -90,7 +100,7 @@ def q_ts_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "event_type",
-            F.unix_micros("day").alias("day_us"),
+            F.unix_micros("w.start").alias("day_us"),
             "open",
             "high",
             "low",

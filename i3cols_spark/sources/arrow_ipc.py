@@ -128,8 +128,8 @@ class SnapshotConflictError(RuntimeError):
     version, and try again.
 
     Orphans from a CRASHED commit (snapshot published, HEAD never
-    flipped) do not raise this: both commit paths roll HEAD forward
-    onto any orphan snapshot before computing their own version
+    flipped) do not raise this: ``_commit`` rolls HEAD forward onto
+    any orphan snapshot before computing its own version
     (``_roll_forward``), so by the time a version collision is seen
     the only possible owner of the existing file is a live racer
     (ADVICE r08: the old behavior wedged the table — every retry
@@ -147,8 +147,8 @@ def _head_state(root: str) -> dict | None:
 
 
 def _flip_head(root: str, payload: dict) -> bool:
-    """Atomically point HEAD at ``payload`` — the single place both
-    commit paths (and roll-forward) go through (ADVICE r08, both
+    """Atomically point HEAD at ``payload`` — the single place
+    ``_commit`` (and roll-forward) go through (ADVICE r08, both
     findings):
 
     * UNIQUE tmp name (pid+uuid, as ``_publish_snapshot``): the old
@@ -318,8 +318,8 @@ class ArrowIPCReader(DataSourceReader):
 class ArrowIPCStreamReader(DataSourceStreamReader):
     """Streaming tail of an arrowipc directory: the offset axis is the
     POSITION in the manifest's file list (append commits extend it in
-    arrival order, see ArrowIPCWriter.commit), so an offset is the
-    one-int dict ``{"n": files_consumed}``.
+    arrival order, see ``_commit``), so an offset is the one-int dict
+    ``{"n": files_consumed}``.
 
     Distributed-correctness properties this encodes:
 
@@ -378,6 +378,58 @@ class _Committed(WriterCommitMessage):
         self.filename = filename
 
 
+def _commit(
+    root: str, messages, overwrite: bool = False, batch_id: int | None = None
+) -> None:
+    """Publish one commit of the tasks' ``messages``: roll forward,
+    build the payload, publish the ``v{n}`` snapshot, flip HEAD — the
+    one commit path of the batch writer and the stream sink.
+
+    * Any crashed commit's orphan snapshot is adopted FIRST, so this
+      commit's version is computed against the true latest state
+      (ADVICE r08 — recomputing the orphan's version from the unmoved
+      HEAD wedged on SnapshotConflictError).  If the orphan IS this
+      stream epoch (crash after snapshot, before flip), its adopted
+      batches record makes the replay a no-op.
+    * Append keeps prior entries IN ORDER and adds this commit's files
+      after them — arrival order is the streaming-tail offset axis
+      (ArrowIPCStreamReader), so it must be stable.  Overwrite starts
+      a new table state from ``new`` alone.
+    * The stream sink's committed-batch record (``batches``: batch id
+      → its files) survives appends, so a replayed ``batch_id`` is a
+      no-op (losing it would let a replayed epoch duplicate), and
+      resets on overwrite.
+    * The snapshot is published FIRST and never replaced: a time-
+      travel reader of v{n} sees either nothing (commit not yet
+      durable) or the complete immutable file list — torn-write and
+      concurrent-committer races are handled in _publish_snapshot.
+      Only then does the HEAD manifest flip atomically.  Old parts are
+      NOT deleted here — superseded snapshots stay readable via
+      versionAsOf until an explicit vacuum() reclaims them (the
+      Delta-style contract)."""
+    new = sorted(m.filename for m in messages if m is not None)
+    head = _roll_forward(root, _head_state(root))
+    prev_version = 0
+    files: list = []
+    batches: dict = {}
+    if head is not None:
+        if batch_id is not None and str(batch_id) in head.get("batches", {}):
+            return  # epoch already durable — replay is a no-op
+        # pre-versioning manifests carry no "version" — treat the
+        # existing state as v1 so its history starts counting.
+        prev_version = head.get("version", 1)
+        if not overwrite:
+            files = head["files"]
+            batches = head.get("batches", {})
+    if batch_id is not None:
+        batches[str(batch_id)] = new
+    payload = {"version": prev_version + 1, "files": files + new}
+    if batches:
+        payload["batches"] = batches
+    _publish_snapshot(root, payload["version"], payload)
+    _flip_head(root, payload)
+
+
 class ArrowIPCWriter(DataSourceWriter):
     _CHUNK = 65536
 
@@ -420,43 +472,7 @@ class ArrowIPCWriter(DataSourceWriter):
         )
 
     def commit(self, messages) -> None:
-        new = sorted(m.filename for m in messages if m is not None)
-        # Adopt any crashed commit's orphan snapshot FIRST so this
-        # commit's version is computed against the true latest state
-        # (ADVICE r08 — the old path recomputed the orphan's version
-        # from the unmoved HEAD and wedged on SnapshotConflictError).
-        head = _roll_forward(self.root, _head_state(self.root))
-        prev_version = 0
-        batches: dict = {}
-        if head is not None:
-            # pre-versioning manifests carry no "version" — treat the
-            # existing state as v1 so its history starts counting.
-            prev_version = head.get("version", 1)
-            files = new if self.overwrite else head["files"] + new
-            # append keeps prior entries IN ORDER and adds this job's
-            # files after them — arrival order is the streaming-tail
-            # offset axis (ArrowIPCStreamReader), so it must be stable.
-            # The stream sink's committed-batch record survives batch
-            # APPENDS (losing it would let a replayed epoch duplicate)
-            # and resets on overwrite (a new table state).
-            if not self.overwrite:
-                batches = head.get("batches", {})
-        else:
-            files = new
-        version = prev_version + 1
-        payload = {"version": version, "files": files}
-        if batches:
-            payload["batches"] = batches
-        # The snapshot is published FIRST and never replaced: a time-
-        # travel reader of v{n} sees either nothing (commit not yet
-        # durable) or the complete immutable file list — torn-write
-        # and concurrent-committer races handled in _publish_snapshot.
-        # Only then does the HEAD manifest flip atomically.  Old parts
-        # are NOT deleted here — superseded snapshots stay readable
-        # via versionAsOf until an explicit vacuum() reclaims them
-        # (the Delta-style contract).
-        _publish_snapshot(self.root, version, payload)
-        _flip_head(self.root, payload)
+        _commit(self.root, messages, overwrite=self.overwrite)
 
     def abort(self, messages) -> None:
         # Files from completed tasks of the aborted job stay on disk
@@ -488,28 +504,7 @@ class ArrowIPCStreamWriter(DataSourceStreamWriter):
         return self._delegate.write(rows)
 
     def commit(self, messages, batchId: int) -> None:
-        new = sorted(m.filename for m in messages if m is not None)
-        # Roll forward a crashed epoch's orphan snapshot first; if the
-        # orphan IS this epoch (crash after snapshot, before flip), the
-        # adopted batches record makes the replay a no-op below.
-        head = _roll_forward(self.root, _head_state(self.root))
-        batches: dict = {}
-        files: list = []
-        prev_version = 0
-        if head is not None:
-            if str(batchId) in head.get("batches", {}):
-                return  # epoch already durable — replay is a no-op
-            prev_version = head.get("version", 1)
-            files = head["files"]
-            batches = head.get("batches", {})
-        batches[str(batchId)] = new
-        payload = {
-            "version": prev_version + 1,
-            "files": files + new,
-            "batches": batches,
-        }
-        _publish_snapshot(self.root, payload["version"], payload)
-        _flip_head(self.root, payload)
+        _commit(self.root, messages, batch_id=batchId)
 
     def abort(self, messages, batchId: int) -> None:
         pass  # task files stay unreachable; the manifest never moved

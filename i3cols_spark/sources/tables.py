@@ -247,9 +247,11 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
         ts, ts_ns = raw, F.unix_micros(raw) * F.lit(1000)
     else:
         return df
-    # Keep the driver's column order with ts in place.
+    # Keep the file's column order with ts in place, and any column
+    # outside the contract, so check_fixture_schema reports it; ts_ns
+    # is always the one derived here.
     return df.select(
-        "event_id", ts.alias("ts"), "user_id", "event_type", "value", "props",
+        *(ts.alias("ts") if c == "ts" else c for c in df.columns if c != "ts_ns"),
         ts_ns.alias("ts_ns"),
     )
 

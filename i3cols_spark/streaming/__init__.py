@@ -1,13 +1,1 @@
-from i3cols_spark.streaming.jobs import (
-    stream_dedup_within_watermark,
-    stream_session_windows,
-    stream_sliding_counts,
-    stream_tumbling_counts,
-)
-
-__all__ = [
-    "stream_tumbling_counts",
-    "stream_sliding_counts",
-    "stream_session_windows",
-    "stream_dedup_within_watermark",
-]
+"""Structured Streaming jobs: ``i3cols_spark.streaming.jobs``."""

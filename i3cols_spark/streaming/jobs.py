@@ -1,11 +1,17 @@
-"""Structured Streaming jobs over the events table (SURVEY §2.3-E).
+"""Structured Streaming jobs over the fixture tables (SURVEY §2.3-E).
 
 The reference is batch-only (single-machine NumPy — SURVEY §2.4);
-streaming is the [X] north-star extension.  Each job here is the
-readStream twin of an operators.stream_batch query: running it with
-the ``availableNow`` trigger over the static parquet must produce
-exactly the batch result (tests/test_streaming.py asserts it — the
-SURVEY §5.2.3 batch-equivalence property).
+streaming is the [X] north-star extension.  One frame per stream/batch
+twin: where a job has a batch twin in ``operators``, both call the
+same frame function from the operators module that owns the batch
+query (``stream_batch.tumbling_counts``, ``aggregates.hll_registers``,
+``stats.zscore_screen``, ...), so this module holds only stream
+sources, static snapshots and sinks.  Every source goes through
+``_table_stream`` and every static snapshot through ``table()``, so
+both are checked against ``FIXTURE_SCHEMAS``.  Running a job with the
+``availableNow`` trigger over the static parquet must produce exactly
+the batch result (tests/test_streaming.py asserts it — the SURVEY
+§5.2.3 batch-equivalence property).
 
 Watermarks bound state: at 100 TB/day the tumbling-count state is
 |open windows| × |types|, not |events| — late data beyond 10 minutes
@@ -28,71 +34,42 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from i3cols_spark.operators import stream_batch
 from i3cols_spark.session import configure
 from i3cols_spark.sources.tables import normalize_events_ts, table, table_schema
 
 
-def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet with the same ts
-    normalization rule as the batch reader (sources/tables.py — both
-    fixture flavors: epoch-nanos bigint and µs TIMESTAMP_NTZ)."""
+def _table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Streaming source over ``{sf_dir}/{name}.parquet`` with the checked,
+    memoised schema of ``table()`` and, for events, its ``ts``
+    normalization (both fixture flavors: epoch-nanos bigint and µs
+    TIMESTAMP_NTZ)."""
     configure(spark)
-    batch_schema = table_schema(spark, f"{sf_dir}/events.parquet")
-    # The sf dir holds all tables; pathGlobFilter selects just events.
+    schema = table_schema(spark, f"{sf_dir}/{name}.parquet", name)
+    # The sf dir holds all tables; pathGlobFilter selects just this one.
     stream = (
-        spark.readStream.schema(batch_schema)
+        spark.readStream.schema(schema)
         .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
+        .option("pathGlobFilter", f"{name}.parquet")
         .load(sf_dir)
     )
-    return normalize_events_ts(stream)
+    return normalize_events_ts(stream) if name == "events" else stream
 
 
 def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_stream_tumbling (1-h tumbling, 10-min watermark)."""
-    ev = _event_stream(spark, sf_dir)
-    return (
-        ev.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.unix_micros("w.start").alias("window_start_us"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
+    return stream_batch.tumbling_counts(_table_stream(spark, sf_dir, "events"))
 
 
 def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_stream_sliding (1-h window, 15-min slide)."""
-    ev = _event_stream(spark, sf_dir)
-    return (
-        ev.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
-        .agg(F.count("*").alias("n_events"))
-        .select(F.unix_micros("w.start").alias("window_start_us"), "n_events")
-    )
+    return stream_batch.sliding_counts(_table_stream(spark, sf_dir, "events"))
 
 
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_stream_session (30-min gap session windows,
     merging state maintained per user under the watermark)."""
-    ev = _event_stream(spark, sf_dir)
-    return (
-        ev.withWatermark("ts", "10 minutes")
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_micros("w.start").alias("session_start_us"),
-            F.unix_micros("w.end").alias("session_end_us"),
-            "n_events",
-        )
-    )
+    return stream_batch.session_counts(_table_stream(spark, sf_dir, "events"))
 
 
 def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,7 +77,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     within the watermark horizon (dropDuplicatesWithinWatermark — state
     is bounded by the horizon, unlike plain dropDuplicates whose state
     grows forever on an unbounded stream)."""
-    ev = _event_stream(spark, sf_dir)
+    ev = _table_stream(spark, sf_dir, "events")
     return (
         ev.withWatermark("ts", "2 hours")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
@@ -118,35 +95,7 @@ def stream_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark + 30 min and each purchase row for watermark only —
     bounded state on unbounded input (the requirement for inner
     stream-stream joins to be runnable at all)."""
-    ev = _event_stream(spark, sf_dir)
-    views = (
-        ev.filter(F.col("event_type") == "view")
-        .select("user_id", F.col("event_id").alias("view_id"), F.col("ts").alias("v_ts"))
-        .withWatermark("v_ts", "10 minutes")
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "10 minutes")
-    )
-    return (
-        views.join(
-            purchases,
-            (F.col("user_id") == F.col("p_user_id"))
-            & (F.col("p_ts") >= F.col("v_ts"))
-            & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
-        )
-        .select(
-            "user_id",
-            "view_id",
-            "purchase_id",
-            (F.unix_micros("p_ts") - F.unix_micros("v_ts")).alias("lag_us"),
-        )
-    )
+    return stream_batch.view_purchase_pairs(_table_stream(spark, sf_dir, "events"))
 
 
 def stream_contaminated_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -166,19 +115,13 @@ def stream_contaminated_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     from i3cols_spark.functions.text import shingle_hashes
     from i3cols_spark.operators.pipeline import _BENCH_MOD, _BENCH_NGRAM
 
-    configure(spark)
-    static_docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     bench = (
-        static_docs.filter(F.col("doc_id") % _BENCH_MOD == 0)
+        table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % _BENCH_MOD == 0)
         .select(F.explode(shingle_hashes("text", n=_BENCH_NGRAM)).alias("s"))
         .distinct()
     )
-    stream = (
-        spark.readStream.schema(static_docs.schema)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
+    stream = _table_stream(spark, sf_dir, "documents")
     return (
         stream.filter(F.col("doc_id") % _BENCH_MOD != 0)
         .select(
@@ -206,10 +149,7 @@ def stream_anomaly_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from i3cols_spark.operators.stats import zscore_screen, zscore_stats
 
-    configure(spark)
-    static_ev = normalize_events_ts(
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-    )
+    static_ev = table(spark, sf_dir, "events")
     # Materialize the |event types|-row stats SNAPSHOT eagerly: the
     # reference side of a screen is a fixed artifact by definition
     # (yesterday's batch agg), and inlining it as literal rows keeps
@@ -218,7 +158,7 @@ def stream_anomaly_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate and the score/threshold are the SAME code as the batch
     # twin (operators/stats.py) so the two can never drift apart.
     stats = spark.createDataFrame(zscore_stats(static_ev).collect())
-    return zscore_screen(_event_stream(spark, sf_dir), stats)
+    return zscore_screen(_table_stream(spark, sf_dir, "events"), stats)
 
 
 def stream_anomaly_mad_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -234,13 +174,10 @@ def stream_anomaly_mad_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     own alarms — median/MAD reference frames don't move."""
     from i3cols_spark.operators.stats import mad_screen, mad_stats
 
-    configure(spark)
-    static_ev = normalize_events_ts(
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-    ).select("event_id", "event_type", "value")
+    static_ev = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     stats = spark.createDataFrame(mad_stats(static_ev).collect())
     return mad_screen(
-        _event_stream(spark, sf_dir).select("event_id", "event_type", "value"),
+        _table_stream(spark, sf_dir, "events").select("event_id", "event_type", "value"),
         stats,
     )
 
@@ -315,7 +252,7 @@ def stream_user_peaks_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    ev = _event_stream(spark, sf_dir).select("user_id", "value")
+    ev = _table_stream(spark, sf_dir, "events").select("user_id", "value")
 
     def update(key, pdfs, state: GroupState):
         peak, count = state.get if state.exists else (float("-inf"), 0)
@@ -339,36 +276,13 @@ def stream_user_peaks_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_ts_ohlc: daily OHLC bars per event type as
-    a watermarked tumbling-window aggregate.  ``min_by``/``max_by``
-    over the struct(ts, event_id) order key are ordinary declarative
-    aggregates, so they fold into streaming state exactly as they fold
-    into the batch partial aggregate — per-bar state is two (value,
-    order-key) extrema plus the min/max/count/sum scalars, regardless
-    of event volume."""
-    ev = _event_stream(spark, sf_dir)
-    ord_key = F.struct(F.col("ts"), F.col("event_id"))
-    return (
-        ev.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-        .agg(
-            F.min_by("value", ord_key).alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max_by("value", ord_key).alias("close"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            "event_type",
-            F.unix_micros("w.start").alias("day_us"),
-            "open",
-            "high",
-            "low",
-            "close",
-            "n_events",
-            "total_value",
-        )
-    )
+    a watermarked tumbling-window aggregate (timeseries.ohlc_bars).
+    ``min_by``/``max_by`` over the struct(ts, event_id) order key are
+    ordinary declarative aggregates, so they fold into streaming state
+    exactly as they fold into the batch partial aggregate."""
+    from i3cols_spark.operators.timeseries import ohlc_bars
+
+    return ohlc_bars(_table_stream(spark, sf_dir, "events"))
 
 
 def stream_point_in_time_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -386,11 +300,6 @@ def stream_point_in_time_features(spark: SparkSession, sf_dir: str) -> DataFrame
     equi key drives the join and the residual prunes per row."""
     from pyspark.sql.window import Window
 
-    from i3cols_spark.sources.tables import table
-
-    # table() runs configure() + ts normalization + the schema
-    # tripwire — reading the parquet directly would break on the
-    # nanos-flavor fixture in a session no other job has configured.
     ev_static = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     dim = (
@@ -403,7 +312,7 @@ def stream_point_in_time_features(spark: SparkSession, sf_dir: str) -> DataFrame
             F.lead(F.unix_micros("ts")).over(w).alias("t"),
         )
     )
-    clicks = _event_stream(spark, sf_dir).filter(
+    clicks = _table_stream(spark, sf_dir, "events").filter(
         F.col("event_type") == "click"
     ).select(
         "user_id", "event_id", F.unix_micros("ts").alias("click_us")
@@ -427,24 +336,9 @@ def stream_media_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     (afp → n_clips, rep_id) aggregate is complete-mode state bounded
     by the 16-bit fingerprint space, never by clip count; payloads die
     with their micro-batch."""
-    from i3cols_spark.functions.multimodal import (
-        attach_synthetic_media,
-        audio_fingerprints,
-    )
+    from i3cols_spark.operators.multimodal_ops import audio_fingerprint_groups
 
-    configure(spark)
-    batch_schema = table_schema(spark, f"{sf_dir}/documents.parquet")
-    docs = (
-        spark.readStream.schema(batch_schema)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-    )
-    media = attach_synthetic_media(docs).where(F.col("media_type") == "audio/wav")
-    return audio_fingerprints(media).groupBy("afp").agg(
-        F.count(F.lit(1)).cast("long").alias("n_clips"),
-        F.min("media_id").alias("rep_id"),
-    )
+    return audio_fingerprint_groups(_table_stream(spark, sf_dir, "documents"))
 
 
 def stream_countmin_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -456,14 +350,10 @@ def stream_countmin_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation over raw increments (no per-key pre-count, which
     chained streaming aggs would forbid anyway).  The stream≡batch
     test pins grid equality cell by cell."""
-    from i3cols_spark.operators.aggregates import _CMS_DEPTH, cms_bucket
+    from i3cols_spark.operators.aggregates import cms_cells
 
-    ev = _event_stream(spark, sf_dir)
-    hashed = ev.select(
-        "user_id",
-        F.explode(F.array([F.lit(d) for d in range(_CMS_DEPTH)])).alias("d"),
-    ).select("d", cms_bucket(F.col("user_id"), F.col("d")).alias("bucket"))
-    return hashed.groupBy("d", "bucket").agg(F.count(F.lit(1)).alias("bsum"))
+    keys = _table_stream(spark, sf_dir, "events").select("user_id")
+    return cms_cells(keys).groupBy("d", "bucket").agg(F.count(F.lit(1)).alias("bsum"))
 
 
 def stream_histogram_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -477,42 +367,20 @@ def stream_histogram_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell-wise addition, so the stream needs ONE complete-mode
     aggregation over raw rows; the stream≡batch test pins grid
     equality cell by cell."""
-    from i3cols_spark.operators.aggregates import _HIST_BINS
+    from i3cols_spark.operators.aggregates import hist_cells, hist_extrema
 
-    configure(spark)
-    mn, mx = (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
-        .agg(F.min("o_totalprice"), F.max("o_totalprice"))
-        .first()
-    )
-    # Geometry guards (ADVICE r07): an empty table has no extrema to
-    # pin edges from — fail loudly before the stream starts; a
-    # constant-valued column degrades to a single bin (width 1.0 maps
-    # every value to bin 0) instead of dividing by zero.
-    if mn is None or mx is None:
+    ext = hist_extrema(table(spark, sf_dir, "orders")).first()
+    # Geometry guard (ADVICE r07): an empty table has no extrema to
+    # pin edges from — fail loudly before the stream starts.
+    if ext["mn"] is None or ext["mx"] is None:
         raise ValueError(
             "stream_histogram_grid: orders.o_totalprice is empty — "
             "no extrema to pin the histogram geometry from"
         )
-    width = (mx - mn) / float(_HIST_BINS) if mx > mn else 1.0
-    batch_schema = table_schema(spark, f"{sf_dir}/orders.parquet")
-    stream = (
-        spark.readStream.schema(batch_schema)
-        .format("parquet")
-        .option("pathGlobFilter", "orders.parquet")
-        .load(sf_dir)
-    )
-    return (
-        stream.select(
-            F.least(
-                F.lit(_HIST_BINS - 1),
-                F.floor((F.col("o_totalprice") - F.lit(mn)) / F.lit(width)),
-            )
-            .cast("bigint")
-            .alias("bin")
+    return hist_cells(
+        _table_stream(spark, sf_dir, "orders").select(
+            "o_totalprice", F.lit(ext["mn"]).alias("mn"), F.lit(ext["mx"]).alias("mx")
         )
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
@@ -530,35 +398,14 @@ def stream_dp_class_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     MECHANISM TEST VECTOR, not a private release: no secret seed is
     mixed in (ADVICE r07) — a production release passes
     ``secret=<config value>`` to dp_laplace_noise."""
-    from i3cols_spark.functions.rounding import round_half_up
-    from i3cols_spark.operators.quality import dp_laplace_noise
+    from i3cols_spark.operators.quality import dp_classes, dp_release
 
-    configure(spark)
-    nat = table(spark, sf_dir, "nation")
-    batch_schema = table_schema(spark, f"{sf_dir}/customer.parquet")
-    stream = (
-        spark.readStream.schema(batch_schema)
-        .format("parquet")
-        .option("pathGlobFilter", "customer.parquet")
-        .load(sf_dir)
+    classes = dp_classes(
+        _table_stream(spark, sf_dir, "customer"), table(spark, sf_dir, "nation")
     )
-    classes = (
-        stream.join(F.broadcast(nat), stream.c_nationkey == nat.n_nationkey)
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.col("c_mktsegment").alias("segment"),
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("true_count"))
-    )
-    key = F.concat_ws("|", "nation", "segment", F.lit("0.5"))
-    return classes.select(
-        "nation",
-        "segment",
-        "true_count",
-        round_half_up(
-            F.col("true_count") + dp_laplace_noise(key, F.lit(0.5)), 6
-        ).alias("noisy_count"),
-    )
+    return dp_release(
+        classes.select("*", F.lit("0.5").alias("eps_label"), F.lit(0.5).alias("eps"))
+    ).select("nation", "segment", "true_count", "noisy_count")
 
 
 def stream_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -569,20 +416,9 @@ def stream_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     for shards; the stream≡batch test pins register equality, the
     distinct-count-over-a-stream primitive with O(m) state where
     dropDuplicates state grows with keys."""
-    from i3cols_spark.operators.aggregates import _HLL_REM_BITS
+    from i3cols_spark.operators.aggregates import hll_hashes, hll_registers
 
-    ev = _event_stream(spark, sf_dir)
-    h32 = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
-    parts = ev.select(
-        F.shiftright(h32, _HLL_REM_BITS).alias("bucket"),
-        F.pmod(h32, F.lit(2**_HLL_REM_BITS)).alias("w"),
-    )
-    rank = F.when(F.col("w") == 0, F.lit(_HLL_REM_BITS + 1)).otherwise(
-        F.lit(_HLL_REM_BITS) - F.length(F.bin(F.col("w"))) + 1
-    )
-    return parts.groupBy("bucket").agg(F.max(rank).alias("m_rank"))
+    return hll_registers(hll_hashes(_table_stream(spark, sf_dir, "events")))
 
 
 def stream_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -598,30 +434,11 @@ def stream_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid-stream.  With a fixed anchor the per-row decayed value is a
     pure map, so micro-batch partials merge by plain summation and
     the stream≡batch test pins score equality user by user."""
-    from i3cols_spark.functions.rounding import round_half_up
-    from i3cols_spark.operators.pipeline import _DECAY_LAMBDA
+    from i3cols_spark.operators.pipeline import decay_anchor, decayed_scores
 
-    configure(spark)
-    anchor_us = (
-        normalize_events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
-        .agg(F.unix_micros(F.max("ts")))
-        .first()[0]
-    )
+    anchor_us = decay_anchor(table(spark, sf_dir, "events")).first()["max_us"]
     if anchor_us is None:
         raise ValueError(
             "stream_time_decay: events is empty — no anchor timestamp"
         )
-    stream = _event_stream(spark, sf_dir)
-    dv = F.col("value") * F.exp(
-        F.lit(-_DECAY_LAMBDA)
-        * (F.lit(anchor_us) - F.unix_micros(F.col("ts")))
-        / F.lit(86400000000.0)
-    )
-    return (
-        stream.select("user_id", dv.alias("dv"))
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            round_half_up(F.sum("dv"), 6).alias("decayed_value"),
-        )
-    )
+    return decayed_scores(_table_stream(spark, sf_dir, "events"), F.lit(anchor_us))

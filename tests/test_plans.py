@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from i3cols_spark.operators import QUERIES
@@ -245,6 +246,32 @@ def test_stream_join_batch_twin_is_keyed_not_cartesian(spark, sf_dir):
     plan = explain_str(QUERIES["q_stream_join"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+@pytest.mark.parametrize(
+    "batch_name,stream_job",
+    [
+        ("q_stream_tumbling", "stream_tumbling_counts"),
+        ("q_stream_sliding", "stream_sliding_counts"),
+        ("q_stream_session", "stream_session_windows"),
+        ("q_stream_join", "stream_view_purchase_join"),
+        ("q_ts_ohlc", "stream_ohlc_bars"),
+    ],
+)
+def test_shared_frame_watermark_is_stream_only(spark, sf_dir, batch_name, stream_job):
+    """The stream/batch twins share one frame that applies the
+    watermark; the streaming plan keeps it and the batch plan must not
+    (Spark's analyzer removes it), so the batch twin carries no
+    streaming-only node."""
+    from i3cols_spark.streaming import jobs
+
+    def plan(df, phase):
+        return getattr(df._jdf.queryExecution(), phase)().toString()
+
+    stream = getattr(jobs, stream_job)(spark, sf_dir)
+    assert "EventTimeWatermark" in plan(stream, "analyzed")
+    batch = QUERIES[batch_name](spark, sf_dir)
+    assert "EventTimeWatermark" not in plan(batch, "optimizedPlan")
 
 
 def test_stratified_sample_is_shuffle_free_scan_filter(spark, sf_dir):

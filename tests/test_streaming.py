@@ -37,6 +37,40 @@ def test_stream_equals_batch(spark, sf_dir, stream_fn, batch_name):
     assert _rows(streamed) == _rows(batch)
 
 
+@pytest.fixture(scope="module")
+def drifted_sf_dir(sf_dir, tmp_path_factory):
+    """A copy of the fixture tables, each with one extra column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from i3cols_spark.sources.tables import TABLES
+
+    out = tmp_path_factory.mktemp("drifted")
+    for name in TABLES:
+        t = pq.read_table(f"{sf_dir}/{name}.parquet")
+        t = t.append_column("extra", pa.array([0] * t.num_rows, pa.int64()))
+        pq.write_table(t, str(out / f"{name}.parquet"))
+    return str(out)
+
+
+STREAM_JOBS = sorted(
+    name
+    for name, fn in vars(jobs).items()
+    if name.startswith("stream_") and getattr(fn, "__module__", None) == jobs.__name__
+)
+
+
+@pytest.mark.parametrize("job", STREAM_JOBS)
+def test_stream_job_checks_fixture_schema(spark, drifted_sf_dir, job):
+    """Every stream source and static snapshot is checked against
+    FIXTURE_SCHEMAS: a drifted table raises before any stream starts."""
+    from i3cols_spark.sources.tables import SchemaDriftError
+
+    with pytest.raises(SchemaDriftError, match="unexpected column 'extra'"):
+        getattr(jobs, job)(spark, drifted_sf_dir)
+    assert not spark.streams.active
+
+
 def test_stream_dedup_within_watermark(spark, sf_dir):
     """Append-mode dedup: one row per (user_id, event_type); with all
     data in one availableNow batch the kept event is the first by
@@ -488,13 +522,20 @@ def test_stream_histogram_grid_degenerate_geometry(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    def orders(prices):
+        n = len(prices)
+        return pa.table({
+            "o_orderkey": pa.array(range(1, n + 1), pa.int64()),
+            "o_custkey": pa.array([1] * n, pa.int64()),
+            "o_orderstatus": pa.array(["O"] * n, pa.string()),
+            "o_totalprice": pa.array(prices, pa.float64()),
+            "o_orderdate": pa.array([0] * n, pa.timestamp("us")),
+            "o_orderpriority": pa.array(["1-URGENT"] * n, pa.string()),
+        })
+
     const_dir = str(tmp_path / "const")
     (tmp_path / "const").mkdir()
-    pq.write_table(
-        pa.table({"o_orderkey": pa.array([1], pa.int64()),
-                  "o_totalprice": pa.array([42.0], pa.float64())}),
-        f"{const_dir}/orders.parquet",
-    )
+    pq.write_table(orders([42.0]), f"{const_dir}/orders.parquet")
     sdf = jobs.stream_histogram_grid(spark, const_dir)
     q = (
         sdf.writeStream.format("memory")
@@ -509,11 +550,7 @@ def test_stream_histogram_grid_degenerate_geometry(spark, tmp_path):
 
     empty_dir = str(tmp_path / "empty")
     (tmp_path / "empty").mkdir()
-    pq.write_table(
-        pa.table({"o_orderkey": pa.array([], pa.int64()),
-                  "o_totalprice": pa.array([], pa.float64())}),
-        f"{empty_dir}/orders.parquet",
-    )
+    pq.write_table(orders([]), f"{empty_dir}/orders.parquet")
     with pytest.raises(ValueError, match="o_totalprice is empty"):
         jobs.stream_histogram_grid(spark, empty_dir)
 
