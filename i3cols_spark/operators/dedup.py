@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.storagelevel import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -27,7 +26,7 @@ from i3cols_spark.functions.arrays import pair_structs as _pair_structs
 from i3cols_spark.functions.text import normalize, shingle_hashes, tokens
 from i3cols_spark.functions.vectors import as_double
 from i3cols_spark.operators.registry import query
-from i3cols_spark.sources.tables import spread, table
+from i3cols_spark.sources.tables import materialize, spread, table
 
 
 @query(
@@ -71,8 +70,8 @@ def _minhash_rep_graph(
     plan rationale (collapse-first, single-exchange signature,
     bucket-expand instead of self-join).
 
-    ``materialize_grp``: localCheckpoint the collapse groupBy before
-    fanning out.  Pass True ONLY from callers that consume grp /
+    ``materialize_grp``: ``materialize`` the collapse groupBy (lazily)
+    before fanning out.  Pass True ONLY from callers that consume grp /
     rep_pairs across SEPARATE JOBS (the connected-components callers:
     CC's edge checkpoint, its label checkpoint, and the final member
     join each run their own action, so Catalyst's ReuseExchange —
@@ -100,7 +99,7 @@ def _minhash_rep_graph(
         # One |distinct-texts|-sized materialization; every downstream
         # job (signature pipeline, CC checkpoints, member join) reads
         # it instead of re-running the corpus scan + collapse.
-        grp = grp.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        grp = materialize(grp, lazy=True)
     docs = grp.select(F.col("rep").alias("doc_id"), shingle_hashes("text").alias("sh"))
     # Signature via explode → hash-aggregate with 32 min() accumulators:
     # map-side partial aggregation does the min-reduce before the
@@ -312,15 +311,9 @@ def q_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the whole signature/banding/verify subtree executed twice in the
     # final plan (r12 stage audit: duplicated ~8 s + ~3 s stage pairs).
     # The rep-level pair list is |verified pairs| rows of two ids + a
-    # double — metadata-sized — so one lazy DISK_ONLY checkpoint
-    # collapses the second execution.  (Cluster-mode caveat: a
-    # localCheckpoint truncates lineage, so blocks lost to executor
-    # failure abort the job instead of recomputing; a production
-    # deployment that needs fault tolerance for this intermediate
-    # would use a reliable checkpoint or persist() instead.)
-    rep_pairs = rep_pairs.localCheckpoint(
-        eager=False, storageLevel=StorageLevel.DISK_ONLY
-    )
+    # double — metadata-sized — so one lazy materialization collapses
+    # the second execution.
+    rep_pairs = materialize(rep_pairs, lazy=True)
     docs = table(spark, sf_dir, "documents")
 
     # Truth: exact Jaccard ≥ 0.5 over distinct-text REPS via the
@@ -354,7 +347,7 @@ def q_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(sizes.select(F.col("rep").alias("rep_a"), F.col("sz").alias("sz_a")), "rep_a")
         .join(sizes.select(F.col("rep").alias("rep_b"), F.col("sz").alias("sz_b")), "rep_b")
         .select("rep_a", "rep_b", "j", (F.col("sz_a") * F.col("sz_b")).alias("w"))
-        .localCheckpoint()
+        .transform(materialize)
     )
 
     n_docs = docs.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
@@ -693,7 +686,7 @@ def q_dedup_minhash_cluster_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from i3cols_spark.operators.graph import connected_components
 
-    xx = minhash_cluster_members(spark, sf_dir).localCheckpoint()
+    xx = materialize(minhash_cluster_members(spark, sf_dir))
     grp, _ = _minhash_rep_graph(spark, sf_dir, materialize_grp=True)
 
     # Truth: exact j >= 0.5 rep pairs via the inverted index, closed
@@ -737,7 +730,7 @@ def q_dedup_minhash_cluster_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
         grp.select("rep", F.explode("ids").alias("doc_id"))
         .join(tcomp, F.col("rep") == F.col("id"))
         .select("doc_id", F.col("comp").alias("tcomp"))
-        .localCheckpoint()
+        .transform(materialize)
     )
 
     n_docs = (
@@ -901,11 +894,11 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # text-hash subtrees re-ran per branch (r12 stage audit: six
     # 11-18 s stages of the same subtree; ReuseExchange cannot share
     # across jobs).  Both frames are narrow per-doc rows.
-    sk = simhash_sketches(spark, sf_dir).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    sk = materialize(simhash_sketches(spark, sf_dir), lazy=True)
     docs0 = spread(table(spark, sf_dir, "documents"), spark)
     ids = docs0.select(
         "doc_id", F.xxhash64(normalize("text")).alias("th")
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    ).transform(materialize, lazy=True)
 
     n_docs = docs0.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
     dgrp = ids.groupBy("th").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
@@ -987,7 +980,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The truth side's (rep, tok, c) table feeds THREE consumers
     # (norms + both dot-product join sides); its exchanges are shared
-    # by AQE stage reuse.  A lazy localCheckpoint here was tried (r12)
+    # by AQE stage reuse.  A lazy checkpoint here was tried (r12)
     # and REVERTED — measured slower at sf0.1 (checkpoint write/read
     # of the |distinct texts|×|tokens| table beats nothing, since the
     # post-shuffle aggregate is all the consumers re-run), same
@@ -1064,8 +1057,8 @@ def _ngram_rep_graph(
     plan rationale (collapse-first, ReuseExchange single evaluation of
     shingle_hashes, |union| from ridden-along sizes).
 
-    ``materialize_grp``: localCheckpoint the collapsed+shingled groups
-    before fan-out — True only for the connected-components callers,
+    ``materialize_grp``: ``materialize`` the collapsed+shingled groups
+    (lazily) before fan-out — True only for the connected-components callers,
     whose consumers run in separate jobs ReuseExchange cannot share
     across (see _minhash_rep_graph for the full rationale)."""
     docs0 = spread(table(spark, sf_dir, "documents"), spark)
@@ -1079,7 +1072,7 @@ def _ngram_rep_graph(
         .select("lang", "rep", "ids", shingle_hashes("text").alias("sh"))
     )
     if materialize_grp:
-        grp = grp.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        grp = materialize(grp, lazy=True)
     # Per-rep shingle count rides ALONG the exploded rows instead of
     # being a separate `grp` consumer: the expensive shingle_hashes
     # projection then has exactly ONE evaluation site — the self-join
@@ -1249,7 +1242,7 @@ def q_dedup_ngram_cluster_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the shared collapse-first inverted-index engine
     (_ngram_rep_graph) emits rep-level edges; hook+pointer-jump
     connected components (operators/graph.py — O(log n) rounds, edges
-    localCheckpointed once) label each representative with its
+    materialised once) label each representative with its
     cluster min; exact-dup members inherit their rep's label through
     one explode join.  Cluster ids equal min member doc_id because
     reps are already their group minima.  No intra-group pair
@@ -1769,7 +1762,7 @@ def q_dedup_embedding_cluster_rep(spark: SparkSession, sf_dir: str) -> DataFrame
     pairs = (
         blocked_pair_sims(emb, threshold=0.35)
         .select("a_id", "b_id")
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        .transform(materialize, lazy=True)
     )
     nodes = (
         pairs.select(F.col("a_id").alias("id"))
@@ -2096,7 +2089,7 @@ def q_dedup_minhash_cluster_rep_verified(spark: SparkSession, sf_dir: str) -> Da
     pairs = (
         q_dedup_minhash_lsh_verified(spark, sf_dir)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        .transform(materialize, lazy=True)
     )
     nodes = (
         pairs.select(F.col("doc_a").alias("id"))
@@ -2228,7 +2221,7 @@ def q_dedup_simhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(table(spark, sf_dir, "documents"), spark)
     # d feeds BOTH the vote chain and the (th, rep) signature join;
     # its collapse exchange is shared by AQE stage reuse.  A lazy
-    # localCheckpoint here was tried (r12) and REVERTED: planning the
+    # checkpoint here was tried (r12) and REVERTED: planning the
     # consumers over the LogicalRDD leaf blew up Catalyst constraint
     # propagation on the driver (OOM in QueryPlanConstraints under a
     # vanilla 1 GiB session — the driver-sim sweep crashed at this
@@ -2327,7 +2320,7 @@ def q_dedup_simhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signature table had SIX consumers in one plan; the explode form
     # leaves three (banding, verify-a, verify-b), all hanging off
     # exchanges AQE stage reuse shares (values unchanged: same (rep,
-    # band, bucket) rows, same verify joins).  A lazy localCheckpoint
+    # band, bucket) rows, same verify joins).  A lazy checkpoint
     # of sig was tried (r12) and REVERTED — Catalyst
     # constraint-propagation OOM on a vanilla 1 GiB driver (see the
     # collapse note above), and no faster than stage reuse.
@@ -2469,7 +2462,7 @@ def _lsh_md5_rep_parts(spark: SparkSession, sf_dir: str):
     # ReuseExchange to share — each consumer re-ran it (r12 stage
     # audit).  |distinct texts| rows of one hash set + 8 digest
     # strings: collapse-bounded, never corpus-sized.
-    hs = hs.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    hs = materialize(hs, lazy=True)
     keyed = None
     for b in range(4):
         part = hs.select(
@@ -2590,10 +2583,9 @@ def q_dedup_lsh_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truth and cand each feed a bare count AND the hits join, both
     # via broadcast — no shared exchange, so the inverted-index truth
     # join resp. the banding pipeline executed twice (r12 stage
-    # audit).  Both are pair-id tables (two longs per row): lazy
-    # DISK_ONLY materialization is metadata-cheap.
-    truth = truth.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    cand = cand.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    # audit).  Both are pair-id tables (two longs per row).
+    truth = materialize(truth, lazy=True)
+    cand = materialize(cand, lazy=True)
     hits = truth.join(cand, ["doc_a", "doc_b"])
     n_truth = truth.agg(F.count(F.lit(1)).cast("long").alias("n_truth"))
     n_cand = cand.agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))

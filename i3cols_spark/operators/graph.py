@@ -19,21 +19,25 @@ Plain neighbor-min propagation alone needs O(diameter) rounds — dup
 chains in a crawl corpus can be long.  The shortcut step halves label
 paths each round, giving O(log n) rounds on any topology.  Each round
 is two keyed shuffles over (nodes + edges) — no per-round growth —
-and ``localCheckpoint`` truncates the lineage so round k's plan does
+and ``materialize`` truncates the lineage so round k's plan does
 not replay rounds 1..k-1.  Convergence is an exact fixpoint check
 (count of changed labels), one lightweight action per round.
 """
 
 from __future__ import annotations
 
-from pyspark.storagelevel import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from i3cols_spark.functions.vectors import as_double
 from i3cols_spark.operators.registry import query
 from i3cols_spark.operators.similarity import rep_pair_sims
-from i3cols_spark.sources.tables import table
+from i3cols_spark.sources.tables import materialize, table
+
+#: Supplier node ids are ``l_suppkey + _SUPP_OFFSET`` (2^40) in every
+#: trading-graph query, disjoint from customer keys at any plausible
+#: scale factor.  The oracles spell it 1099511627776.
+_SUPP_OFFSET = 1 << 40
 
 
 def connected_components(
@@ -63,7 +67,7 @@ def connected_components(
     # symmetrizing — a union of two selects over the input computes
     # the upstream plan once per branch (the pair GEMM ran twice);
     # flipping the checkpointed frame is a narrow re-read.
-    one = edges.select("a", "b").localCheckpoint()
+    one = materialize(edges.select("a", "b"))
     sym = one.union(one.select(F.col("b").alias("a"), F.col("a").alias("b")))
     # Size the loop's parallelism to the MATERIALIZED graph, not the
     # session default: the checkpoint inherits the upstream plan's
@@ -84,7 +88,7 @@ def connected_components(
     labels = (
         nodes.select("id", F.col("id").alias("comp"))
         .coalesce(p)
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        .transform(materialize, lazy=True)
     )
 
     # Scope shuffle.partitions to the graph-sized ``p`` for the loop's
@@ -167,7 +171,7 @@ def _cc_loop(sym: DataFrame, labels: DataFrame, p: int, max_iter: int) -> DataFr
                 F.coalesce("p_comp", "comp").alias("comp"),
             )
             .coalesce(p)
-            .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+            .transform(materialize, lazy=True)
         )
         labels = nxt.select("id", "comp")
         if (it + 1) % check_every == 0 or it == max_iter - 1:
@@ -413,8 +417,8 @@ def q_graph_pagerank(spark, sf_dir: str) -> DataFrame:
     hash-partitioning on the join key carries through both
     iterations, so each round is one shuffle of |E| contribution
     rows.  Unrolled to a fixed 2 iterations to stay SQL-expressible
-    for the oracle; the open-ended fixpoint form reuses the
-    localCheckpoint loop machinery of ``_cc_loop`` (this file).
+    for the oracle; the open-ended fixpoint form would ``materialize``
+    each round's ranks.
     Cross-engine FP discipline: per-node contribution sums are
     order-nondeterministic, so iteration 1 rounds at 12 dp and the
     final rank at 6 dp in BOTH engines — rounding between iterations
@@ -426,7 +430,7 @@ def q_graph_pagerank(spark, sf_dir: str) -> DataFrame:
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(
             F.col("o_custkey").alias("cust"),
-            (F.col("l_suppkey") + (1 << 40)).alias("supp"),
+            (F.col("l_suppkey") + _SUPP_OFFSET).alias("supp"),
         )
         .distinct()
     )
@@ -483,7 +487,7 @@ def _copurchase_triangle_counts(spark, sf_dir: str):
         # |E| rows feed FIVE downstream consumers (two degree scans,
         # the orientation join, both wedge sides via oriented) — without
         # truncation Catalyst replays the distinct self-join for each.
-        .localCheckpoint()
+        .transform(materialize)
     )
     deg = (
         und.select(F.col("u").alias("node"))
@@ -519,7 +523,7 @@ def _copurchase_triangle_counts(spark, sf_dir: str):
         F.when(lt, F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(lt, F.col("v")).otherwise(F.col("u")).alias("dst"),
         F.when(lt, F.col("dv")).otherwise(F.col("du")).alias("dd"),
-    ).localCheckpoint()  # consumed 3× (both wedge sides + the closing join)
+    ).transform(materialize)  # consumed 3× (both wedge sides + the closing join)
     wedges = (
         oriented.alias("e1")
         .join(
@@ -1087,6 +1091,30 @@ def q_basket_assoc_rules_rel(spark, sf_dir: str) -> DataFrame:
     )
 
 
+def _trading_edges(spark, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The customer↔supplier trading graph shared by BFS and LPA:
+    ``pairs`` = distinct (cust, supp) from orders ⋈ lineitem, supplier
+    ids offset by ``_SUPP_OFFSET``; ``edges`` = (src, dst) in both
+    directions, materialised lazily because every round reads it."""
+    orders = table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("ok"), F.col("o_custkey").alias("cust")
+    )
+    li = table(spark, sf_dir, "lineitem").select(
+        F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("supp")
+    )
+    pairs = (
+        orders.join(li, "ok")
+        .select("cust", (F.col("supp") + _SUPP_OFFSET).alias("supp"))
+        .distinct()
+    )
+    edges = materialize(
+        pairs.select(F.col("cust").alias("src"), F.col("supp").alias("dst"))
+        .union(pairs.select(F.col("supp").alias("src"), F.col("cust").alias("dst"))),
+        lazy=True,
+    )
+    return pairs, edges
+
+
 #: Hop bound for q_graph_bfs_levels — covers the full trading-graph
 #: reach from the seed at fixture scale (level 3 still finds new
 #: suppliers) while keeping the oracle's recursive CTE bounded.
@@ -1134,28 +1162,12 @@ def q_graph_bfs_levels(spark, sf_dir: str) -> DataFrame:
     frontier, anti-join against the visited set so no node is
     re-expanded — per-round shuffle is |frontier expansion|, and the
     visited set grows monotonically to |reachable| exactly once.
-    Each frontier is lazily localCheckpointed (the _cc_loop
-    discipline): it is consumed twice (union + next hop) and the
-    plan would otherwise double per level.  At 100 TB the loop is
-    driver-side only in its CONTROL (a fixed hop bound, no
-    per-round count job); all data stays distributed.
+    Each frontier is lazily ``materialize``d: it is consumed twice
+    (union + next hop) and the plan would otherwise double per level.
+    At 100 TB the loop is driver-side only in its CONTROL (a fixed hop
+    bound, no per-round count job); all data stays distributed.
     """
-    orders = table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("ok"), F.col("o_custkey").alias("cust")
-    )
-    li = table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("supp")
-    )
-    pairs = (
-        orders.join(li, "ok")
-        .select("cust", (F.col("supp") + F.lit(1099511627776)).alias("supp"))
-        .distinct()
-    )
-    edges = (
-        pairs.select(F.col("cust").alias("src"), F.col("supp").alias("dst"))
-        .union(pairs.select(F.col("supp").alias("src"), F.col("cust").alias("dst")))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    )
+    pairs, edges = _trading_edges(spark, sf_dir)
     visited = pairs.agg(F.min("cust").alias("node")).select(
         "node", F.lit(0).cast("long").alias("level")
     )
@@ -1167,7 +1179,7 @@ def q_graph_bfs_levels(spark, sf_dir: str) -> DataFrame:
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .select("node", F.lit(lvl).cast("long").alias("level"))
-            .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+            .transform(materialize, lazy=True)
         )
         visited = visited.union(nxt)
         frontier = nxt.select("node")
@@ -1180,7 +1192,7 @@ def _sssp_relax(frontier: DataFrame, edges: DataFrame) -> DataFrame:
     (partial+final hash aggregate, so per-task output ≤ |touched
     nodes| before the shuffle).  Factored out so the per-round plan
     is testable — inside q_graph_sssp every round's result is
-    localCheckpointed, which makes the loop's joins invisible in the
+    ``materialize``d, which makes the loop's joins invisible in the
     final explain."""
     return (
         frontier.join(edges, frontier.node == edges.src)
@@ -1245,11 +1257,11 @@ def q_graph_sssp(spark, sf_dir: str) -> DataFrame:
     list, min-combines candidates into the running distance map, and
     the new frontier is the anti-joined improvement set — per-round
     shuffle is |improvements|, not |graph|, the same frontier-sized
-    property as BFS.  Each round's map is lazily localCheckpointed
-    (the _cc_loop discipline: it feeds both the next relaxation and
-    the final answer, and the lineage would otherwise double per
-    hop).  Loop control is driver-side ONLY in the fixed hop bound —
-    no per-round count job; all data stays distributed.  At 100 TB:
+    property as BFS.  Each round's map is lazily ``materialize``d (it
+    feeds both the next relaxation and the final answer, and the
+    lineage would otherwise double per hop).  Loop control is
+    driver-side ONLY in the fixed hop bound — no per-round count job;
+    all data stays distributed.  At 100 TB:
     rounds = the hop horizon, per-round cost frontier ⋈ edges hash
     join on the reused node key.
     """
@@ -1262,7 +1274,7 @@ def q_graph_sssp(spark, sf_dir: str) -> DataFrame:
     pairs = (
         orders.join(li, "ok")
         .groupBy(
-            "cust", (F.col("supp") + F.lit(1099511627776)).alias("supp")
+            "cust", (F.col("supp") + _SUPP_OFFSET).alias("supp")
         )
         .agg(F.count(F.lit(1)).alias("n_links"))
     )
@@ -1278,12 +1290,12 @@ def q_graph_sssp(spark, sf_dir: str) -> DataFrame:
                 w.alias("w"),
             )
         )
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        .transform(materialize, lazy=True)
     )
     dist = (
         pairs.agg(F.min("cust").alias("node"))
         .select("node", F.lit(0).cast("long").alias("d"))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        .transform(materialize, lazy=True)
     )
     frontier = dist
     for _ in range(_SSSP_HOPS):
@@ -1292,11 +1304,9 @@ def q_graph_sssp(spark, sf_dir: str) -> DataFrame:
             dist.union(cand)
             .groupBy("node")
             .agg(F.min("d").alias("d"))
-            .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+            .transform(materialize, lazy=True)
         )
-        frontier = merged.join(dist, ["node", "d"], "left_anti").localCheckpoint(
-            eager=False, storageLevel=StorageLevel.DISK_ONLY
-        )
+        frontier = materialize(merged.join(dist, ["node", "d"], "left_anti"), lazy=True)
         dist = merged
     return dist.select("node", F.col("d").alias("dist"))
 
@@ -1464,9 +1474,9 @@ def q_graph_kcore_peel(spark, sf_dir: str) -> DataFrame:
 
     Scale shape: each round is one map-side-combined degree aggregate
     over the surviving edges plus two semi-joins against the
-    survivor node set, with the edge set localCheckpointed per round
-    (the CC discipline — unbounded lineage is the real iterative-
-    algorithm killer); the trace rows are 5 scalars.
+    survivor node set, with the edge set ``materialize``d per round
+    (unbounded lineage is the real iterative-algorithm killer); the
+    trace rows are 5 scalars.
     """
     li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     op = li.distinct()
@@ -1479,7 +1489,7 @@ def q_graph_kcore_peel(spark, sf_dir: str) -> DataFrame:
         )
         .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
         .distinct()
-        .localCheckpoint()
+        .transform(materialize)
     )
     n0 = (
         e.select(F.col("u").alias("node"))
@@ -1500,7 +1510,7 @@ def q_graph_kcore_peel(spark, sf_dir: str) -> DataFrame:
             e.join(nodes.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(nodes.withColumnRenamed("node", "v"), "v", "left_semi")
             .select("u", "v")
-            .localCheckpoint()
+            .transform(materialize)
         )
         trace.append((r, nodes.count(), e.count()))
     return spark.createDataFrame(
@@ -1749,9 +1759,8 @@ def q_graph_hits(spark, sf_dir: str) -> DataFrame:
     Shape per half-step: edges ⋈ current scores, map-side-combined
     sum per opposite endpoint — one |E|-row shuffle, the same
     hash-partitioning reused round to round; the max is a 1-row
-    broadcast.  The open-ended fixpoint form would reuse the
-    localCheckpoint loop of ``_cc_loop``; 2 rounds keeps the oracle
-    SQL-expressible.
+    broadcast.  The open-ended fixpoint form would ``materialize``
+    each round's scores; 2 rounds keeps the oracle SQL-expressible.
     """
     from i3cols_spark.functions.rounding import round_half_up
 
@@ -1764,7 +1773,7 @@ def q_graph_hits(spark, sf_dir: str) -> DataFrame:
         # |E| rows feed all four half-step joins plus the a1 degree
         # aggregate; without truncation each consumer re-runs the
         # orders⋈lineitem distinct (r12: 176-scan / 392-exchange plan).
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        .transform(materialize, lazy=True)
     )
 
     def normalize(raw: DataFrame, key: str, out: str, dp: int, exact: bool) -> DataFrame:
@@ -1772,9 +1781,8 @@ def q_graph_hits(spark, sf_dir: str) -> DataFrame:
         # and the crossJoin left side), so an untruncated `raw` doubles
         # its whole upstream subtree at every half-step — 2⁴ copies of
         # the edge build by h2 (the r12 plan-size audit).  A lazy
-        # |nodes|-row localCheckpoint per level keeps the plan linear;
-        # values are unchanged (same rows, same arithmetic).
-        raw = raw.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        # |nodes|-row cut per level keeps the plan linear.
+        raw = materialize(raw, lazy=True)
         mx = raw.agg(F.max("raw").alias("mx"))
         val = F.col("raw").cast("double") / F.col("mx")
         rounded = round_half_up(val, dp) if exact else F.round(val, dp)
@@ -1886,7 +1894,7 @@ def q_graph_modularity(spark, sf_dir: str) -> DataFrame:
         edges.join(F.broadcast(cust), edges.cust == cust.c_custkey)
         .join(F.broadcast(supp), edges.supp == supp.s_suppkey)
         .select(F.col("c_nationkey").alias("nc"), F.col("s_nationkey").alias("ns"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     m = lab.agg(F.count(F.lit(1)).cast("long").alias("m"))
     intra = (
@@ -1983,7 +1991,7 @@ def q_graph_degree_powerlaw(spark, sf_dir: str) -> DataFrame:
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .select(
             F.col("o_custkey").alias("cust"),
-            (F.col("l_suppkey") + (1 << 40)).alias("supp"),
+            (F.col("l_suppkey") + _SUPP_OFFSET).alias("supp"),
         )
         .distinct()
     )
@@ -2081,8 +2089,8 @@ def q_graph_label_propagation(spark, sf_dir: str) -> DataFrame:
     sort anywhere (the oracle spells the same argmax as row_number
     for SQL clarity; min-struct and rank-1 pick identical rows under
     the total (cnt DESC, label ASC) order).  Labels are
-    localCheckpointed per round (_cc_loop discipline) so round k's
-    plan does not replay rounds 1..k-1; per-round shuffle is bounded
+    ``materialize``d per round so round k's plan does not replay
+    rounds 1..k-1; per-round shuffle is bounded
     by |distinct (dst,label)| ≤ |E|, and rounds are a CONSTANT —
     driver-side control only, all data distributed.
     """
@@ -2093,30 +2101,15 @@ def q_graph_label_propagation(spark, sf_dir: str) -> DataFrame:
 
 
 def _lpa_engine(spark, sf_dir: str):
-    """Shared body of the LPA family: builds the directed trading-graph
-    edge list (checkpointed — every round and every composing caller
-    reads the materialization, not the orders⋈lineitem distinct) and
-    runs the _LPA_ROUNDS sync rounds.  Returns ``(edges, labels)`` so
+    """Shared body of the LPA family: takes the ``_trading_edges``
+    edge list (materialised — every round and every composing caller
+    reads it, not the orders⋈lineitem distinct) and runs the
+    _LPA_ROUNDS sync rounds.  Returns ``(edges, labels)`` so
     composing queries (q_graph_conductance) reuse BOTH the final
-    checkpointed labels and the SAME checkpointed edge list instead of
+    materialised labels and the SAME edge list instead of
     re-running the |E|-sized distinct build in their own jobs (r12
     stage audit: conductance executed the edge build twice)."""
-    orders = table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("ok"), F.col("o_custkey").alias("cust")
-    )
-    li = table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("supp")
-    )
-    pairs = (
-        orders.join(li, "ok")
-        .select("cust", (F.col("supp") + F.lit(1099511627776)).alias("supp"))
-        .distinct()
-    )
-    edges = (
-        pairs.select(F.col("cust").alias("src"), F.col("supp").alias("dst"))
-        .union(pairs.select(F.col("supp").alias("src"), F.col("cust").alias("dst")))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    )
+    _, edges = _trading_edges(spark, sf_dir)
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -2135,7 +2128,7 @@ def _lpa_engine(spark, sf_dir: str):
                     )
                 )["lb"].alias("label")
             )
-            .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+            .transform(materialize, lazy=True)
         )
     return edges, labels
 

@@ -11,13 +11,12 @@ better than the estimate (dimension tables → ``broadcast``, fact-fact
 
 from __future__ import annotations
 
-from pyspark.storagelevel import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from i3cols_spark.operators.registry import query
-from i3cols_spark.sources.tables import spread, table
+from i3cols_spark.sources.tables import materialize, spread, table
 
 
 @query(
@@ -742,7 +741,7 @@ def q_join_interval_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
       into the same day row, so every unordered pair is considered.
 
     Plan shape: ONE corpus-sized shuffle (the per-(priority, s, e)
-    count — map-side combinable, localCheckpointed and reused by all
+    count — map-side combinable, materialised and reused by all
     three consumers like q_text_bm25_search's tf), then every window
     and join runs on day-granular rows bounded by the calendar span —
     the whole tail is scale-FREE in the row count, and the 100×
@@ -783,7 +782,7 @@ def q_join_interval_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     sec = (
         iv.groupBy("priority", "s", "e")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint()  # consumed 3× (starts, ends, same-day top-2)
+        .transform(materialize)  # consumed 3× (starts, ends, same-day top-2)
     )
 
     # --- n_pairs: C(n,2) minus disjoint pairs, distribution path ----
@@ -1044,7 +1043,7 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.levenshtein("cn", "sn") <= 1),
         )
         .select("cust", "supp")
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        .transform(materialize, lazy=True)
     )
     edges = raw.select(F.col("cust").alias("a"), F.col("supp").alias("b"))
     nodes = (

@@ -30,7 +30,7 @@ from i3cols_spark.functions.multimodal import (
     extract_video_features,
 )
 from i3cols_spark.operators.registry import query
-from i3cols_spark.sources.tables import spread, table
+from i3cols_spark.sources.tables import materialize, spread, table
 
 
 @query(
@@ -696,7 +696,7 @@ def q_dedup_phash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = attach_synthetic_media(table(spark, sf_dir, "documents")).where(
         F.col("media_type") == "image/bmp"
     )
-    hashed = image_ahash(media).localCheckpoint()  # decode once, 2 join sides
+    hashed = materialize(image_ahash(media))  # decode once, 2 join sides
     bands = hashed.select(
         "media_id",
         "ahash",
@@ -805,7 +805,7 @@ def q_dedup_phash64_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = attach_synthetic_media(table(spark, sf_dir, "documents")).where(
         F.col("media_type") == "image/bmp"
     )
-    hashed = image_ahash64(media).localCheckpoint()  # decode once, 2 join sides
+    hashed = materialize(image_ahash64(media))  # decode once, 2 join sides
     band_structs = [
         F.struct(
             F.lit(i).alias("band_idx"),

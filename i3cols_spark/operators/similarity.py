@@ -22,13 +22,12 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from i3cols_spark.functions.arrays import pair_structs
 from i3cols_spark.functions.vectors import as_double, cosine, dot, lsh_bucket, norm_l2
 from i3cols_spark.operators.registry import query
 from i3cols_spark.sources.mirrors import dataset_tag, write_once
-from i3cols_spark.sources.tables import table
+from i3cols_spark.sources.tables import materialize, table
 
 #: Fixed random hyperplanes (seed 42) shared by the Spark plan and the
 #: SQL oracle; 6 dp literals parse to identical doubles in both engines.
@@ -801,7 +800,7 @@ def q_similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     side (exact global top-1 + in-cell top-5) is a test-SF audit a
     production run drops with the booleans.
     """
-    pq = ivfpq_topk(spark, sf_dir).localCheckpoint()
+    pq = materialize(ivfpq_topk(spark, sf_dir))
     emb = table(spark, sf_dir, "embeddings")
     qv = emb.filter(F.col("vec_id") == 0).select(
         as_double("embedding").alias("qv")
@@ -1666,9 +1665,9 @@ def q_similarity_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame
         # (4x "Scan parquet" in the r12 before-plan).  The table is
         # |probed-cells ∩ corpus| x |Q| rows of 4 scalars — bounded by
         # the audit's query sampling, never corpus-sized — so a lazy
-        # DISK_ONLY checkpoint is metadata-cheap and collapses the
-        # ladder to one candidate pass.
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        # materialization is metadata-cheap and collapses the ladder
+        # to one candidate pass.
+        .transform(materialize, lazy=True)
     )
     rank_win = W.partitionBy("qid").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     ivf_parts = None
@@ -2283,9 +2282,9 @@ def q_embedding_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     the updated centroids, and report per cluster the population
     before/after plus the centroid shift (the |c' − c| convergence
     signal a k-means driver loops on).  This is the iterative-ML
-    pattern at its purest: the open-ended loop would localCheckpoint
-    the assignment per round exactly like graph.py's ``_cc_loop``;
-    one unrolled round keeps the whole trajectory SQL-expressible.
+    pattern at its purest: the open-ended loop would ``materialize``
+    the assignment per round; one unrolled round keeps the whole
+    trajectory SQL-expressible.
 
     Shape per half-step: k-row centroid side broadcast into the scan,
     per-row argmin as ``min(struct(dist, cid))`` (map-side-combined
@@ -2322,7 +2321,7 @@ def q_embedding_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id", "v", F.col("best.cid").alias("cid"))
         )
 
-    m = assign(emb, cent, "cv").localCheckpoint()
+    m = materialize(assign(emb, cent, "cv"))
     nc = (
         m.select("cid", F.posexplode("v").alias("pos", "x"))
         .groupBy("cid", "pos")
@@ -2483,8 +2482,8 @@ def q_sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint loops): per round ONE argmax — an orderBy(desc d,
     id).limit(1), i.e. a TakeOrdered 1-row heap, never a window —
     then a 1-row broadcast updates the running min-distance column
-    and the frame localCheckpoints (the _cc_loop discipline; lineage
-    would otherwise deepen k-fold).  Cost: k corpus scans, each
+    and the frame is ``materialize``d (lineage would otherwise deepen
+    k-fold).  Cost: k corpus scans, each
     embarrassingly parallel.  Distances round 6 dp BEFORE every
     comparison (both dialects) so argmax ties break identically on
     vec_id.
@@ -2510,7 +2509,7 @@ def q_sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(seed))
         .select("vec_id", "v", dist_to("sv").alias("d"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     outs = []
     for r in range(1, _KCENTER_ROUNDS + 1):
@@ -2536,7 +2535,7 @@ def q_sample_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "v",
                     F.least(F.col("d"), dist_to("sv")).alias("d"),
                 )
-                .localCheckpoint()
+                .transform(materialize)
             )
     out = outs[0]
     for o in outs[1:]:
@@ -2662,7 +2661,7 @@ def q_similarity_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "v", F.round(cosine("v", "qv"), 6).alias("simq"))
         .orderBy(F.desc("simq"), F.asc("vec_id"))
         .limit(_MMR_CAND)
-        .localCheckpoint()
+        .transform(materialize)
     )
     a, b = cand.alias("a"), cand.alias("b")
     pairs = (
@@ -2672,7 +2671,7 @@ def q_similarity_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.vec_id").alias("ib"),
             F.round(cosine("a.v", "b.v"), 6).alias("s"),
         )
-        .localCheckpoint()
+        .transform(materialize)
     )
     sel = cand.orderBy(F.desc("simq"), F.asc("vec_id")).limit(1)
     outs = [

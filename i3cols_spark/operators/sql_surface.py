@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from i3cols_spark.operators.registry import query
-from i3cols_spark.sources.tables import table
+from i3cols_spark.sources.tables import materialize, table
 
 #: Pricing-date parameters sit inside the fixture's 1995-2001 span.
 _Q3_DATE = "1998-03-15"
@@ -560,14 +560,13 @@ def q_sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     # FIXED constant (ADVICE r09: a data-sized bound ran an eager
     # count() job inside the builder), and — ADVICE r10 — the raise is
     # SCOPED: the conf is read at execution time, so the recursion is
-    # materialized here via localCheckpoint() (the engine's standard
-    # eager-reuse primitive) and the session guard restored in a
-    # finally, leaving later statements under the default
-    # runaway-recursion protection.
+    # materialized here (eager ``materialize``) and the session guard
+    # restored in a finally, leaving later statements under the
+    # default runaway-recursion protection.
     prior = spark.conf.get("spark.sql.cteRecursionRowLimit", None)
     spark.conf.set("spark.sql.cteRecursionRowLimit", str(2_000_000_000))
     try:
-        return _recursive_walk_sql(spark).localCheckpoint()
+        return materialize(_recursive_walk_sql(spark))
     finally:
         if prior is None:
             spark.conf.unset("spark.sql.cteRecursionRowLimit")

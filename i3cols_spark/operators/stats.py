@@ -35,7 +35,7 @@ from pyspark.sql.window import Window
 
 from i3cols_spark.functions.rounding import round_half_up
 from i3cols_spark.operators.registry import query
-from i3cols_spark.sources.tables import spread, table
+from i3cols_spark.sources.tables import materialize, spread, table
 
 
 def knuth_u16(key: Column) -> Column:
@@ -2332,7 +2332,7 @@ def q_stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cells = li.groupBy("x", "y").agg(
         F.count(F.lit(1)).cast("long").alias("n")
-    ).localCheckpoint()
+    ).transform(materialize)
     a, b = cells.alias("a"), cells.alias("b")
     pairs = (
         a.join(
@@ -3447,7 +3447,7 @@ def q_ml_eval_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("s").cast("long").alias("sum_s"),
         F.sum("pos").cast("long").alias("n_pos"),
-    ).localCheckpoint()  # 10 rows, consumed 2x (ECE fold + final join)
+    ).transform(materialize)  # 10 rows, consumed 2x (ECE fold + final join)
     e = b.agg(
         F.sum(F.abs(F.col("sum_s") - 50 * F.col("n_pos")))
         .cast("long")
@@ -3557,7 +3557,7 @@ def q_ml_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cells = li.groupBy("t", "p").agg(
         F.count(F.lit(1)).cast("long").alias("c")
-    ).localCheckpoint()  # |classes|^2 rows, consumed 2x (row/col margins)
+    ).transform(materialize)  # |classes|^2 rows, consumed 2x (row/col margins)
     cls = cells.groupBy(F.col("t").alias("label")).agg(
         F.coalesce(F.sum(F.when(F.col("p") == F.col("t"), F.col("c"))), F.lit(0))
         .cast("long")
@@ -3806,7 +3806,7 @@ def q_ml_eval_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("sq"),
-    ).localCheckpoint()  # 50 rows, consumed 2x (totals + decomposition)
+    ).transform(materialize)  # 50 rows, consumed 2x (totals + decomposition)
     tot = g.agg(
         F.sum("n_s").cast("long").alias("n"),
         F.sum("pos_s").cast("long").alias("p"),
@@ -4088,7 +4088,7 @@ def q_stats_permutation_signflip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("day")
     ).agg(
         (cents("click") - cents("view")).alias("d_cents")
-    ).localCheckpoint()  # days-long, consumed 2x (observed + 199 flips)
+    ).transform(materialize)  # days-long, consumed 2x (observed + 199 flips)
     obs = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
         F.abs(F.sum("d_cents")).cast("long").alias("t_obs"),
@@ -4203,7 +4203,7 @@ def q_sample_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_docs") * F.col("sxx") - F.col("sx") * F.col("sx"))
             .cast("double")
         ).alias("ns"),
-    ).localCheckpoint()  # |langs| rows, consumed 2x (total + quotas)
+    ).transform(materialize)  # |langs| rows, consumed 2x (total + quotas)
     t = w.agg(F.sum("ns").alias("total_ns"))
     target = F.floor(1000 * F.col("ns") / F.col("total_ns") + 0.5)
     return (
@@ -4269,7 +4269,7 @@ def q_sample_apportion_lrm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     m = table(spark, sf_dir, "documents").groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")
-    ).localCheckpoint()  # |langs| rows, consumed 2x (total + shares)
+    ).transform(materialize)  # |langs| rows, consumed 2x (total + shares)
     t = m.agg(F.sum("n_docs").cast("long").alias("n"))
     q = m.crossJoin(F.broadcast(t)).select(
         "lang",

@@ -21,7 +21,7 @@ from i3cols_spark.functions.text import (
 )
 from i3cols_spark.functions.rounding import round_half_up
 from i3cols_spark.operators.registry import query
-from i3cols_spark.sources.tables import spread, table
+from i3cols_spark.sources.tables import materialize, spread, table
 
 
 @query(
@@ -1492,8 +1492,8 @@ def bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select("doc_id", F.explode(tokens("text")).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
-    ).localCheckpoint()
-    # |d| = Σ tf over the doc's terms — derived from the checkpointed
+    ).transform(materialize)
+    # |d| = Σ tf over the doc's terms — derived from the materialised
     # aggregate, NOT a second pass over the raw text.
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("len"))
     corpus = dl.agg(
@@ -1550,7 +1550,7 @@ def q_text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break so both engines cut the same list.
 
     Scale shape: ONE tokenize pass feeds ONE corpus-sized shuffle (the
-    tf groupBy), localCheckpointed and reused by all four consumers —
+    tf groupBy), materialised and reused by all four consumers —
     document length is Σtf per doc, df/qterms/corpus stats are
     vocabulary- or 1-row aggregates OF tf, and the per-doc score join
     touches only documents containing a query term (the
@@ -1575,10 +1575,12 @@ def q_text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: BPE learner knobs: merge rounds and the symbol-wrap marker (0x1f,
-#: a control char absent from the ASCII-printable fixture text).
+#: BPE learner knobs: merge rounds, the symbol-wrap marker (0x1f,
+#: a control char absent from the ASCII-printable fixture text), and
+#: how many rounds the word table's lineage may grow between cuts.
 _BPE_ROUNDS = 4
 _BPE_M = "\x1f"
+_BPE_CHECKPOINT_EVERY = 8
 
 
 def _bpe_learn_ctes(rounds: int) -> list[str]:
@@ -1658,7 +1660,6 @@ def bpe_learn(
     spark: SparkSession,
     docs: DataFrame,
     rounds: int,
-    checkpoint_every: int = 8,
 ) -> tuple[list[tuple], DataFrame]:
     """The shared BPE learner both query twins (and any caller that
     wants a real vocabulary) run: ``rounds`` greedy merge rounds over
@@ -1674,15 +1675,13 @@ def bpe_learn(
     WORD table, never the corpus (corpus size enters once, through
     the explode+count that builds w0).  Thousands of rounds are
     therefore thousands of vocabulary-sized jobs — the right shape
-    for iterative learning on a cluster, with two knobs that keep
+    for iterative learning on a cluster, with two guards that keep
     the loop healthy at depth:
 
-    * ``checkpoint_every``: the replace column composes lazily, so
-      the logical plan grows per round; every k-th round (and on
-      every round that COLLECTS, via the aggregate) the word table is
-      localCheckpointed to truncate lineage — the connected-components
-      loop's discipline.  k=8 keeps plan depth bounded without paying
-      a materialization per round.
+    * lineage: the replace column composes lazily, so the logical
+      plan grows per round; every ``_BPE_CHECKPOINT_EVERY``-th round
+      and the last one ``materialize`` the word table.  8 keeps plan
+      depth bounded without paying a materialization per round.
     * early exit: when no adjacent pair remains (every word fully
       merged), the loop stops — deeper budgets than the corpus
       supports terminate instead of crashing on an empty top-1.
@@ -1706,7 +1705,7 @@ def bpe_learn(
         ),
         "",
     )
-    w = words.select("word", "cnt", seq0.alias("seq")).localCheckpoint()
+    w = materialize(words.select("word", "cnt", seq0.alias("seq")))
     out_rows: list[tuple] = []
     for r in range(1, rounds + 1):
         syms = F.split(
@@ -1742,8 +1741,8 @@ def bpe_learn(
                 F.lit(m + best["s1"] + best["s2"] + m),
             ).alias("seq"),
         )
-        if r % checkpoint_every == 0 or r == rounds:
-            w = w.localCheckpoint()
+        if r % _BPE_CHECKPOINT_EVERY == 0 or r == rounds:
+            w = materialize(w)
     return out_rows, w
 
 
@@ -1939,7 +1938,7 @@ def q_text_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion).  df still counts member DOCUMENTS (Σ group size per
     term) so the weights are unchanged.  Then ONE shingle pass → tf
     groupBy over reps; the weighted posting table is
-    localCheckpointed (three consumers: norms + both self-join sides
+    materialised (three consumers: norms + both self-join sides
     — the q_text_bm25_search lineage lesson); rep pairs materialize
     only for reps sharing a capped term (inverted-index access,
     Σ_t C(df_t, 2) rows, 1.3 M at sf0.1); member expansion emits
@@ -1982,7 +1981,7 @@ def q_text_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * F.log(F.col("n_docs").cast("double") / F.col("df"))
             ).alias("w"),
         )
-        .localCheckpoint()
+        .transform(materialize)
     )
     norms = w.groupBy("rep").agg(
         F.round(F.sum(F.col("w") * F.col("w")), 9).alias("n2"),

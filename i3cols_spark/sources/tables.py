@@ -45,6 +45,7 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+from pyspark.storagelevel import StorageLevel
 
 from i3cols_spark.session import configure
 from i3cols_spark.sources.mirrors import data_fingerprint
@@ -296,3 +297,46 @@ def spread(df: DataFrame, spark: SparkSession, min_bytes: int = 256 << 10) -> Da
     if len(files) >= target or nbytes < min_bytes:
         return df
     return df.repartition(target)
+
+
+#: Spark job tag carried by every job a ``materialize`` call launches.
+MATERIALIZE_TAG = "i3cols.materialize"
+
+
+def materialize(df: DataFrame, *, lazy: bool = False) -> DataFrame:
+    """Cut ``df``'s lineage with a local checkpoint — the engine's one
+    materialisation site (the RDD paper's lineage truncation, for
+    frames a plan reads more than once and for loop state).
+
+    Both modes cut the logical plan at once; they differ in when the
+    data is written, and each call site keeps the mode it was
+    measured with.
+
+    * Eager (default): ``df.localCheckpoint()`` writes the frame now,
+      in Spark jobs of its own.  For frames that several later actions
+      or plans read.
+    * Lazy (``lazy=True``): the first action that reads the frame
+      writes it to local disk (``DISK_ONLY``).  For frames whose first
+      reader is an action that runs anyway (a loop's fixpoint count,
+      the query's own collect).  Under AQE, cutting the plan of a
+      frame with a shuffle still runs its shuffle map stages now;
+      a narrow frame launches no job.
+
+    Every job launched inside this call carries the job tag
+    ``MATERIALIZE_TAG``, so a materialisation job is told apart from
+    the query's action.
+
+    Cluster caveat: a local checkpoint keeps its blocks on the
+    executors and drops the lineage, so a lost executor fails the
+    job instead of recomputing; a deployment that needs fault
+    tolerance for these intermediates would change this one function
+    to a reliable checkpoint.
+    """
+    sc = df.sparkSession.sparkContext
+    sc.addJobTag(MATERIALIZE_TAG)
+    try:
+        if lazy:
+            return df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        return df.localCheckpoint()
+    finally:
+        sc.removeJobTag(MATERIALIZE_TAG)

@@ -854,6 +854,47 @@ def test_write_once_concurrent_builders_publish_one_build(spark, tmp_path):
     assert not glob.glob(out + ".tmp-*")
 
 
+def test_write_once_reclaims_dead_builders_siblings(spark, tmp_path):
+    """A build killed outright leaves its ``<out>.tmp-<pid>-<uuid>``
+    sibling behind; the next miss removes it once that pid is gone,
+    but never touches a sibling of a live process (here, this one) or
+    a legacy ``<out>.tmp-<uuid>`` name."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+    import uuid
+
+    from i3cols_spark.sources.mirrors import _warehouse_root, write_once
+
+    src = tmp_path / "src.parquet"
+    shutil.copy("/root/testdata/sf0.001/orders.parquet", src)
+    name = f"reclaim_{uuid.uuid4().hex[:8]}"
+    out = os.path.join(_warehouse_root(spark, "test_mirror"), name)
+    child = subprocess.Popen([sys.executable, "-c", ""])
+    assert child.wait(timeout=60) == 0
+    dead = f"{out}.tmp-{child.pid}-{uuid.uuid4().hex}"
+    live = f"{out}.tmp-{os.getpid()}-{uuid.uuid4().hex}"
+    legacy = f"{out}.tmp-{uuid.uuid4().hex}"
+    for d in (dead, live, legacy):
+        os.makedirs(d)
+        with open(os.path.join(d, "part-partial"), "w") as fh:
+            fh.write("partial")
+
+    def good(d: str) -> None:
+        os.makedirs(d)
+
+    try:
+        _, built = write_once(spark, "test_mirror", name, [str(src)], good, {"v": 1})
+        assert built
+        assert not os.path.exists(dead)
+        assert os.listdir(live) == ["part-partial"]
+        assert os.listdir(legacy) == ["part-partial"]
+    finally:
+        for d in (dead, live, legacy):
+            shutil.rmtree(d, ignore_errors=True)
+
+
 def test_knn_batch_tiles_bound_the_query_collect(spark, sf_dir, monkeypatch):
     """The batch-kNN query side must run as bounded tiles: forcing a
     tile size of 2 (fixture has 4 queries → 2 tiles, two corpus scans,
@@ -1628,3 +1669,89 @@ def test_simhash_verified_pins_verify_stage_width(spark, sf_dir):
     assert plan.count("REPARTITION_BY_NUM") >= 4, plan.count(
         "REPARTITION_BY_NUM"
     )
+
+
+def test_local_checkpoint_only_inside_materialize():
+    """Every lineage cut goes through ``sources.tables.materialize``:
+    no other code calls ``localCheckpoint`` and no other module
+    imports ``StorageLevel``, so the storage policy and the job tag
+    live in one place."""
+    import ast
+    import pathlib
+
+    import i3cols_spark
+
+    root = pathlib.Path(i3cols_spark.__file__).parent
+    calls, imports = [], set()
+
+    def scan(node: ast.AST, rel: str, fn: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                scan(child, rel, child.name)
+                continue
+            if isinstance(child, ast.Attribute) and child.attr == "localCheckpoint":
+                if (rel, fn) != ("sources/tables.py", "materialize"):
+                    calls.append(f"{rel}:{child.lineno} in {fn}")
+            if isinstance(child, (ast.Import, ast.ImportFrom)):
+                if any(a.name.split(".")[-1] == "StorageLevel" for a in child.names):
+                    imports.add(rel)
+            scan(child, rel, fn)
+
+    for path in sorted(root.rglob("*.py")):
+        scan(ast.parse(path.read_text()), path.relative_to(root).as_posix(), "<module>")
+    assert not calls, calls
+    assert imports == {"sources/tables.py"}, imports
+
+
+def test_materialize_tags_eager_jobs_and_lazy_defers(spark):
+    """Eager ``materialize`` launches its jobs now, every one tagged
+    ``i3cols.materialize``, and clears the tag afterwards — also when
+    the checkpoint raises.  Lazy launches nothing for a narrow frame
+    until the first action reads it; the shuffle map stages AQE runs
+    while cutting a shuffled frame carry the tag too."""
+    import uuid
+
+    from pyspark.errors import PySparkException
+    from py4j.protocol import Py4JJavaError
+
+    from i3cols_spark.sources.tables import MATERIALIZE_TAG, materialize
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(group: str) -> set[int]:
+        return set(tracker.getJobIdsForGroup(group))
+
+    def tagged() -> set[int]:
+        return set(sc._jsc.sc().statusTracker().getJobIdsForTag(MATERIALIZE_TAG))
+
+    shuffled = spark.range(200).selectExpr("id % 7 AS k").groupBy("k").count()
+    narrow = spark.range(200).selectExpr("id * 2 AS v")
+    try:
+        g = f"eager-{uuid.uuid4().hex}"
+        sc.setJobGroup(g, "materialize eager")
+        eager = materialize(shuffled)
+        launched = jobs(g)
+        assert launched and launched <= tagged(), (launched, tagged())
+        assert not sc.getJobTags()
+        assert sorted(eager.collect()) == sorted(shuffled.collect())
+
+        g = f"lazy-{uuid.uuid4().hex}"
+        sc.setJobGroup(g, "materialize lazy")
+        lazy = materialize(narrow, lazy=True)
+        assert jobs(g) == set()
+        assert not sc.getJobTags()
+        assert lazy.count() == 200
+        assert jobs(g)
+
+        g = f"lazy-shuffled-{uuid.uuid4().hex}"
+        sc.setJobGroup(g, "materialize lazy shuffled")
+        materialize(shuffled, lazy=True)
+        assert jobs(g) <= tagged()
+
+        with pytest.raises((Py4JJavaError, PySparkException)):
+            materialize(spark.range(3).selectExpr("raise_error('boom') AS x"))
+        assert not sc.getJobTags()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

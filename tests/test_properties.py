@@ -913,7 +913,7 @@ def test_bpe_deep_trajectory_32_merges(spark, sf_dir):
     from i3cols_spark.sources.tables import table
 
     docs = table(spark, sf_dir, "documents")
-    merges, w = bpe_learn(spark, docs, 32, checkpoint_every=8)
+    merges, w = bpe_learn(spark, docs, 32)
     assert 1 <= len(merges) <= 32
     if len(merges) == 32:
         rounds = [r for r, *_ in merges]
