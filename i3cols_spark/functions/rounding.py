@@ -9,8 +9,9 @@ differing in the last digit between engines (VERDICT r04 evidence).
 
 ``floor(x·10^dp + 0.5)/10^dp`` computes the HALF_UP result from plain
 IEEE arithmetic, which is bit-identical across engines for identical
-inputs — use it (with the matching SQL twin) whenever a multi-row
-ratio of integer-valued data is rounded for oracle comparison.
+inputs — use it (with the same expression spelled out in the SQL
+oracle) whenever a multi-row ratio of integer-valued data is rounded
+for oracle comparison.
 Continuous-valued reductions (corr, norms, sums of arbitrary doubles)
 don't land on exact boundaries and can keep plain ``round``.
 """
@@ -25,7 +26,3 @@ def round_half_up(col: Column, dp: int) -> Column:
     s = float(10**dp)
     return F.floor(col * F.lit(s) + F.lit(0.5)) / F.lit(s)
 
-
-def sql_round_half_up(expr: str, dp: int) -> str:
-    s = 10**dp
-    return f"floor(({expr}) * {s} + 0.5) / {s}.0"

@@ -17,13 +17,24 @@ Scale design (the reason each variant exists):
 
 from __future__ import annotations
 
+import functools
 import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from i3cols_spark.functions.arrays import pair_structs as _pair_structs
-from i3cols_spark.functions.text import normalize, shingle_hashes, tokens
+from i3cols_spark.functions.arrays import (
+    bucket_pairs,
+    member_pairs,
+    pair_structs as _pair_structs,
+)
+from i3cols_spark.functions.text import (
+    SIG_PERMS,
+    md5_minhash,
+    normalize,
+    shingle_hashes,
+    tokens,
+)
 from i3cols_spark.functions.vectors import as_double
 from i3cols_spark.operators.registry import query
 from i3cols_spark.sources.tables import materialize, spread, table
@@ -136,23 +147,9 @@ def _minhash_rep_graph(
     banded = sig.select("doc_id", F.explode(band_entries).alias("b")).select(
         "doc_id", F.col("b.band").alias("band"), F.col("b.bkey").alias("bkey")
     )
-    # Candidate pairs WITHOUT a self-join: bucket the band keys
-    # (groupBy + collect) and expand same-bucket pairs in-row.  A
-    # banded-table self-join would re-run the signature aggregation for
-    # each join side (lineage recompute, measured ~2× the query cost);
-    # this form computes the signature exactly once and shuffles only
-    # (band, bkey, doc_id) triples.  Bucket width is bounded by the
-    # collision rate, so the in-row expansion stays tiny.
-    buckets = (
-        banded.groupBy("band", "bkey")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    cand = (
-        buckets.select(F.explode(_pair_structs(F.col("ids"))).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .dropDuplicates()
-    )
+    # Candidate pairs WITHOUT a self-join (a banded self-join re-ran the
+    # signature aggregation per join side, measured ~2× the query cost).
+    cand = bucket_pairs(banded, "bkey")
     # Verify only the candidates — on the HASHED shingle sets, not the
     # strings: the long arrays shuffle ~8× fewer bytes and compare with
     # fixed-width equality (64-bit collisions are the same negligible
@@ -171,6 +168,43 @@ def _minhash_rep_graph(
         .select(F.col("doc_a").alias("rep_a"), F.col("doc_b").alias("rep_b"), "jaccard")
     )
     return grp, rep_pairs
+
+
+def _group_pairs(grp: DataFrame, rep_pairs: DataFrame) -> DataFrame:
+    """Member-level pair stream (doc_a, doc_b, jaccard) of a
+    collapse-first rep graph: rep pairs expand across their groups at
+    the rep jaccard (group members have identical shingle sets), and
+    intra-group pairs are exactly 1.0.  Both are pure output
+    materialization."""
+    intra = (
+        grp.filter(F.size("ids") >= 2)
+        .select(F.explode(_pair_structs(F.col("ids"))).alias("p"))
+        .select(
+            F.col("p.doc_a").alias("doc_a"),
+            F.col("p.doc_b").alias("doc_b"),
+            F.lit(1.0).alias("jaccard"),
+        )
+    )
+    return member_pairs(rep_pairs, grp).unionByName(intra)
+
+
+def _rep_clusters(grp: DataFrame, rep_pairs: DataFrame) -> DataFrame:
+    """One ``(doc_id, rep_id)`` row per member of a collapse-first rep
+    graph: hook+pointer-jump connected components label the reps
+    (``rep_pairs``: rep_a, rep_b), and every exact-dup member inherits
+    its rep's label through one explode join.  rep_id is the cluster's
+    min doc_id because reps are already their group minima."""
+    from i3cols_spark.operators.graph import connected_components
+
+    comp = connected_components(
+        grp.select(F.col("rep").alias("id")),
+        rep_pairs.select(F.col("rep_a").alias("a"), F.col("rep_b").alias("b")),
+    )
+    return (
+        grp.select("rep", F.explode("ids").alias("doc_id"))
+        .join(comp, F.col("rep") == F.col("id"))
+        .select("doc_id", F.col("comp").alias("rep_id"))
+    )
 
 
 def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -199,32 +233,7 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       4. expand rep pairs to member pairs + intra-group pairs at 1.0
          (both output-bound).
     """
-    grp, rep_pairs = _minhash_rep_graph(spark, sf_dir)
-    # Expand back to member pairs: rep-pair jaccard holds for every
-    # cross combo (identical shingle sets within a group); intra-group
-    # pairs are exactly 1.0.  Pure output materialization.
-    mem = grp.select("rep", "ids")
-    cross = (
-        rep_pairs.join(mem.select(F.col("rep").alias("rep_a"), F.col("ids").alias("ids_a")), "rep_a")
-        .join(mem.select(F.col("rep").alias("rep_b"), F.col("ids").alias("ids_b")), "rep_b")
-        .select(F.explode("ids_a").alias("da"), "ids_b", "jaccard")
-        .select("da", F.explode("ids_b").alias("db"), "jaccard")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "jaccard",
-        )
-    )
-    intra = (
-        grp.filter(F.size("ids") >= 2)
-        .select(F.explode(_pair_structs(F.col("ids"))).alias("p"))
-        .select(
-            F.col("p.doc_a").alias("doc_a"),
-            F.col("p.doc_b").alias("doc_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return cross.unionByName(intra)
+    return _group_pairs(*_minhash_rep_graph(spark, sf_dir))
 
 
 @query(
@@ -504,10 +513,12 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_dedup_text_report",
-    oracle=r"""
-    WITH RECURSIVE sh AS (
+#: DuckDB twin of the n-gram Jaccard family, shared by its oracles:
+#: ``sh`` — distinct word-3-shingle sets per doc (with lang); the
+#: closure chain adds lang-blocked Jaccard ≥ 0.2 ``pairs``, symmetric
+#: ``edges`` and the recursive transitive closure ``reach(src, dst)``
+#: (needs WITH RECURSIVE).
+_NGRAM_SH_CTE = r"""sh AS (
         SELECT doc_id, lang, sh
         FROM (
             SELECT doc_id, lang,
@@ -519,7 +530,8 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
                          string_split_regex(lower(trim(text)), '\s+') AS toks
                   FROM documents)
         )
-    ),
+    )"""
+_NGRAM_REACH_CTES = _NGRAM_SH_CTE + r""",
     pairs AS (
         SELECT a.doc_id AS a_id, b.doc_id AS b_id
         FROM sh a JOIN sh b
@@ -536,7 +548,13 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, doc_id FROM documents
         UNION
         SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-    ),
+    )"""
+
+
+@query(
+    "q_dedup_text_report",
+    oracle=f"""
+    WITH RECURSIVE {_NGRAM_REACH_CTES},
     comp AS (
         SELECT src AS doc_id, min(dst) AS rep_id FROM reach GROUP BY src
     ),
@@ -592,18 +610,7 @@ def minhash_cluster_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     the brute-force clustering at sf0.001 and to ngram-rep
     equivalence on exact-duplicate groups.
     """
-    from i3cols_spark.operators.graph import connected_components
-
-    grp, rep_pairs = _minhash_rep_graph(spark, sf_dir, materialize_grp=True)
-    comp = connected_components(
-        grp.select(F.col("rep").alias("id")),
-        rep_pairs.select(F.col("rep_a").alias("a"), F.col("rep_b").alias("b")),
-    )
-    return (
-        grp.select("rep", F.explode("ids").alias("doc_id"))
-        .join(comp, F.col("rep") == F.col("id"))
-        .select("doc_id", F.col("comp").alias("rep_id"))
-    )
+    return _rep_clusters(*_minhash_rep_graph(spark, sf_dir, materialize_grp=True))
 
 
 @query(
@@ -684,8 +691,6 @@ def q_dedup_minhash_cluster_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (inverted-index exact Jaccard over distinct-text reps + CC) is a
     test-SF audit a production run drops with the booleans.
     """
-    from i3cols_spark.operators.graph import connected_components
-
     xx = materialize(minhash_cluster_members(spark, sf_dir))
     grp, _ = _minhash_rep_graph(spark, sf_dir, materialize_grp=True)
 
@@ -722,14 +727,9 @@ def q_dedup_minhash_cluster_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("rep_a", "rep_b")
     )
-    tcomp = connected_components(
-        grp.select(F.col("rep").alias("id")),
-        true_pairs.select(F.col("rep_a").alias("a"), F.col("rep_b").alias("b")),
-    )
     truth = (
-        grp.select("rep", F.explode("ids").alias("doc_id"))
-        .join(tcomp, F.col("rep") == F.col("id"))
-        .select("doc_id", F.col("comp").alias("tcomp"))
+        _rep_clusters(grp, true_pairs)
+        .withColumnRenamed("rep_id", "tcomp")
         .transform(materialize)
     )
 
@@ -1108,20 +1108,8 @@ def _ngram_rep_graph(
 
 @query(
     "q_dedup_ngram_jaccard",
-    oracle="""
-    WITH sh AS (
-        SELECT doc_id, lang, sh
-        FROM (
-            SELECT doc_id, lang,
-                   list_distinct(list_transform(
-                       generate_series(1, greatest(len(toks) - 2, 1)),
-                       i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])
-                   )) AS sh
-            FROM (SELECT doc_id, lang,
-                         string_split_regex(lower(trim(text)), '\\s+') AS toks
-                  FROM documents)
-        )
-    )
+    oracle=f"""
+    WITH {_NGRAM_SH_CTE}
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
            CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
                / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
@@ -1162,64 +1150,13 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
          1.0 (identical shingle sets).  Both expansions are pure
          output materialization.
     """
-    grp, rep_pairs = _ngram_rep_graph(spark, sf_dir)
-    mem = grp.select("rep", "ids")
-    cross = (
-        rep_pairs.join(mem.select(F.col("rep").alias("rep_a"), F.col("ids").alias("ids_a")), "rep_a")
-        .join(mem.select(F.col("rep").alias("rep_b"), F.col("ids").alias("ids_b")), "rep_b")
-        .select(F.explode("ids_a").alias("da"), "ids_b", "jaccard")
-        .select("da", F.explode("ids_b").alias("db"), "jaccard")
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            "jaccard",
-        )
-    )
-    intra = (
-        grp.filter(F.size("ids") >= 2)
-        .select(F.explode(_pair_structs(F.col("ids"))).alias("p"))
-        .select(
-            F.col("p.doc_a").alias("doc_a"),
-            F.col("p.doc_b").alias("doc_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    return cross.unionByName(intra)
+    return _group_pairs(*_ngram_rep_graph(spark, sf_dir))
 
 
 @query(
     "q_dedup_ngram_cluster_rep",
-    oracle=r"""
-    WITH RECURSIVE sh AS (
-        SELECT doc_id, lang, sh
-        FROM (
-            SELECT doc_id, lang,
-                   list_distinct(list_transform(
-                       generate_series(1, greatest(len(toks) - 2, 1)),
-                       i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])
-                   )) AS sh
-            FROM (SELECT doc_id, lang,
-                         string_split_regex(lower(trim(text)), '\s+') AS toks
-                  FROM documents)
-        )
-    ),
-    pairs AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM sh a JOIN sh b
-          ON a.lang = b.lang AND a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                   / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.2
-    ),
-    edges AS (
-        SELECT a_id AS a, b_id AS b FROM pairs
-        UNION ALL
-        SELECT b_id, a_id FROM pairs
-    ),
-    reach(src, dst) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-    )
+    oracle=f"""
+    WITH RECURSIVE {_NGRAM_REACH_CTES}
     SELECT src AS doc_id, min(dst) AS rep_id
     FROM reach
     GROUP BY src
@@ -1264,18 +1201,7 @@ def q_dedup_ngram_cluster_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear output), with exact-Jaccard verification of candidates
     preserving precision.
     """
-    from i3cols_spark.operators.graph import connected_components
-
-    grp, rep_pairs = _ngram_rep_graph(spark, sf_dir, materialize_grp=True)
-    comp = connected_components(
-        grp.select(F.col("rep").alias("id")),
-        rep_pairs.select(F.col("rep_a").alias("a"), F.col("rep_b").alias("b")),
-    )
-    return (
-        grp.select("rep", F.explode("ids").alias("doc_id"))
-        .join(comp, F.col("rep") == F.col("id"))
-        .select("doc_id", F.col("comp").alias("rep_id"))
-    )
+    return _rep_clusters(*_ngram_rep_graph(spark, sf_dir, materialize_grp=True))
 
 
 @query(
@@ -1632,8 +1558,48 @@ def q_dedup_url_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Permutation count for the oracle-checkable md5 MinHash signature.
-_SIG_PERMS = 8
+#: Band count of the md5-family LSH: 2 signature rows per band.
+_MD5_BANDS = SIG_PERMS // 2
+
+#: DuckDB twin of ``functions.text.md5_minhash`` over a shingle list
+#: ``sh``: the ``sig{j}`` select-list.
+_MD5_SIG_SQL = ", ".join(
+    f"list_min(list_transform(sh, x -> md5('{j}:' || x))) AS sig{j}"
+    for j in range(SIG_PERMS)
+)
+
+
+def _md5_bands_sql(src: str, lead: str = "") -> str:
+    """DuckDB twin of ``_md5_band_keys``: one UNION ALL branch per band
+    over the ``sig{j}`` columns of ``src``, each led by ``lead``."""
+    return " UNION ALL ".join(
+        f"SELECT {lead}CAST({b} AS BIGINT) AS band, "
+        f"md5('{b}|' || sig{2*b} || '|' || sig{2*b+1}) AS bucket FROM {src}"
+        for b in range(_MD5_BANDS)
+    )
+
+
+def _md5_band_keys(sigs: DataFrame, *carry: str) -> DataFrame:
+    """The md5-family band keys: ``(*carry, band, bucket)`` rows, bucket =
+    md5('{b}|' || sig{2b} || '|' || sig{2b+1}), one ``unionAll`` branch
+    per band.  The branch form is measured: both explode rewrites of it
+    ran slower (r12 note in q_dedup_lsh_bucket_audit)."""
+    return functools.reduce(
+        DataFrame.unionAll,
+        [
+            sigs.select(
+                *carry,
+                F.lit(b).cast("bigint").alias("band"),
+                F.md5(
+                    F.concat(
+                        F.lit(f"{b}|"), F.col(f"sig{2*b}"), F.lit("|"),
+                        F.col(f"sig{2*b+1}"),
+                    )
+                ).alias("bucket"),
+            )
+            for b in range(_MD5_BANDS)
+        ],
+    )
 
 
 @query(
@@ -1653,10 +1619,7 @@ _SIG_PERMS = 8
         FROM t
     )
     SELECT doc_id,
-           {", ".join(
-               f"list_min(list_transform(sh, x -> md5('{j}:' || x))) AS sig{j}"
-               for j in range(_SIG_PERMS)
-           )}
+           {_MD5_SIG_SQL}
     FROM s
     """,
 )
@@ -1689,16 +1652,7 @@ def q_text_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts.
     docs = spread(table(spark, sf_dir, "documents"), spark)
     staged = docs.select("doc_id", shingles("text").alias("sh"))
-
-    # The lambda MUST stay unary: pyspark binds a 2-param lambda as
-    # (element, index), so a `j=j` default capture would be silently
-    # overwritten by the array index.
-    def salted_min(j: int):
-        return F.array_min(
-            F.transform("sh", lambda s: F.md5(F.concat(F.lit(f"{j}:"), s)))
-        ).alias(f"sig{j}")
-
-    return staged.select("doc_id", *[salted_min(j) for j in range(_SIG_PERMS)])
+    return staged.select("doc_id", *md5_minhash("sh"))
 
 
 @query(
@@ -1802,18 +1756,11 @@ def q_dedup_embedding_cluster_rep(spark: SparkSession, sf_dir: str) -> DataFrame
     ),
     sigs AS (
         SELECT doc_id,
-               {", ".join(
-                   f"list_min(list_transform(sh, x -> md5('{j}:' || x))) AS sig{j}"
-                   for j in range(8)
-               )}
+               {_MD5_SIG_SQL}
         FROM s
     ),
     keyed AS (
-        {" UNION ALL ".join(
-            f"SELECT CAST({b} AS BIGINT) AS band, "
-            f"md5('{b}|' || sig{2*b} || '|' || sig{2*b+1}) AS bucket FROM sigs"
-            for b in range(4)
-        )}
+        {_md5_bands_sql("sigs")}
     ),
     occupancy AS (
         SELECT band, bucket, CAST(count(*) AS BIGINT) AS sz
@@ -1861,26 +1808,8 @@ def q_dedup_lsh_bucket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branch scans parallelize by file and stay columnar-pruned.
     docs = table(spark, sf_dir, "documents")
     staged = docs.select("doc_id", shingles("text").alias("sh"))
-
-    def salted_min(j: int):
-        return F.array_min(
-            F.transform("sh", lambda s: F.md5(F.concat(F.lit(f"{j}:"), s)))
-        ).alias(f"sig{j}")
-
-    sigs = staged.select("doc_id", *[salted_min(j) for j in range(8)])
-    keyed = None
-    for b in range(4):
-        part = sigs.select(
-            F.lit(b).cast("bigint").alias("band"),
-            F.md5(
-                F.concat(
-                    F.lit(f"{b}|"), F.col(f"sig{2*b}"), F.lit("|"),
-                    F.col(f"sig{2*b+1}"),
-                )
-            ).alias("bucket"),
-        )
-        keyed = part if keyed is None else keyed.unionAll(part)
-    occupancy = keyed.groupBy("band", "bucket").agg(
+    sigs = staged.select("doc_id", *md5_minhash("sh"))
+    occupancy = _md5_band_keys(sigs).groupBy("band", "bucket").agg(
         F.count(F.lit(1)).cast("bigint").alias("sz")
     )
     return (
@@ -1920,18 +1849,11 @@ _LSH_MD5_CTES = f"""
     hs AS (
         SELECT doc_id,
                list_distinct(list_transform(sh, x -> md5(x))) AS hsh,
-               {", ".join(
-                   f"list_min(list_transform(sh, x -> md5('{j}:' || x))) AS sig{j}"
-                   for j in range(_SIG_PERMS)
-               )}
+               {_MD5_SIG_SQL}
         FROM s
     ),
     keyed AS (
-        {" UNION ALL ".join(
-            f"SELECT doc_id, CAST({b} AS BIGINT) AS band, "
-            f"md5('{b}|' || sig{2*b} || '|' || sig{2*b+1}) AS bucket FROM hs"
-            for b in range(4)
-        )}
+        {_md5_bands_sql("hs", "doc_id, ")}
     ),
     cand AS (
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1986,40 +1908,12 @@ def q_dedup_minhash_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread(table(spark, sf_dir, "documents"), spark)
     staged = docs.select("doc_id", shingles("text").alias("sh"))
-
-    def salted_min(j: int):
-        return F.array_min(
-            F.transform("sh", lambda s: F.md5(F.concat(F.lit(f"{j}:"), s)))
-        ).alias(f"sig{j}")
-
     hs = staged.select(
         "doc_id",
         F.array_distinct(F.transform("sh", lambda s: F.md5(s))).alias("hsh"),
-        *[salted_min(j) for j in range(8)],
+        *md5_minhash("sh"),
     )
-    keyed = None
-    for b in range(4):
-        part = hs.select(
-            "doc_id",
-            F.lit(b).cast("bigint").alias("band"),
-            F.md5(
-                F.concat(
-                    F.lit(f"{b}|"), F.col(f"sig{2*b}"), F.lit("|"),
-                    F.col(f"sig{2*b+1}"),
-                )
-            ).alias("bucket"),
-        )
-        keyed = part if keyed is None else keyed.unionAll(part)
-    buckets = (
-        keyed.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    cand = (
-        buckets.select(F.explode(_pair_structs(F.col("ids"))).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .dropDuplicates()
-    )
+    cand = bucket_pairs(_md5_band_keys(hs, "doc_id"), "bucket")
     # (r13 measured negative, reverted — the q_dedup_simhash_verified
     # verify-stream pinning tried here: a pinned repartition of the
     # doc-level (doc_id, hsh) side, shared by ha/hb via ReuseExchange,
@@ -2444,16 +2338,10 @@ def _lsh_md5_rep_parts(spark: SparkSession, sf_dir: str):
         .repartition(spark.sparkContext.defaultParallelism)
         .select("doc_id", shingles("norm").alias("sh"))
     )
-
-    def salted_min(j: int):
-        return F.array_min(
-            F.transform("sh", lambda s: F.md5(F.concat(F.lit(f"{j}:"), s)))
-        ).alias(f"sig{j}")
-
     hs = staged.select(
         "doc_id",
         F.array_distinct(F.transform("sh", lambda s: F.md5(s))).alias("hsh"),
-        *[salted_min(j) for j in range(_SIG_PERMS)],
+        *md5_minhash("sh"),
     )
     # One lazy materialization of the signature table: its consumers
     # (4 banding branches + the truth/estimator sides that join on
@@ -2463,30 +2351,7 @@ def _lsh_md5_rep_parts(spark: SparkSession, sf_dir: str):
     # audit).  |distinct texts| rows of one hash set + 8 digest
     # strings: collapse-bounded, never corpus-sized.
     hs = materialize(hs, lazy=True)
-    keyed = None
-    for b in range(4):
-        part = hs.select(
-            "doc_id",
-            F.md5(
-                F.concat(
-                    F.lit(f"{b}|"), F.col(f"sig{2*b}"), F.lit("|"),
-                    F.col(f"sig{2*b+1}"),
-                )
-            ).alias("bucket"),
-            F.lit(b).alias("band"),
-        )
-        keyed = part if keyed is None else keyed.unionAll(part)
-    buckets = (
-        keyed.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    cand = (
-        buckets.select(F.explode(_pair_structs(F.col("ids"))).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .dropDuplicates()
-    )
-    return hs, cand
+    return hs, bucket_pairs(_md5_band_keys(hs, "doc_id"), "bucket")
 
 
 @query(
@@ -2839,7 +2704,7 @@ def q_quality_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT c.doc_a, c.doc_b,
              CAST({" + ".join(
                  f"(CASE WHEN ha.sig{j} = hb.sig{j} THEN 1 ELSE 0 END)"
-                 for j in range(8)
+                 for j in range(SIG_PERMS)
              )} AS BIGINT) AS est_slots,
              CAST(len(list_intersect(ha.hsh, hb.hsh)) AS BIGINT) AS common,
              CAST(len(list_distinct(list_concat(ha.hsh, hb.hsh)))
@@ -2890,17 +2755,17 @@ def q_text_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame
     ha = hs.select(
         F.col("doc_id").alias("doc_a"),
         F.col("hsh").alias("ha"),
-        *[F.col(f"sig{j}").alias(f"a{j}") for j in range(_SIG_PERMS)],
+        *[F.col(f"sig{j}").alias(f"a{j}") for j in range(SIG_PERMS)],
     )
     hb = hs.select(
         F.col("doc_id").alias("doc_b"),
         F.col("hsh").alias("hb"),
-        *[F.col(f"sig{j}").alias(f"b{j}") for j in range(_SIG_PERMS)],
+        *[F.col(f"sig{j}").alias(f"b{j}") for j in range(SIG_PERMS)],
     )
     est_slots = sum(
         [
             F.when(F.col(f"a{j}") == F.col(f"b{j}"), 1).otherwise(0)
-            for j in range(_SIG_PERMS)
+            for j in range(SIG_PERMS)
         ],
         F.lit(0),
     ).cast("long")
@@ -2956,37 +2821,8 @@ def q_text_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query(
     "q_quality_dedup_by_source",
-    oracle=r"""
-    WITH RECURSIVE sh AS (
-        SELECT doc_id, lang, sh
-        FROM (
-            SELECT doc_id, lang,
-                   list_distinct(list_transform(
-                       generate_series(1, greatest(len(toks) - 2, 1)),
-                       i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])
-                   )) AS sh
-            FROM (SELECT doc_id, lang,
-                         string_split_regex(lower(trim(text)), '\s+') AS toks
-                  FROM documents)
-        )
-    ),
-    pairs AS (
-        SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        FROM sh a JOIN sh b
-          ON a.lang = b.lang AND a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                   / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.2
-    ),
-    edges AS (
-        SELECT a_id AS a, b_id AS b FROM pairs
-        UNION ALL
-        SELECT b_id, a_id FROM pairs
-    ),
-    reach(src, dst) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a
-    ),
+    oracle=f"""
+    WITH RECURSIVE {_NGRAM_REACH_CTES},
     rep AS (
         SELECT src AS doc_id, min(dst) AS rep_id FROM reach GROUP BY src
     )

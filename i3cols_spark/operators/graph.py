@@ -158,9 +158,11 @@ def _cc_loop(sym: DataFrame, labels: DataFrame, p: int, max_iter: int) -> DataFr
             F.col("id").alias("p_id"), F.col("comp").alias("p_comp")
         )
         # Lazy checkpoint: the fixpoint count below is the action that
-        # materializes it, so each round runs ONE job, not two (eager
-        # checkpoint + count was 2 jobs/round — round overhead, not
-        # data, dominates this loop at small SF).
+        # writes it.  Under AQE the lazy cut still runs nxt's shuffle
+        # map stages at this call: measured at sf0.01 on
+        # q_dedup_minhash_cluster_rep (both CC calls converge in 2
+        # rounds), each round's materialize ran 4-6 jobs, all tagged
+        # MATERIALIZE_TAG, and each fixpoint count 2 more.
         # coalesce(p) bounds the checkpoint's partition count (and the
         # final join stage's task count) to the graph-sized ``p``.
         nxt = (

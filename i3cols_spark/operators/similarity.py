@@ -23,7 +23,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from i3cols_spark.functions.arrays import pair_structs
+from i3cols_spark.functions.arrays import member_pairs, pair_structs
 from i3cols_spark.functions.vectors import as_double, cosine, dot, lsh_bucket, norm_l2
 from i3cols_spark.operators.registry import query
 from i3cols_spark.sources.mirrors import dataset_tag, write_once
@@ -131,17 +131,8 @@ def blocked_pair_sims(emb: DataFrame, threshold: float) -> DataFrame:
     # pairs at exactly 1.0 (identical vectors; zero vectors excluded —
     # their cosine is NULL/undefined in the oracle dialect).  Both are
     # pure output materialization.
-    mem = grp.select("rep", "ids")
-    cross = (
-        rep_sims.join(mem.select(F.col("rep").alias("a_id"), F.col("ids").alias("ids_a")), "a_id")
-        .join(mem.select(F.col("rep").alias("b_id"), F.col("ids").alias("ids_b")), "b_id")
-        .select(F.explode("ids_a").alias("ia"), "ids_b", "cos_sim")
-        .select("ia", F.explode("ids_b").alias("ib"), "cos_sim")
-        .select(
-            F.least("ia", "ib").alias("a_id"),
-            F.greatest("ia", "ib").alias("b_id"),
-            "cos_sim",
-        )
+    cross = member_pairs(
+        rep_sims.drop("label"), grp, reps=("a_id", "b_id"), out=("a_id", "b_id")
     )
     intra = (
         grp.filter((F.size("ids") >= 2) & F.exists("v", lambda x: x != 0))

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from i3cols_spark.functions.text import (
+    bigrams,
     normalize,
     rolling_fingerprint,
     shingles,
@@ -580,22 +581,9 @@ def q_text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     territory like every vocabulary join in this file.
     """
 
-    def build(tk: F.Column) -> F.Column:
-        return F.when(
-            F.size(tk) >= 2,
-            F.transform(
-                F.sequence(F.lit(0), F.size(tk) - 2),
-                lambda i: F.struct(
-                    F.element_at(tk, i + 1).alias("w1"),
-                    F.element_at(tk, i + 2).alias("w2"),
-                ),
-            ),
-        ).otherwise(F.array())
-
-    bigrams = F.get(F.transform(F.array(tokens("text")), build), 0)
     docs0 = spread(table(spark, sf_dir, "documents"), spark)
     b = (
-        docs0.select("doc_id", F.explode(bigrams).alias("bg"))
+        docs0.select("doc_id", F.explode(bigrams("text")).alias("bg"))
         .select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
         .filter((F.col("w1") != "") & (F.col("w2") != ""))
     )
@@ -671,31 +659,13 @@ def q_text_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row BIGINT/BIGINT IEEE division — bit-identical in both
     engines, unrounded.
     """
-    # Bind the token array as a lambda VARIABLE (the shingle_hashes
-    # trick, functions/text.py): referencing the split() expression
-    # from inside the transform lambda makes Catalyst inline and
-    # re-run tokenization for EVERY element_at — O(n²) per document;
-    # measured 5.7 s → 0.6 s warm at the sf0.1 bench for this query.
-    def build(tk: F.Column) -> F.Column:
-        return F.when(
-            F.size(tk) >= 2,
-            F.transform(
-                F.sequence(F.lit(0), F.size(tk) - 2),
-                lambda i: F.struct(
-                    F.element_at(tk, i + 1).alias("w1"),
-                    F.element_at(tk, i + 2).alias("w2"),
-                ),
-            ),
-        ).otherwise(F.array())
-
-    bigrams = F.get(F.transform(F.array(tokens("text")), build), 0)
     distinct_texts = (
         table(spark, sf_dir, "documents")
         .groupBy(F.xxhash64("text").alias("th"))
         .agg(F.count(F.lit(1)).alias("mult"), F.first("text").alias("text"))
     )
     pairs = (
-        distinct_texts.select("mult", F.explode(bigrams).alias("bg"))
+        distinct_texts.select("mult", F.explode(bigrams("text")).alias("bg"))
         .select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"), "mult")
         .filter((F.col("w1") != "") & (F.col("w2") != ""))
         .groupBy("w1", "w2")
@@ -779,26 +749,13 @@ def q_text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tokenize + weighted groupBy) every text operator here shares.
     """
 
-    def build(tk: F.Column) -> F.Column:
-        return F.when(
-            F.size(tk) >= 2,
-            F.transform(
-                F.sequence(F.lit(0), F.size(tk) - 2),
-                lambda i: F.struct(
-                    F.element_at(tk, i + 1).alias("w1"),
-                    F.element_at(tk, i + 2).alias("w2"),
-                ),
-            ),
-        ).otherwise(F.array())
-
-    bigrams = F.get(F.transform(F.array(tokens("text")), build), 0)
     distinct_texts = (
         spread(table(spark, sf_dir, "documents"), spark)
         .groupBy(F.xxhash64(F.col("text")).alias("th"))
         .agg(F.count(F.lit(1)).alias("mult"), F.first("text").alias("text"))
     )
     pairs = (
-        distinct_texts.select("mult", F.explode(bigrams).alias("bg"))
+        distinct_texts.select("mult", F.explode(bigrams("text")).alias("bg"))
         .select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"), "mult")
         .filter((F.col("w1") != "") & (F.col("w2") != ""))
         .groupBy("w1", "w2")
@@ -903,26 +860,13 @@ def q_text_llr_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     Everything after the bigram aggregation is vocabulary-sized.
     """
 
-    def build(tk: F.Column) -> F.Column:
-        return F.when(
-            F.size(tk) >= 2,
-            F.transform(
-                F.sequence(F.lit(0), F.size(tk) - 2),
-                lambda i: F.struct(
-                    F.element_at(tk, i + 1).alias("w1"),
-                    F.element_at(tk, i + 2).alias("w2"),
-                ),
-            ),
-        ).otherwise(F.array())
-
-    bigrams = F.get(F.transform(F.array(tokens("text")), build), 0)
     distinct_texts = (
         spread(table(spark, sf_dir, "documents"), spark)
         .groupBy(F.xxhash64(F.col("text")).alias("th"))
         .agg(F.count(F.lit(1)).alias("mult"), F.first("text").alias("text"))
     )
     pairs = (
-        distinct_texts.select("mult", F.explode(bigrams).alias("bg"))
+        distinct_texts.select("mult", F.explode(bigrams("text")).alias("bg"))
         .select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"), "mult")
         .filter((F.col("w1") != "") & (F.col("w2") != ""))
         .groupBy("w1", "w2")
@@ -1033,28 +977,15 @@ def q_text_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact integer count with (w1, w2) tie-breaks.
     """
 
-    def build(tk: F.Column) -> F.Column:
-        return F.when(
-            F.size(tk) >= 2,
-            F.transform(
-                F.sequence(F.lit(0), F.size(tk) - 2),
-                lambda i: F.struct(
-                    F.element_at(tk, i + 1).alias("w1"),
-                    F.element_at(tk, i + 2).alias("w2"),
-                ),
-            ),
-        ).otherwise(F.array())
-
     from i3cols_spark.functions.rounding import round_half_up
 
-    bigrams = F.get(F.transform(F.array(tokens("text")), build), 0)
     distinct_texts = (
         table(spark, sf_dir, "documents")
         .groupBy(F.xxhash64("text").alias("th"))
         .agg(F.count(F.lit(1)).alias("mult"), F.first("text").alias("text"))
     )
     cnt = (
-        distinct_texts.select("mult", F.explode(bigrams).alias("bg"))
+        distinct_texts.select("mult", F.explode(bigrams("text")).alias("bg"))
         .select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"), "mult")
         .filter((F.col("w1") != "") & (F.col("w2") != ""))
         .groupBy("w1", "w2")
@@ -1950,7 +1881,7 @@ def q_text_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine 6 dp (identical-text pairs: num ≡ n2, so the ratio is
     1/(1+ε), ε ≤ 2 ulp — rounds to exactly 1.0).
     """
-    from i3cols_spark.functions.arrays import pair_structs
+    from i3cols_spark.functions.arrays import member_pairs, pair_structs
     from i3cols_spark.functions.text import normalize, shingles_all
 
     docs = spread(table(spark, sf_dir, "documents"), spark)
@@ -2014,25 +1945,7 @@ def q_text_tfidf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos_sim"),
         )
     )
-    mem = grp.select("rep", "ids")
-    cross = (
-        rep_sims.join(
-            mem.select(F.col("rep").alias("rep_a"), F.col("ids").alias("ids_a")),
-            "rep_a",
-        )
-        .join(
-            mem.select(F.col("rep").alias("rep_b"), F.col("ids").alias("ids_b")),
-            "rep_b",
-        )
-        .select(F.explode("ids_a").alias("ia"), "ids_b", "n_shared", "cos_sim")
-        .select("ia", F.explode("ids_b").alias("ib"), "n_shared", "cos_sim")
-        .select(
-            F.least("ia", "ib").alias("doc_a"),
-            F.greatest("ia", "ib").alias("doc_b"),
-            "n_shared",
-            "cos_sim",
-        )
-    )
+    cross = member_pairs(rep_sims, grp)
     intra = (
         grp.filter(F.col("cnt") >= 2)
         .join(norms.select("rep", "nterms"), "rep")

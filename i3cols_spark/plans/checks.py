@@ -55,12 +55,3 @@ def has_broadcast_hash_join(df: DataFrame) -> bool:
 def has_sort_merge_join(df: DataFrame) -> bool:
     return "SortMergeJoin" in explain_str(df)
 
-
-def partition_filters(df: DataFrame) -> list[str]:
-    """All PartitionFilters entries across the plan's scans — non-empty
-    means the scan prunes partition directories before reading bytes."""
-    text = explain_str(df)
-    out: list[str] = []
-    for m in re.finditer(r"PartitionFilters: \[([^\]]*)\]", text):
-        out.extend(s.strip() for s in m.group(1).split(",") if s.strip())
-    return out

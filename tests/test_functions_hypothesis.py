@@ -4,11 +4,14 @@ on generated inputs, through real Spark evaluation."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from collections import Counter
+
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
+from i3cols_spark.functions.arrays import bucket_pairs, member_pairs
 from i3cols_spark.functions.text import (
     normalize,
     rolling_fingerprint,
@@ -72,6 +75,73 @@ def test_normalization_invariance(spark, text):
     assert toks[0] == toks[1] == toks[2]
     assert fps[0] == fps[1] == fps[2]
     assert norms[0] == norms[1] == norms[2]
+
+
+# ---- LSH pair helpers (functions/arrays.py) vs brute-force sets ----
+
+# Per-doc band keys: doc id → one small key per band, so buckets are
+# mostly singletons with occasional multi-band collisions.
+_BANDED = st.dictionaries(
+    st.integers(0, 30), st.lists(st.integers(0, 3), min_size=3, max_size=3),
+    max_size=8,
+)
+
+
+@given(_BANDED)
+@example({})  # no rows: no buckets at all
+@example({5: [0, 1, 2]})  # every bucket a singleton
+@example({1: [0, 0, 0], 2: [0, 0, 0], 3: [1, 2, 3]})  # (1, 2) collides in 3 bands
+@settings(**_SETTINGS)
+def test_bucket_pairs_matches_bruteforce(spark, banded):
+    rows = [(d, b, k) for d, keys in banded.items() for b, k in enumerate(keys)]
+    keyed = spark.createDataFrame(rows, "doc_id long, band int, bkey int")
+    got = [tuple(r) for r in bucket_pairs(keyed, "bkey").collect()]
+    buckets: dict = {}
+    for d, b, k in rows:
+        buckets.setdefault((b, k), set()).add(d)
+    want = {(a, c) for ids in buckets.values() for a in ids for c in ids if a < c}
+    assert len(got) == len(set(got))  # multi-band collisions emitted once
+    assert set(got) == want
+
+
+# Exact-dup groups (rep = group min; a member id already taken by an
+# earlier group is dropped, as in a real collapse) and a mask choosing
+# which of the C(5, 2) = 10 possible rep pairs exist.
+_GROUPS = st.lists(st.sets(st.integers(0, 40), min_size=1, max_size=3), max_size=5)
+_MASK = st.lists(st.booleans(), min_size=10, max_size=10)
+
+
+@given(_GROUPS, _MASK, st.booleans())
+@example([], [True] * 10, False)  # no groups, no rep pairs
+@example([{1, 9}, {2}], [True] * 10, True)  # member 9 > rep 2: (2, 9) out
+@settings(**_SETTINGS)
+def test_member_pairs_matches_bruteforce(spark, groups, mask, sim_names):
+    seen: set = set()
+    reps: dict = {}
+    for g in groups:
+        ids = sorted(g - seen)
+        seen |= g
+        if ids:
+            reps[ids[0]] = ids
+    cand = [(a, b) for a in sorted(reps) for b in sorted(reps) if a < b]
+    chosen = [p for p, keep in zip(cand, mask) if keep]
+    ra, rb = ("a_id", "b_id") if sim_names else ("rep_a", "rep_b")
+    oa, ob = ("a_id", "b_id") if sim_names else ("doc_a", "doc_b")
+    grp = spark.createDataFrame(list(reps.items()), "rep long, ids array<long>")
+    rep_pairs = spark.createDataFrame(
+        [(a, b, float(a * 100 + b)) for a, b in chosen],
+        f"{ra} long, {rb} long, score double",
+    )
+    out = member_pairs(rep_pairs, grp, reps=(ra, rb), out=(oa, ob))
+    assert out.columns == [oa, ob, "score"]
+    got = Counter(tuple(r) for r in out.collect())
+    want = Counter(
+        (min(x, y), max(x, y), float(a * 100 + b))
+        for a, b in chosen
+        for x in reps[a]
+        for y in reps[b]
+    )
+    assert got == want
 
 
 # ---- media codec round-trips on generated images/audio (no Spark) ----
