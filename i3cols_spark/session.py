@@ -14,6 +14,7 @@ explicit Spark config.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -83,6 +84,22 @@ def configure(spark: SparkSession) -> SparkSession:
     # exact-Jaccard family (operators/dedup.py) with the LSH route as
     # the high-density escape.
     return spark
+
+
+#: SparkSession (weakly held) → names of the Python DataSources
+#: registered in it.  No lock: a concurrent second registration in
+#: one session only makes Spark log a warning.
+_DATA_SOURCES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def register_data_source(spark: SparkSession, source: type) -> None:
+    """Register the Python DataSource class ``source`` once per session
+    — the engine's one ``spark.dataSource.register`` call, a py4j round
+    trip that pickles the class."""
+    names = _DATA_SOURCES.setdefault(spark, set())
+    if source.name() not in names:
+        spark.dataSource.register(source)
+        names.add(source.name())
 
 
 def get_spark(

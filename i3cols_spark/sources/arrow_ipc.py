@@ -59,6 +59,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from i3cols_spark.session import register_data_source
+
 MANIFEST = "_ARROW_MANIFEST.json"
 _SNAPSHOT_FMT = "_ARROW_MANIFEST.v{n}.json"
 _SNAPSHOT_RE = re.compile(r"^_ARROW_MANIFEST\.v(\d+)\.json$")
@@ -564,8 +566,5 @@ class ArrowIPCDataSource(DataSource):
 
 
 def register_arrow_ipc(spark) -> None:
-    """Idempotent per-session registration of the ``arrowipc`` format."""
-    try:
-        spark.dataSource.register(ArrowIPCDataSource)
-    except Exception:
-        pass  # already registered in this session
+    """Register the ``arrowipc`` format, once per session."""
+    register_data_source(spark, ArrowIPCDataSource)

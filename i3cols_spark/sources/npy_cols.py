@@ -9,6 +9,12 @@ i3cols datasets are first-class tables::
 
     df = read_npy_columns(spark, "/data/run123", keys=["hits", "energy"])
 
+``read_npy_columns`` and ``stream_npy_columns`` are the format's one
+open path.  Its two options are ``keys`` (the projection) and
+``partitions`` (the split count cap; default the session's
+``defaultParallelism``).  The schema comes from the npy headers in the
+driver, and the format is registered once per session.
+
 Spark-first design notes:
 
 * **Splits, not files.**  Each task reads a row range of every key via
@@ -17,6 +23,12 @@ Spark-first design notes:
   single-process mmap laziness.  Ragged columns slice their
   ``(start, stop)`` window out of ``index.npy`` and gather just those
   value rows.
+* **Split rule** (batch and stream alike): a row range becomes
+  min(``partitions``, ⌈bytes / 4 MiB⌉) equal row ranges.  The bytes
+  come from the npy headers: each key's row itemsize, plus each ragged
+  key's element itemsize × the elements between the range's index
+  bounds.  Every split costs a Python worker task, so a small append
+  reads in one task while a large import uses every core.
 * **Arrow batches, not Python rows.**  ``read`` yields
   ``pyarrow.RecordBatch`` — NumPy slice → Arrow is zero/near-zero
   copy, and rows never materialize as Python objects.
@@ -77,6 +89,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampNTZType,
 )
+
+from i3cols_spark.session import register_data_source
 
 FORMAT_NAME = "i3cols_npy"
 EVENT_ID = "event_id"
@@ -183,12 +197,41 @@ def _num_rows(key: _Key) -> int:
     return np.load(target, mmap_mode="r").shape[0]
 
 
+#: Arrow batch size of every read task, in rows.
+_BATCH_ROWS = 65536
+#: Bytes per split in the split rule (module docstring).
+_SPLIT_BYTES = 4 << 20
+
+
+def _range_bytes(keys: list[_Key], lo: int, hi: int) -> int:
+    """Bytes of rows [lo, hi) by the split rule (module docstring);
+    ``hi > lo``."""
+    total = 0
+    for k in keys:
+        data = np.load(k.data_path, mmap_mode="r")
+        if k.index_path is None:
+            total += data.itemsize * (hi - lo)
+            continue
+        index = np.load(k.index_path, mmap_mode="r")
+        elements = int(index["stop"][hi - 1]) - int(index["start"][lo])
+        total += index.itemsize * (hi - lo) + data.itemsize * max(0, elements)
+    return total
+
+
+def _splits(keys: list[_Key], lo: int, hi: int, npartitions: int) -> list[InputPartition]:
+    """Rows [lo, hi) cut by the split rule (module docstring) — the
+    one split planner of the batch and stream readers."""
+    if hi <= lo:
+        return [InputPartition((lo, lo))]
+    n = min(npartitions, hi - lo, -(-_range_bytes(keys, lo, hi) // _SPLIT_BYTES))
+    bounds = np.linspace(lo, hi, max(1, n) + 1).astype(np.int64)
+    return [InputPartition((int(a), int(b))) for a, b in zip(bounds[:-1], bounds[1:])]
+
+
 class NpyColsReader(DataSourceReader):
-    def __init__(self, path: str, keys: list[_Key], npartitions: int, batch_rows: int):
-        self.path = path
+    def __init__(self, path: str, keys: list[_Key], npartitions: int):
         self.keys = keys
         self.npartitions = npartitions
-        self.batch_rows = batch_rows
         rows = {k.name: _num_rows(k) for k in keys}
         if len(set(rows.values())) > 1:
             raise ValueError(f"misaligned columns in {path}: {rows}")
@@ -220,17 +263,11 @@ class NpyColsReader(DataSourceReader):
         return unsupported
 
     def partitions(self):
-        # A split smaller than one Arrow batch still costs a Python
-        # worker task but yields a single partial batch — cap the split
-        # count so every split carries ≥ batch_rows (tiny datasets get
-        # 1-2 tasks; at scale the npartitions knob governs).
-        span = max(self.lo, self.hi) - self.lo
-        n = min(self.npartitions, max(1, -(-span // self.batch_rows)))
-        return _range_partitions(self.lo, max(self.lo, self.hi), n)
+        return _splits(self.keys, self.lo, self.hi, self.npartitions)
 
     def read(self, partition: InputPartition):
         start, stop = partition.value
-        return _read_range(self.keys, start, stop, self.batch_rows)
+        return _read_range(self.keys, start, stop)
 
 
 def _ragged_slice(data, index, a, b, key: _Key) -> pa.ListArray:
@@ -251,7 +288,7 @@ def _ragged_slice(data, index, a, b, key: _Key) -> pa.ListArray:
     )
 
 
-def _read_range(keys: list[_Key], start: int, stop: int, batch_rows: int):
+def _read_range(keys: list[_Key], start: int, stop: int):
     """Yield Arrow batches for rows [start, stop) of every key — the
     shared task body of the batch and stream readers.  mmaps open per
     task; only the slice's pages are touched."""
@@ -259,8 +296,8 @@ def _read_range(keys: list[_Key], start: int, stop: int, batch_rows: int):
     idxs = {
         k.name: np.load(k.index_path, mmap_mode="r") for k in keys if k.index_path
     }
-    for a in range(start, stop, batch_rows):
-        b = min(a + batch_rows, stop)
+    for a in range(start, stop, _BATCH_ROWS):
+        b = min(a + _BATCH_ROWS, stop)
         arrays = [pa.array(np.arange(a, b, dtype=np.int64))]
         names = [EVENT_ID]
         for k in keys:
@@ -270,16 +307,6 @@ def _read_range(keys: list[_Key], start: int, stop: int, batch_rows: int):
                 arrays.append(_ragged_slice(cols[k.name], idxs[k.name], a, b, k))
             names.append(k.name)
         yield pa.RecordBatch.from_arrays(arrays, names)
-
-
-def _range_partitions(lo: int, hi: int, npartitions: int) -> list[InputPartition]:
-    n = max(1, min(npartitions, hi - lo))
-    bounds = np.linspace(lo, hi, n + 1).astype(np.int64)
-    return [
-        InputPartition((int(a), int(b)))
-        for a, b in zip(bounds[:-1], bounds[1:])
-        if b > a
-    ] or [InputPartition((lo, lo))]
 
 
 class NpyColsStreamReader(DataSourceStreamReader):
@@ -294,10 +321,9 @@ class NpyColsStreamReader(DataSourceStreamReader):
     keys so a half-appended dataset (some columns longer than others)
     never emits misaligned rows."""
 
-    def __init__(self, keys: list[_Key], npartitions: int, batch_rows: int):
+    def __init__(self, keys: list[_Key], npartitions: int):
         self.keys = keys
         self.npartitions = npartitions
-        self.batch_rows = batch_rows
 
     def initialOffset(self) -> dict:  # noqa: N802 (Spark API name)
         return {"row": 0}
@@ -306,20 +332,22 @@ class NpyColsStreamReader(DataSourceStreamReader):
         return {"row": min((_num_rows(k) for k in self.keys), default=0)}
 
     def partitions(self, start: dict, end: dict):
-        return _range_partitions(start["row"], end["row"], self.npartitions)
+        return _splits(self.keys, start["row"], end["row"], self.npartitions)
 
     def read(self, partition: InputPartition):
         a, b = partition.value
-        return _read_range(self.keys, a, b, self.batch_rows)
+        return _read_range(self.keys, a, b)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are derived from on-disk state; nothing to gc
 
 
 class NpyColsDataSource(DataSource):
-    """``spark.read.format("i3cols_npy").load(path)`` — options:
-    ``keys`` (comma-separated projection), ``partitions`` (split
-    count; default 16), ``batchRows`` (Arrow batch size)."""
+    """The ``i3cols_npy`` format, opened by ``read_npy_columns`` and
+    ``stream_npy_columns``.  Options besides ``path``: ``keys``
+    (comma-separated projection) and ``partitions`` (split count cap).
+    Both readers split a row range into min(``partitions``, ⌈bytes /
+    4 MiB⌉) row ranges (module docstring)."""
 
     @classmethod
     def name(cls) -> str:
@@ -330,6 +358,9 @@ class NpyColsDataSource(DataSource):
         keys = [k.strip() for k in keys_opt.split(",")] if keys_opt else None
         return _scan_keys(self.options["path"], keys)
 
+    def _plan(self) -> tuple[list[_Key], int]:
+        return self._keys(), int(self.options["partitions"])
+
     def schema(self) -> StructType:
         fields = [StructField(EVENT_ID, LongType(), False)]
         for k in self._keys():
@@ -338,52 +369,51 @@ class NpyColsDataSource(DataSource):
         return StructType(fields)
 
     def reader(self, schema: StructType) -> NpyColsReader:
-        return NpyColsReader(
-            self.options["path"],
-            self._keys(),
-            int(self.options.get("partitions", "16")),
-            int(self.options.get("batchrows", "65536")),
-        )
+        return NpyColsReader(self.options["path"], *self._plan())
 
     def streamReader(self, schema: StructType) -> NpyColsStreamReader:  # noqa: N802
-        return NpyColsStreamReader(
-            self._keys(),
-            int(self.options.get("partitions", "16")),
-            int(self.options.get("batchrows", "65536")),
+        return NpyColsStreamReader(*self._plan())
+
+
+#: Spark refuses a Python DataSource reader that implements
+#: ``pushFilters`` unless this session conf is on (it is off by default).
+_PUSHDOWN_CONF = "spark.sql.python.filterPushdown.enabled"
+
+
+def _open(spark, path: str, keys: list[str] | None, partitions: int | None, stream: bool):
+    """The one open path of the format, batch or stream.  The schema is
+    a pure function of the npy headers, so it is computed here and
+    passed with ``.schema()``: Spark then starts no Python planner to
+    ask for it, and a bad dataset raises in the caller."""
+    spark.conf.set(_PUSHDOWN_CONF, "true")
+    if spark.conf.get(_PUSHDOWN_CONF, None) != "true":
+        raise RuntimeError(
+            f"session refused {_PUSHDOWN_CONF}='true'; Spark fails every "
+            f"{FORMAT_NAME} read without it"
         )
+    register_data_source(spark, NpyColsDataSource)
+    options = {
+        "path": path,
+        "keys": ",".join(keys or ()),  # empty: every key
+        "partitions": str(partitions or spark.sparkContext.defaultParallelism),
+    }
+    reader = spark.readStream if stream else spark.read
+    schema = NpyColsDataSource(options).schema()
+    return reader.format(FORMAT_NAME).schema(schema).options(**options).load()
 
 
-def register(spark) -> None:
-    """Register the format and enable Python-datasource filter pushdown
-    (a session conf, off by default; without it Spark refuses any
-    reader that implements ``pushFilters``)."""
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass  # older/locked-down session: reader still works, unpruned
-    spark.dataSource.register(NpyColsDataSource)
+def read_npy_columns(
+    spark, path: str, keys: list[str] | None = None, partitions: int | None = None
+):
+    return _open(spark, path, keys, partitions, stream=False)
 
 
-def read_npy_columns(spark, path: str, keys: list[str] | None = None, **options):
-    register(spark)
-    reader = spark.read.format(FORMAT_NAME)
-    if keys is not None:
-        reader = reader.option("keys", ",".join(keys))
-    for k, v in options.items():
-        reader = reader.option(k, str(v))
-    return reader.load(path)
-
-
-def stream_npy_columns(spark, path: str, keys: list[str] | None = None, **options):
+def stream_npy_columns(
+    spark, path: str, keys: list[str] | None = None, partitions: int | None = None
+):
     """``readStream`` over a growing npy dataset (see
     NpyColsStreamReader for the append contract)."""
-    register(spark)
-    reader = spark.readStream.format(FORMAT_NAME)
-    if keys is not None:
-        reader = reader.option("keys", ",".join(keys))
-    for k, v in options.items():
-        reader = reader.option(k, str(v))
-    return reader.load(path)
+    return _open(spark, path, keys, partitions, stream=True)
 
 
 # --- export (driver-side migration utility; parquet is the scale sink) ---

@@ -195,6 +195,7 @@ _INFERENCE_CONFS = (
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
 )
 
 #: SparkSession → {(fixture name, abs path): (version, schema)}, where

@@ -348,6 +348,38 @@ def test_table_schema_inferred_once_per_session(spark, sf_dir, tmp_path):
     ).count()
 
 
+def test_read_columns_infers_once_until_rewritten(spark, tmp_path):
+    """``read_columns`` opens a partitioned dataset through the schema
+    memo: a second open of unchanged files runs no Spark job, and an
+    overwrite (here adding a column) is inferred again."""
+    import uuid
+
+    from i3cols_spark.sources.ingest import read_columns, write_columns
+
+    path = str(tmp_path / "cols")
+    base = spark.range(40).selectExpr("id AS event_id", "id % 3 AS run", "id * 0.5 AS x")
+    write_columns(base, path, partition_by=("run",))
+    tag = uuid.uuid4().hex
+
+    def open_cols(group: str):
+        opened = []
+        jobs = _jobs_in_group(spark, f"{group}-{tag}", lambda: opened.append(read_columns(spark, path)))
+        return jobs, opened[0]
+
+    first, _ = open_cols("cols-first")
+    second, df = open_cols("cols-second")
+    assert len(first) >= 1, first
+    assert second == [], second
+    assert df.columns == ["event_id", "x", "run"]
+    assert df.count() == 40
+
+    write_columns(base.withColumn("y", base.x * 2), path, partition_by=("run",), mode="overwrite")
+    third, df = open_cols("cols-rewritten")
+    assert len(third) >= 1, third
+    assert df.columns == ["event_id", "x", "y", "run"]
+    assert df.agg({"y": "sum"}).head()[0] == 2 * 0.5 * sum(range(40))
+
+
 def test_table_schema_memo_sees_in_place_rewrite(spark, tmp_path):
     """Rewriting a dataset in place with a different parquet schema (a
     new ``events.ts`` flavor) changes its content fingerprint, so the

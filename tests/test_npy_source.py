@@ -91,7 +91,7 @@ def test_filter_pushdown_narrows_partitions(spark, npy_dataset):
     assert df.filter("event_id >= 90").count() == 10
     assert df.filter((F.col("event_id") >= 20) & (F.col("event_id") < 25)).count() == 5
     # reader-level: the range predicates must shrink the planned splits
-    rdr = NpyColsReader(d, _scan_keys(d, None), npartitions=4, batch_rows=1 << 16)
+    rdr = NpyColsReader(d, _scan_keys(d, None), npartitions=4)
     from pyspark.sql.datasource import GreaterThanOrEqual, LessThan
 
     left = rdr.pushFilters(
@@ -207,7 +207,7 @@ def test_stream_offset_is_min_across_keys(tmp_path):
     for k, n in (("a", 30), ("b", 25)):
         os.makedirs(os.path.join(d, k))
         np.save(os.path.join(d, k, "data.npy"), np.arange(n))
-    rdr = NpyColsStreamReader(_scan_keys(d, None), npartitions=4, batch_rows=1 << 16)
+    rdr = NpyColsStreamReader(_scan_keys(d, None), npartitions=4)
     assert rdr.initialOffset() == {"row": 0}
     assert rdr.latestOffset() == {"row": 25}
 
@@ -270,3 +270,162 @@ def test_npy_fixture_rebuilds_on_source_mutation(spark, tmp_path):
         os.utime(dst)
     _npy_events_fixture(spark, str(d))
     assert open(marker).read() != fp0  # rebuilt
+
+
+def test_unsupported_dtype_raises_at_open(spark, tmp_path):
+    """The schema is computed in the driver, so a sub-array dtype fails
+    in ``read_npy_columns`` itself, not in a Spark planner process."""
+    d = str(tmp_path / "subarr")
+    os.makedirs(os.path.join(d, "v"))
+    np.save(os.path.join(d, "v", "data.npy"), np.zeros(4, dtype=[("xyz", "f8", 3)]))
+    with pytest.raises(NotImplementedError, match="sub-array"):
+        read_npy_columns(spark, d)
+
+
+def test_driver_schema_matches_data_source(spark, tmp_path):
+    """The schema the open path hands Spark is the DataSource's own, on
+    every mapped kind, a nested struct, a ragged key and S/U/M keys."""
+    from i3cols_spark.sources.npy_cols import _KIND_MAP, NpyColsDataSource
+
+    d = str(tmp_path / "kinds")
+    n = 3
+    cols = {f"{kind}{size}": np.zeros(n, dtype=f"{kind}{size}") for kind, size in _KIND_MAP}
+    cols["nested"] = np.zeros(n, dtype=[("a", "<u2"), ("b", [("c", "<f4"), ("d", "?")])])
+    cols["s"] = np.array([b"x", b"yy", b""], dtype="S2")
+    cols["u"] = np.array(["é", "ab", ""], dtype="U2")
+    cols["m"] = np.array(["2020-01-01T00:00:00"] * n, dtype="datetime64[ns]")
+    for k, arr in cols.items():
+        os.makedirs(os.path.join(d, k))
+        np.save(os.path.join(d, k, "data.npy"), arr)
+    os.makedirs(os.path.join(d, "ragged"))
+    idx = np.array([(0, 2), (2, 2), (2, 5)], dtype=[("start", "<u8"), ("stop", "<u8")])
+    np.save(os.path.join(d, "ragged", "index.npy"), idx)
+    np.save(os.path.join(d, "ragged", "data.npy"), np.arange(5, dtype="<i2"))
+
+    df = read_npy_columns(spark, d)
+    want = NpyColsDataSource({"path": d}).schema()
+    assert df.schema == want
+    assert len(want.fields) == 1 + len(cols) + 1
+    row = df.filter("event_id = 2").collect()[0]
+    assert row["ragged"] == [2, 3, 4] and row["u"] == "" and row["s"] == b""
+
+
+@pytest.fixture(scope="module")
+def split_dataset(tmp_path_factory):
+    """≈32.5 MB of npy data over 20k rows: an 8-byte scalar key and a
+    ragged key of 8-byte elements, 100–300 per row."""
+    d = str(tmp_path_factory.mktemp("splits"))
+    n = 20_000
+    lens = np.random.default_rng(3).integers(100, 301, n)
+    idx = np.empty(n, dtype=[("start", "<u8"), ("stop", "<u8")])
+    idx["stop"] = np.cumsum(lens)
+    idx["start"] = idx["stop"] - lens
+    for k in ("x", "hits"):
+        os.makedirs(os.path.join(d, k))
+    np.save(os.path.join(d, "x", "data.npy"), np.arange(n, dtype="<f8"))
+    np.save(os.path.join(d, "hits", "index.npy"), idx)
+    np.save(os.path.join(d, "hits", "data.npy"), np.zeros(int(lens.sum()), dtype="<f8"))
+    return d, idx
+
+
+@pytest.mark.parametrize("batch_rows", [64, 1 << 16])
+def test_batch_and_stream_readers_split_alike(monkeypatch, split_dataset, batch_rows):
+    """One split rule for both readers: min(partitions, ⌈range bytes /
+    4 MiB⌉) splits, whatever the Arrow batch size."""
+    from pyspark.sql.datasource import GreaterThanOrEqual, LessThan
+
+    from i3cols_spark.sources import npy_cols
+    from i3cols_spark.sources.npy_cols import NpyColsStreamReader, _range_bytes
+
+    monkeypatch.setattr(npy_cols, "_BATCH_ROWS", batch_rows)
+    d, idx = split_dataset
+    keys = _scan_keys(d, None)
+
+    def plans(lo, hi, partitions):
+        batch = NpyColsReader(d, keys, npartitions=partitions)
+        batch.pushFilters([GreaterThanOrEqual(("event_id",), lo), LessThan(("event_id",), hi)])
+        stream = NpyColsStreamReader(keys, npartitions=partitions)
+        got = [p.value for p in batch.partitions()]
+        assert got == [p.value for p in stream.partitions({"row": lo}, {"row": hi})]
+        assert got[0][0] == lo and got[-1][1] == hi
+        return got
+
+    small = _range_bytes(keys, 1000, 1400)
+    assert small == 400 * 24 + 8 * int(idx["stop"][1399] - idx["start"][1000])
+    assert 0.5e6 < small < 1e6
+    assert len(plans(1000, 1400, 4)) == 1
+    big = _range_bytes(keys, 0, len(idx))
+    assert 30e6 < big < 40e6
+    assert len(plans(0, len(idx), 4)) == 4
+    assert len(plans(0, len(idx), 64)) == -(-big // (4 << 20))
+
+
+def test_two_opens_register_the_format_once(spark, npy_dataset, monkeypatch):
+    """Registration pickles the DataSource class over py4j; the open
+    path does it once per session, not once per open.  The session's
+    registration record starts empty here, so the first open registers
+    (again, which Spark allows within one session)."""
+    import weakref
+
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from i3cols_spark import session
+
+    calls = []
+    real = DataSourceRegistration.register
+    monkeypatch.setattr(
+        DataSourceRegistration,
+        "register",
+        lambda self, cls: (calls.append(cls.name()), real(self, cls))[1],
+    )
+    monkeypatch.setattr(session, "_DATA_SOURCES", weakref.WeakKeyDictionary())
+    d = npy_dataset[0]
+    assert read_npy_columns(spark, d).count() == 100
+    assert read_npy_columns(spark, d, keys=["energy"]).count() == 100
+    assert calls == ["i3cols_npy"]
+
+
+def test_one_registration_helper_and_one_npy_open_path():
+    """``spark.dataSource.register`` is called only inside
+    ``session.register_data_source``, and only ``sources/npy_cols.py``
+    names the ``i3cols_npy`` format in a ``.format()`` call."""
+    import ast
+    import pathlib
+
+    import i3cols_spark
+
+    root = pathlib.Path(i3cols_spark.__file__).parent
+    registers, formats = [], []
+
+    def scan(node: ast.AST, rel: str, fn: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                scan(child, rel, child.name)
+                continue
+            if (
+                isinstance(child, ast.Attribute)
+                and child.attr == "register"
+                and isinstance(child.value, ast.Attribute)
+                and child.value.attr == "dataSource"
+                and (rel, fn) != ("session.py", "register_data_source")
+            ):
+                registers.append(f"{rel}:{child.lineno} in {fn}")
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "format"
+                and child.args
+                and (
+                    (isinstance(child.args[0], ast.Constant) and child.args[0].value == "i3cols_npy")
+                    or (isinstance(child.args[0], (ast.Name, ast.Attribute))
+                        and ast.unparse(child.args[0]).endswith("FORMAT_NAME"))
+                )
+                and rel != "sources/npy_cols.py"
+            ):
+                formats.append(f"{rel}:{child.lineno} in {fn}")
+            scan(child, rel, fn)
+
+    for path in sorted(root.rglob("*.py")):
+        scan(ast.parse(path.read_text()), path.relative_to(root).as_posix(), "<module>")
+    assert not registers, registers
+    assert not formats, formats

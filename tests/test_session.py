@@ -44,3 +44,17 @@ def test_configure_tolerates_refused_performance_keys():
     })
     assert configure(stub) is stub
     assert stub.conf.values["spark.sql.session.timeZone"] == "UTC"
+
+
+@pytest.mark.parametrize("mode", ["raise", "ignore"])
+@pytest.mark.parametrize("stream", [False, True])
+def test_npy_open_raises_when_filter_pushdown_is_refused(mode, stream):
+    """Spark fails every npy read when the Python-datasource filter
+    pushdown conf is off, so an open on a session that refuses it
+    fails at once, naming the key."""
+    from i3cols_spark.sources.npy_cols import read_npy_columns, stream_npy_columns
+
+    stub = _StubSession({"spark.sql.python.filterPushdown.enabled": mode})
+    open_fn = stream_npy_columns if stream else read_npy_columns
+    with pytest.raises(RuntimeError, match="spark.sql.python.filterPushdown.enabled"):
+        open_fn(stub, "/nonexistent")
