@@ -129,8 +129,8 @@ def q_project_computed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _npy_events_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the events table once per dataset CONTENT in the
     reference's native npy column-dir layout, so the scan below
-    exercises the real migration path: npy dataset → Python
-    DataSource → DataFrame.
+    exercises the real migration path: npy dataset →
+    ``read_npy_columns`` → DataFrame.
 
     A ``sources/mirrors.write_once`` layout (warehouse home, content
     fingerprint in ``_MIRROR.json``, built in a private temp dir and
@@ -168,13 +168,14 @@ def _npy_events_fixture(spark: SparkSession, sf_dir: str) -> str:
     """,
 )
 def q_source_npy_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S1/S5 ingest parity end-to-end: aggregate events read through
-    the ``i3cols_npy`` Python DataSource (sources/npy_cols.py — the
-    reference's ``<key>/data.npy`` column-dir format, i3cols/cols.py::
-    load), not through parquet.  Row-range splits mmap their slice of
-    every key and yield Arrow batches; the oracle runs the same
-    aggregate over the parquet twin, proving value-level fidelity of
-    the format bridge."""
+    """S1/S5 ingest parity end-to-end: aggregate events read from the
+    npy column-dir format by ``read_npy_columns`` (sources/npy_cols.py
+    — the reference's ``<key>/data.npy`` layout, i3cols/cols.py::
+    load), not from parquet.  Row ranges mmap their slice of every key
+    into Arrow batches: in the driver when the dataset is one split and
+    one batch, as at sf0.01, else in ``i3cols_npy`` DataSource tasks.
+    The oracle runs the same aggregate over the parquet twin, proving
+    value-level fidelity of the format bridge."""
     from i3cols_spark.sources.npy_cols import read_npy_columns
 
     fixture = _npy_events_fixture(spark, sf_dir)

@@ -95,11 +95,28 @@ _DATA_SOURCES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 def register_data_source(spark: SparkSession, source: type) -> None:
     """Register the Python DataSource class ``source`` once per session
     — the engine's one ``spark.dataSource.register`` call, a py4j round
-    trip that pickles the class."""
+    trip that pickles the class.
+
+    Spark 4.1 checks a new name against the registry of the thread's
+    ACTIVE session but resolves ``format(name)`` in the target
+    session's, so a session made by ``newSession()`` could neither
+    register nor use a name its parent had registered.  The target is
+    therefore made the active session around the call, and the previous
+    one restored."""
     names = _DATA_SOURCES.setdefault(spark, set())
-    if source.name() not in names:
+    if source.name() in names:
+        return
+    jsessions = SparkSession._get_j_spark_session_class(spark._jvm)
+    previous = jsessions.getActiveSession()
+    jsessions.setActiveSession(spark._jsparkSession)
+    try:
         spark.dataSource.register(source)
-        names.add(source.name())
+    finally:
+        if previous.isDefined():
+            jsessions.setActiveSession(previous.get())
+        else:
+            jsessions.clearActiveSession()
+    names.add(source.name())
 
 
 def get_spark(

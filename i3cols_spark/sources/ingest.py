@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from i3cols_spark.session import configure
-from i3cols_spark.sources.tables import table_schema
+from i3cols_spark.sources.tables import read_parquet
 
 #: i3cols/regexes.py::I3_FNAME_RE analog: run/subrun from file names
 #: like  Level5_IC86.2017_data_Run00129876_Subrun00000012.i3.zst
@@ -87,10 +87,10 @@ def read_columns(
     parquet scan; ``keys`` projects columns (pruning pushed to the
     file footers, the storage-layout property i3cols gets from one-dir-
     per-column).  The schema, partition columns included, comes from
-    the session's schema memo (``tables.table_schema``), so only the
+    the session's schema memo (``tables.read_parquet``), so only the
     first open of unchanged files runs the inference job."""
     configure(spark)
-    df = spark.read.schema(table_schema(spark, path)).parquet(path)
+    df = read_parquet(spark, path)
     if keys is not None:
         df = df.select(*keys)
     return df

@@ -13,7 +13,8 @@ i3cols datasets are first-class tables::
 open path.  Its two options are ``keys`` (the projection) and
 ``partitions`` (the split count cap; default the session's
 ``defaultParallelism``).  The schema comes from the npy headers in the
-driver, and the format is registered once per session.
+driver, the format is registered once per session, and a dataset of
+one split and one batch is read in the driver (below).
 
 Spark-first design notes:
 
@@ -29,6 +30,18 @@ Spark-first design notes:
   key's element itemsize × the elements between the range's index
   bounds.  Every split costs a Python worker task, so a small append
   reads in one task while a large import uses every core.
+* **One split, one batch: read in the driver.**  A batch read whose
+  whole row range is one split (≤ 4 MiB, whatever ``partitions`` is)
+  and one Arrow batch (≤ 65536 rows) runs the task body in
+  ``read_npy_columns`` itself and hands Spark the Arrow table as a
+  local relation: no Python planner, no Python worker.  Such a read is
+  a snapshot taken at open.  Larger batch reads and every stream stay
+  on the DataSource, which Spark plans (``event_id`` pushdown
+  included) when it plans a query and whose tasks read the files when
+  the query runs.  The row bound is there because Spark copies a local
+  relation row by row: 4 MiB of 16-byte rows took 2.0 s to open and
+  aggregate in the driver against 1.0 s through the DataSource; 64k
+  rows took 0.65 s against 1.0 s (4-core VM, warm).
 * **Arrow batches, not Python rows.**  ``read`` yields
   ``pyarrow.RecordBatch`` — NumPy slice → Arrow is zero/near-zero
   copy, and rows never materialize as Python objects.
@@ -73,6 +86,7 @@ from pyspark.sql.datasource import (
     LessThan,
     LessThanOrEqual,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -197,6 +211,14 @@ def _num_rows(key: _Key) -> int:
     return np.load(target, mmap_mode="r").shape[0]
 
 
+def _aligned_rows(path: str, keys: list[_Key]) -> int:
+    """The row count every key shares; raises on misaligned columns."""
+    rows = {k.name: _num_rows(k) for k in keys}
+    if len(set(rows.values())) > 1:
+        raise ValueError(f"misaligned columns in {path}: {rows}")
+    return next(iter(rows.values()), 0)
+
+
 #: Arrow batch size of every read task, in rows.
 _BATCH_ROWS = 65536
 #: Bytes per split in the split rule (module docstring).
@@ -218,6 +240,13 @@ def _range_bytes(keys: list[_Key], lo: int, hi: int) -> int:
     return total
 
 
+def _one_batch(keys: list[_Key], nrows: int) -> bool:
+    """Whether rows [0, nrows) are one split of one Arrow batch — the
+    reads ``_open`` takes in the driver (module docstring).  Neither
+    bound depends on ``partitions``."""
+    return nrows <= _BATCH_ROWS and (nrows == 0 or _range_bytes(keys, 0, nrows) <= _SPLIT_BYTES)
+
+
 def _splits(keys: list[_Key], lo: int, hi: int, npartitions: int) -> list[InputPartition]:
     """Rows [lo, hi) cut by the split rule (module docstring) — the
     one split planner of the batch and stream readers."""
@@ -228,15 +257,19 @@ def _splits(keys: list[_Key], lo: int, hi: int, npartitions: int) -> list[InputP
     return [InputPartition((int(a), int(b))) for a, b in zip(bounds[:-1], bounds[1:])]
 
 
+def _schema(keys: list[_Key]) -> StructType:
+    fields = [StructField(EVENT_ID, LongType(), False)]
+    for k in keys:
+        t = ArrayType(k.spark_type) if k.index_path else k.spark_type
+        fields.append(StructField(k.name, t, True))
+    return StructType(fields)
+
+
 class NpyColsReader(DataSourceReader):
     def __init__(self, path: str, keys: list[_Key], npartitions: int):
         self.keys = keys
         self.npartitions = npartitions
-        rows = {k.name: _num_rows(k) for k in keys}
-        if len(set(rows.values())) > 1:
-            raise ValueError(f"misaligned columns in {path}: {rows}")
-        self.nrows = next(iter(rows.values())) if rows else 0
-        self.lo, self.hi = 0, self.nrows  # narrowed by pushFilters
+        self.lo, self.hi = 0, _aligned_rows(path, keys)  # narrowed by pushFilters
 
     def pushFilters(self, filters):  # noqa: N802 (Spark API name)
         """Consume range predicates on the positional ``event_id``:
@@ -290,8 +323,9 @@ def _ragged_slice(data, index, a, b, key: _Key) -> pa.ListArray:
 
 def _read_range(keys: list[_Key], start: int, stop: int):
     """Yield Arrow batches for rows [start, stop) of every key — the
-    shared task body of the batch and stream readers.  mmaps open per
-    task; only the slice's pages are touched."""
+    shared task body of the batch and stream readers, and of the
+    driver read in ``_open``.  mmaps open per call; only the slice's
+    pages are touched."""
     cols = {k.name: np.load(k.data_path, mmap_mode="r") for k in keys}
     idxs = {
         k.name: np.load(k.index_path, mmap_mode="r") for k in keys if k.index_path
@@ -362,11 +396,7 @@ class NpyColsDataSource(DataSource):
         return self._keys(), int(self.options["partitions"])
 
     def schema(self) -> StructType:
-        fields = [StructField(EVENT_ID, LongType(), False)]
-        for k in self._keys():
-            t = ArrayType(k.spark_type) if k.index_path else k.spark_type
-            fields.append(StructField(k.name, t, True))
-        return StructType(fields)
+        return _schema(self._keys())
 
     def reader(self, schema: StructType) -> NpyColsReader:
         return NpyColsReader(self.options["path"], *self._plan())
@@ -384,7 +414,9 @@ def _open(spark, path: str, keys: list[str] | None, partitions: int | None, stre
     """The one open path of the format, batch or stream.  The schema is
     a pure function of the npy headers, so it is computed here and
     passed with ``.schema()``: Spark then starts no Python planner to
-    ask for it, and a bad dataset raises in the caller."""
+    ask for it, and a bad dataset raises in the caller.  A batch read
+    of one split and one Arrow batch runs the task body here, in the
+    driver, and hands Spark the Arrow table (module docstring)."""
     spark.conf.set(_PUSHDOWN_CONF, "true")
     if spark.conf.get(_PUSHDOWN_CONF, None) != "true":
         raise RuntimeError(
@@ -392,13 +424,17 @@ def _open(spark, path: str, keys: list[str] | None, partitions: int | None, stre
             f"{FORMAT_NAME} read without it"
         )
     register_data_source(spark, NpyColsDataSource)
-    options = {
-        "path": path,
-        "keys": ",".join(keys or ()),  # empty: every key
-        "partitions": str(partitions or spark.sparkContext.defaultParallelism),
-    }
+    options = {"path": path, "keys": ",".join(keys or ())}  # empty keys: every key
+    scanned = NpyColsDataSource(options)._keys()
+    schema = _schema(scanned)
+    if not stream:
+        nrows = _aligned_rows(path, scanned)
+        if _one_batch(scanned, nrows):
+            batches = list(_read_range(scanned, 0, nrows))
+            data = pa.Table.from_batches(batches) if nrows else to_arrow_schema(schema).empty_table()
+            return spark.createDataFrame(data, schema=schema)
+    options["partitions"] = str(partitions or spark.sparkContext.defaultParallelism)
     reader = spark.readStream if stream else spark.read
-    schema = NpyColsDataSource(options).schema()
     return reader.format(FORMAT_NAME).schema(schema).options(**options).load()
 
 

@@ -12,8 +12,10 @@ just ``.select()``.
 Schema memo (the ``cols.load``-once analog): inferring a parquet
 schema launches one Spark job, and every query opens its tables
 afresh, so ``table_schema`` memoises each dataset's inferred
-``StructType`` and ``table()`` serves later opens with
-``spark.read.schema(s).parquet(path)`` — no job.
+``StructType`` and ``read_parquet`` (behind ``table()``) serves later
+opens with ``spark.read.schema(s).parquet(path)`` — no job.  A miss
+hands back the frame that inferred the schema, so no open lists the
+path twice.
 
 * Key: the SparkSession (weakly held, so a dropped session drops its
   entries), the fixture name (``None`` for an unchecked read) and the
@@ -182,7 +184,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     configure(spark)
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.schema(table_schema(spark, path, name)).parquet(path)
+    df = read_parquet(spark, path, name)
     if name == "events":
         df = normalize_events_ts(df)
     return df
@@ -213,6 +215,21 @@ def table_schema(spark: SparkSession, path: str, name: str | None = None) -> Str
     the key, so an unchecked entry never serves a checked open.  A
     path that is not on the local filesystem is inferred on every
     call."""
+    got = _memo(spark, path, name)
+    return got if isinstance(got, StructType) else got.schema
+
+
+def read_parquet(spark: SparkSession, path: str, name: str | None = None) -> DataFrame:
+    """Open ``path`` with ``table_schema``'s memo: a hit reads with
+    ``spark.read.schema(s)`` (no job), and a miss returns the frame
+    that inferred the schema, so the path is listed once either way."""
+    got = _memo(spark, path, name)
+    return spark.read.schema(got).parquet(path) if isinstance(got, StructType) else got
+
+
+def _memo(spark: SparkSession, path: str, name: str | None) -> StructType | DataFrame:
+    """The memoised schema of ``path`` on a hit; on a miss the frame
+    that inferred it, after the fixture check and the memo fill."""
     local = os.path.exists(path)
     if local:
         key = (name, os.path.abspath(path))
@@ -227,7 +244,7 @@ def table_schema(spark: SparkSession, path: str, name: str | None = None) -> Str
     check_fixture_schema(name, normalize_events_ts(df) if name == "events" else df)
     if local:
         _SCHEMAS.setdefault(spark, {})[key] = (version, df.schema)
-    return df.schema
+    return df
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:

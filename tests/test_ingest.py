@@ -453,3 +453,28 @@ def test_schema_memo_keys_on_inference_confs(spark, sf_dir):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
+
+
+def test_schema_memo_miss_opens_the_path_once(spark, sf_dir, tmp_path, monkeypatch):
+    """On a schema-memo miss, ``read_columns`` and ``table()`` return
+    the frame that inferred the schema instead of reading the path a
+    second time with ``.schema(s)``; a hit reads it once too."""
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from i3cols_spark.sources.ingest import read_columns, write_columns
+    from i3cols_spark.sources.tables import table
+
+    calls = []
+    real = DataFrameReader.parquet
+    monkeypatch.setattr(
+        DataFrameReader, "parquet", lambda self, *paths, **kw: (calls.append(paths), real(self, *paths, **kw))[1]
+    )
+    path = str(tmp_path / "cols")
+    write_columns(spark.range(12).selectExpr("id AS event_id", "id % 2 AS run"), path, partition_by=("run",))
+    assert read_columns(spark, path).count() == 12  # miss
+    assert read_columns(spark, path).count() == 12  # hit
+    shutil.copy(f"{sf_dir}/nation.parquet", tmp_path / "nation.parquet")
+    assert table(spark, str(tmp_path), "nation").count() == 25  # miss
+    assert calls == [(path,), (path,), (f"{tmp_path}/nation.parquet",)]

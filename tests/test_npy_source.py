@@ -282,32 +282,233 @@ def test_unsupported_dtype_raises_at_open(spark, tmp_path):
         read_npy_columns(spark, d)
 
 
-def test_driver_schema_matches_data_source(spark, tmp_path):
-    """The schema the open path hands Spark is the DataSource's own, on
-    every mapped kind, a nested struct, a ragged key and S/U/M keys."""
-    from i3cols_spark.sources.npy_cols import _KIND_MAP, NpyColsDataSource
+def _save_kinds(d: str, n: int) -> None:
+    """Every ``_KIND_MAP`` kind, a nested struct, S/U/M keys and a
+    ragged key, over ``n`` ≤ 3 rows."""
+    from i3cols_spark.sources.npy_cols import _KIND_MAP
 
-    d = str(tmp_path / "kinds")
-    n = 3
-    cols = {f"{kind}{size}": np.zeros(n, dtype=f"{kind}{size}") for kind, size in _KIND_MAP}
+    cols = {f"{kind}{size}": np.arange(n).astype(f"{kind}{size}") for kind, size in _KIND_MAP}
     cols["nested"] = np.zeros(n, dtype=[("a", "<u2"), ("b", [("c", "<f4"), ("d", "?")])])
-    cols["s"] = np.array([b"x", b"yy", b""], dtype="S2")
-    cols["u"] = np.array(["é", "ab", ""], dtype="U2")
-    cols["m"] = np.array(["2020-01-01T00:00:00"] * n, dtype="datetime64[ns]")
+    cols["nested"]["a"] = np.arange(n) + 7
+    cols["s"] = np.array([b"x", b"yy", b""], dtype="S2")[:n]
+    cols["u"] = np.array(["é", "ab", ""], dtype="U2")[:n]
+    cols["m"] = np.array(["2020-01-01T00:00:00.123456789"] * n, dtype="datetime64[ns]")
     for k, arr in cols.items():
         os.makedirs(os.path.join(d, k))
         np.save(os.path.join(d, k, "data.npy"), arr)
     os.makedirs(os.path.join(d, "ragged"))
-    idx = np.array([(0, 2), (2, 2), (2, 5)], dtype=[("start", "<u8"), ("stop", "<u8")])
+    idx = np.array([(0, 2), (2, 2), (2, 5)], dtype=[("start", "<u8"), ("stop", "<u8")])[:n]
     np.save(os.path.join(d, "ragged", "index.npy"), idx)
-    np.save(os.path.join(d, "ragged", "data.npy"), np.arange(5, dtype="<i2"))
+    np.save(os.path.join(d, "ragged", "data.npy"), np.arange(5 if n else 0, dtype="<i2"))
 
+
+@pytest.fixture(scope="module")
+def kinds_dataset(tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("kinds"))
+    _save_kinds(d, 3)
+    return d
+
+
+def test_driver_schema_matches_data_source(spark, kinds_dataset):
+    """The schema the open path hands Spark is the DataSource's own, on
+    every mapped kind, a nested struct, a ragged key and S/U/M keys."""
+    from i3cols_spark.sources.npy_cols import _KIND_MAP, NpyColsDataSource
+
+    d = kinds_dataset
     df = read_npy_columns(spark, d)
     want = NpyColsDataSource({"path": d}).schema()
     assert df.schema == want
-    assert len(want.fields) == 1 + len(cols) + 1
+    assert len(want.fields) == 1 + len(_KIND_MAP) + 5
     row = df.filter("event_id = 2").collect()[0]
     assert row["ragged"] == [2, 3, 4] and row["u"] == "" and row["s"] == b""
+
+
+def _scan(df) -> str:
+    """``"local"`` when the optimized plan reads a local relation (the
+    driver read), ``"python"`` when it scans the ``i3cols_npy``
+    DataSource."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    names = {leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())}
+    if names == {"LocalRelation"}:
+        return "local"
+    assert names == {"DataSourceV2ScanRelation"} and "i3cols_npy" in plan.toString(), names
+    return "python"
+
+
+def _rows(df):
+    return sorted(df.collect(), key=lambda r: r["event_id"])
+
+
+@pytest.mark.parametrize("case", ["all", "keys", "empty"])
+def test_driver_read_matches_data_source(spark, kinds_dataset, tmp_path, monkeypatch, case):
+    """Both sides of the driver-read rule return the same schema and
+    rows: every kind, a nested struct, a ragged key, S/U/M, a ``keys=``
+    projection, and a dataset of 0 rows.  Making ``_one_batch`` false
+    sends the same small dataset through the DataSource."""
+    from i3cols_spark.sources import npy_cols
+
+    d, keys = kinds_dataset, None
+    if case == "keys":
+        keys = ["nested", "ragged", "m", "u8"]
+    elif case == "empty":
+        d = str(tmp_path / "empty")
+        _save_kinds(d, 0)
+    driver = read_npy_columns(spark, d, keys=keys)
+    monkeypatch.setattr(npy_cols, "_one_batch", lambda keys, nrows: False)
+    source = read_npy_columns(spark, d, keys=keys)
+    assert (_scan(driver), _scan(source)) == ("local", "python")
+    want = npy_cols.NpyColsDataSource({"path": d, "keys": ",".join(keys or ())}).schema()
+    assert driver.schema == source.schema == want
+    got = _rows(driver)
+    assert len(got) == (0 if case == "empty" else 3)
+    assert got == _rows(source)
+
+
+def _add_big_key(d: str, nrows: int, per_row: int) -> None:
+    """A ragged key of ``per_row`` 8-byte elements per row."""
+    os.makedirs(os.path.join(d, "big"), exist_ok=True)
+    idx = np.empty(nrows, dtype=[("start", "<u8"), ("stop", "<u8")])
+    idx["stop"] = np.arange(1, nrows + 1) * per_row
+    idx["start"] = idx["stop"] - per_row
+    np.save(os.path.join(d, "big", "index.npy"), idx)
+    np.save(os.path.join(d, "big", "data.npy"), np.ones(nrows * per_row, dtype="<f8"))
+
+
+@pytest.fixture(scope="module")
+def big_dataset(tmp_path_factory, npy_dataset):
+    """``npy_dataset`` plus a ≈12.8 MB ragged key: four splits of the
+    split rule, so it is read through the DataSource."""
+    import shutil
+
+    d = str(tmp_path_factory.mktemp("npybig") / "ds")
+    shutil.copytree(npy_dataset[0], d)
+    _add_big_key(d, 100, 16_000)
+    return d
+
+
+def test_one_split_read_plans_no_python_scan(spark, npy_dataset, big_dataset, tmp_path):
+    """A read of one split and one batch is a local relation in the
+    optimized plan; a read over 4 MiB or over 65536 rows scans the
+    Python DataSource."""
+    from i3cols_spark.sources.npy_cols import _range_bytes, _scan_keys
+
+    small, big = npy_dataset[0], big_dataset
+    assert _range_bytes(_scan_keys(small, None), 0, 100) <= 4 << 20
+    assert _range_bytes(_scan_keys(big, None), 0, 100) > 12 << 20
+    assert _scan(read_npy_columns(spark, small)) == "local"
+    assert _scan(read_npy_columns(spark, big, partitions=1)) == "python"
+    # the projection decides the bytes: without the big key it fits
+    assert _scan(read_npy_columns(spark, big, keys=["hdr", "energy"])) == "local"
+    for n, want in ((65536, "local"), (65537, "python")):
+        d = str(tmp_path / f"rows{n}")
+        os.makedirs(os.path.join(d, "b"))
+        np.save(os.path.join(d, "b", "data.npy"), np.zeros(n, dtype="i1"))
+        assert _scan(read_npy_columns(spark, d)) == want
+
+
+def test_large_read_matches_small_read(spark, npy_dataset, big_dataset):
+    """The DataSource read of the large variant equals the driver read
+    of the same dataset without its big key, schema and rows."""
+    small = read_npy_columns(spark, npy_dataset[0])
+    big = read_npy_columns(spark, big_dataset)
+    assert _scan(small) == "local" and _scan(big) == "python"
+    assert big.schema["big"].dataType.simpleString() == "array<double>"
+    rest = big.drop("big")
+    assert rest.schema == small.schema
+    assert _rows(rest) == _rows(small)
+    assert big.select(F.sum(F.size("big"))).head()[0] == 100 * 16_000
+
+
+def test_event_id_pushdown_narrows_large_read(spark, big_dataset):
+    """Spark-level ``event_id`` predicates still narrow the splits the
+    DataSource plans for a multi-split read."""
+    df = read_npy_columns(spark, big_dataset)
+    assert df.rdd.getNumPartitions() == 4
+    tail = df.filter("event_id >= 90")
+    assert tail.rdd.getNumPartitions() == 1
+    assert [r["event_id"] for r in tail.select("event_id").collect()] == list(range(90, 100))
+    mid = df.filter((F.col("event_id") >= 20) & (F.col("event_id") < 25))
+    assert mid.rdd.getNumPartitions() == 1 and mid.count() == 5
+
+
+@pytest.mark.parametrize("large", [False, True])
+def test_bad_datasets_raise_on_both_sides(spark, tmp_path, large):
+    """Misaligned columns and sub-array dtypes raise at open on both
+    sides of the driver-read rule; a u8 value above the LongType range
+    raises at open in the driver and at the action through the
+    DataSource."""
+    def dataset(name, **arrays):
+        d = str(tmp_path / name)
+        for k, arr in arrays.items():
+            os.makedirs(os.path.join(d, k))
+            np.save(os.path.join(d, k, "data.npy"), arr)
+        if large:
+            _add_big_key(d, 10, 60_000)
+        return d
+
+    with pytest.raises(ValueError, match="misaligned"):
+        read_npy_columns(spark, dataset("misaligned", a=np.arange(10), b=np.arange(11)))
+    with pytest.raises(NotImplementedError, match="sub-array"):
+        read_npy_columns(spark, dataset("subarr", v=np.zeros(10, dtype=[("xyz", "f8", 3)])))
+    u8 = np.arange(10, dtype="<u8")
+    u8[3] = np.iinfo(np.uint64).max
+    d = dataset("u8", u=u8)
+    if large:
+        df = read_npy_columns(spark, d)
+        assert _scan(df) == "python"
+        with pytest.raises(Exception, match="uint64 column exceeds"):
+            df.select("u").collect()
+    else:
+        with pytest.raises(OverflowError, match="uint64 column exceeds"):
+            read_npy_columns(spark, d)
+
+
+def test_one_split_read_is_a_snapshot_taken_at_open(spark, tmp_path):
+    """The driver read holds the rows it read at open: rewriting the
+    dataset afterwards changes only later opens."""
+    d = str(tmp_path / "snap")
+    os.makedirs(os.path.join(d, "x"))
+    np.save(os.path.join(d, "x", "data.npy"), np.arange(10, dtype="<f8"))
+    df = read_npy_columns(spark, d)
+    assert _scan(df) == "local"
+    np.save(os.path.join(d, "x", "data.npy"), -np.arange(11, dtype="<f8"))
+    assert [r["x"] for r in _rows(df)] == [float(i) for i in range(10)]
+    assert read_npy_columns(spark, d).agg(F.sum("x")).head()[0] == -55.0
+
+
+def test_npy_and_arrow_sources_work_from_a_new_session(spark, npy_dataset, big_dataset, tmp_path):
+    """A session made by ``newSession()`` can register and use both
+    Python DataSources after its parent has: a multi-split batch read,
+    a stream, and an ``arrowipc`` round trip."""
+    from i3cols_spark.sources.arrow_ipc import register_arrow_ipc
+    from i3cols_spark.sources.npy_cols import stream_npy_columns
+
+    assert read_npy_columns(spark, npy_dataset[0]).count() == 100
+    register_arrow_ipc(spark)
+    child = spark.newSession()
+
+    big = read_npy_columns(child, big_dataset)
+    assert _scan(big) == "python" and big.count() == 100
+
+    out, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    q = (
+        stream_npy_columns(child, npy_dataset[0], keys=["energy"])
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert child.read.parquet(out).count() == 100
+
+    register_arrow_ipc(child)
+    ipc = str(tmp_path / "ipc")
+    child.range(5).write.format("arrowipc").option("path", ipc).mode("append").save()
+    back = child.read.format("arrowipc").option("path", ipc).option("schema", "id bigint").load()
+    assert sorted(r["id"] for r in back.collect()) == list(range(5))
 
 
 @pytest.fixture(scope="module")
