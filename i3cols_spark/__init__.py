@@ -4,6 +4,8 @@ Spark-first (see SURVEY.md).
 
 Layout:
     session     SparkSession construction + defensive runtime config
+    jvm_archive the driver JVM's write-once class-data-sharing archive
+    publish     temp-then-swap publishing of write-once directories
     sources     table loading, schema registry, ingest/ETL (i3cols S1-S11)
     functions   reusable column-expression libraries (i3cols S13 analog)
     operators   the declared query inventory (SURVEY §2.3) + oracle SQL

@@ -9,6 +9,16 @@ Reference parity: i3cols has no session concept (eager NumPy,
 single process — SURVEY §3.1); this module is where its implicit
 "environment" (UTC times, mmap laziness, pool parallelism) becomes
 explicit Spark config.
+
+JVM start: when ``get_spark`` itself launches the driver JVM, it starts
+it from a write-once class-data-sharing archive
+(``i3cols_spark.jvm_archive``), which roughly halves the launch.  The
+first launch on a host builds the archive (the JVM dumps it at exit,
+10–16 s, and an ``atexit`` hook waits for it and publishes it under
+``$XDG_CACHE_HOME/i3cols_spark/jvm/``); every later launch maps it.
+A session the package did not launch — a live JVM, ``newSession()``,
+``PYSPARK_GATEWAY_PORT`` — is left untouched, and any archive trouble
+falls back to a normal start, logged on the ``jvm_archive`` logger.
 """
 
 from __future__ import annotations
@@ -17,6 +27,8 @@ import os
 import weakref
 
 from pyspark.sql import SparkSession
+
+from i3cols_spark import jvm_archive
 
 # Runtime-settable confs every engine entry point needs.  Keys chosen per
 # SURVEY §4.3 ("config knobs — only ones that matter").
@@ -131,27 +143,35 @@ def get_spark(
     ``shuffle.partitions`` is sized to cores, not Spark's default 200 —
     at local scale 200 tiny shuffle partitions is pure scheduling
     overhead, while on a 1000-executor cluster the same code path would
-    set it to ~2-3× total cores (AQE coalesces the excess).
+    set it to ~2-3× total cores (AQE coalesces the excess).  A JVM
+    this call launches starts from the class-data-sharing archive
+    (module docstring).
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # Managed-table home for bucketed datasets (sources.ingest.write_bucketed).
-        .config(
-            "spark.sql.warehouse.dir",
-            os.environ.get("SPARK_WAREHOUSE_DIR", "/tmp/i3cols_spark_warehouse"),
+
+    def create(java_options: str | None) -> SparkSession:
+        builder = (
+            SparkSession.builder.master(f"local[{cpus}]")
+            .appName(app_name)
+            .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+            .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+            .config("spark.ui.enabled", "false")
+            .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+            # Managed-table home for bucketed datasets (sources.ingest.write_bucketed).
+            .config(
+                "spark.sql.warehouse.dir",
+                os.environ.get("SPARK_WAREHOUSE_DIR", "/tmp/i3cols_spark_warehouse"),
+            )
         )
-    )
-    for key, value in _RUNTIME_CONFS.items():
-        builder = builder.config(key, value)
-    spark = builder.getOrCreate()
+        for key, value in _RUNTIME_CONFS.items():
+            builder = builder.config(key, value)
+        if java_options is not None:
+            builder = builder.config("spark.driver.extraJavaOptions", java_options)
+        return builder.getOrCreate()
+
+    spark = jvm_archive.start(create)
     spark.sparkContext.setLogLevel("WARN")
     return configure(spark)

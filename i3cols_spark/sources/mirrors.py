@@ -17,34 +17,26 @@ implementation of that protocol:
   ``data_fingerprint``) PLUS whatever layout parameters
   the caller records, so a CODE change to the layout (bucket count,
   Morton bits) invalidates the mirror exactly like a data change;
-- temp-then-swap: every build writes into its own unique sibling
-  ``<out>.tmp-<pid>-<uuid>`` and writes the ``_MIRROR.json`` marker
-  there LAST; publishing moves a stale ``out`` aside (under the same
-  naming), renames the temp dir into place and deletes the old copy.
-  A build never sees, appends to or leaves behind another build's
-  files, a build that raises removes its temp dir, and of two
+- temp-then-swap and reclaim: ``i3cols_spark.publish`` — every build
+  writes into its own unique sibling ``<out>.tmp-<pid>-<uuid>`` and
+  writes the ``_MIRROR.json`` marker there LAST, then publishes it by
+  directory swap; a build that raises removes its temp dir, of two
   concurrent builders the later one discards its copy once it sees
-  the other's current marker;
-- reclaim: a build killed outright (SIGKILL, OOM) cannot clean up, so
-  every cache miss first removes the siblings whose ``<pid>`` names
-  no live process.  Siblings of live processes — this one's other
-  threads included — and legacy ``<out>.tmp-<uuid>`` names are left
-  alone.  This assumes every builder of a warehouse runs on ONE host:
-  a pid is only meaningful there, and a live build from another host
-  whose pid is free here would be removed.
+  the other's current marker, and every cache miss first removes the
+  siblings that dead builders left behind.
 """
 
 from __future__ import annotations
 
-import errno
 import hashlib
 import json
 import os
 import shutil
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import SparkSession
+
+from i3cols_spark.publish import publish, reclaim, tmp_name
 
 
 def _warehouse_root(spark: SparkSession, kind: str) -> str:
@@ -121,68 +113,17 @@ def write_once(
     }
     if _marker(out) == expected:
         return out, False
-    _reclaim(out)
-    tmp = _tmp_name(out)
+    reclaim(out)
+    tmp = tmp_name(out)
     try:
         build(tmp)
         with open(os.path.join(tmp, _MARKER), "w") as fh:
             json.dump(expected, fh)
-        _publish(tmp, out, expected)
+        publish(tmp, out, lambda o: _marker(o) == expected)
     except BaseException:
         shutil.rmtree(tmp, ignore_errors=True)
         raise
     return out, True
-
-
-def _tmp_name(out: str) -> str:
-    return f"{out}.tmp-{os.getpid()}-{uuid.uuid4().hex}"
-
-
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:  # exists, owned by another user
-        return True
-    return True
-
-
-def _reclaim(out: str) -> None:
-    """Remove the temp/aside siblings of ``out`` left by dead builders."""
-    parent, prefix = os.path.split(out)
-    prefix += ".tmp-"
-    try:
-        names = os.listdir(parent)
-    except FileNotFoundError:
-        return
-    for n in names:
-        pid, sep, _ = n.removeprefix(prefix).partition("-")
-        if n.startswith(prefix) and sep and pid.isdigit() and not _pid_alive(int(pid)):
-            shutil.rmtree(os.path.join(parent, n), ignore_errors=True)
-
-
-def _publish(tmp: str, out: str, expected: dict) -> None:
-    """Swap the finished build ``tmp`` into ``out``, or discard it when
-    a concurrent builder has already published a current ``out``."""
-    while _marker(out) != expected:
-        aside = _tmp_name(out)
-        try:
-            os.replace(out, aside)
-        except FileNotFoundError:
-            aside = None
-        try:
-            os.replace(tmp, out)
-            return
-        except OSError as e:
-            # ENOTEMPTY/EEXIST: another builder published between our
-            # two renames — re-check its marker
-            if e.errno not in (errno.ENOTEMPTY, errno.EEXIST):
-                raise
-        finally:
-            if aside:
-                shutil.rmtree(aside, ignore_errors=True)
-    shutil.rmtree(tmp)
 
 
 def dataset_tag(sf_dir: str) -> str:

@@ -42,6 +42,14 @@ Spark-first design notes:
   relation row by row: 4 MiB of 16-byte rows took 2.0 s to open and
   aggregate in the driver against 1.0 s through the DataSource; 64k
   rows took 0.65 s against 1.0 s (4-core VM, warm).
+* **Snapshot rule.**  A batch read is a snapshot of the rows present
+  at open, on both paths: ``_open`` counts the aligned rows once and
+  the DataSource reader reads rows [0, that count) of every query
+  planned from the frame, the way the driver read holds the rows it
+  read.  Rows appended later are seen by a later open (or by
+  ``stream_npy_columns``, whose offsets follow the growing count);
+  appends must rename new column files into place (see
+  ``NpyColsStreamReader``).
 * **Arrow batches, not Python rows.**  ``read`` yields
   ``pyarrow.RecordBatch`` — NumPy slice → Arrow is zero/near-zero
   copy, and rows never materialize as Python objects.
@@ -266,10 +274,11 @@ def _schema(keys: list[_Key]) -> StructType:
 
 
 class NpyColsReader(DataSourceReader):
-    def __init__(self, path: str, keys: list[_Key], npartitions: int):
+    def __init__(self, path: str, keys: list[_Key], npartitions: int, nrows: int | None = None):
         self.keys = keys
         self.npartitions = npartitions
-        self.lo, self.hi = 0, _aligned_rows(path, keys)  # narrowed by pushFilters
+        # rows [0, nrows) — the open's snapshot — narrowed by pushFilters
+        self.lo, self.hi = 0, _aligned_rows(path, keys) if nrows is None else nrows
 
     def pushFilters(self, filters):  # noqa: N802 (Spark API name)
         """Consume range predicates on the positional ``event_id``:
@@ -379,9 +388,10 @@ class NpyColsStreamReader(DataSourceStreamReader):
 class NpyColsDataSource(DataSource):
     """The ``i3cols_npy`` format, opened by ``read_npy_columns`` and
     ``stream_npy_columns``.  Options besides ``path``: ``keys``
-    (comma-separated projection) and ``partitions`` (split count cap).
-    Both readers split a row range into min(``partitions``, ⌈bytes /
-    4 MiB⌉) row ranges (module docstring)."""
+    (comma-separated projection) and ``partitions`` (split count cap);
+    a batch open also passes ``rows``, the row count it took its
+    snapshot at (module docstring).  Both readers split a row range
+    into min(``partitions``, ⌈bytes / 4 MiB⌉) row ranges."""
 
     @classmethod
     def name(cls) -> str:
@@ -399,7 +409,8 @@ class NpyColsDataSource(DataSource):
         return _schema(self._keys())
 
     def reader(self, schema: StructType) -> NpyColsReader:
-        return NpyColsReader(self.options["path"], *self._plan())
+        nrows = self.options.get("rows")
+        return NpyColsReader(self.options["path"], *self._plan(), nrows and int(nrows))
 
     def streamReader(self, schema: StructType) -> NpyColsStreamReader:  # noqa: N802
         return NpyColsStreamReader(*self._plan())
@@ -433,6 +444,7 @@ def _open(spark, path: str, keys: list[str] | None, partitions: int | None, stre
             batches = list(_read_range(scanned, 0, nrows))
             data = pa.Table.from_batches(batches) if nrows else to_arrow_schema(schema).empty_table()
             return spark.createDataFrame(data, schema=schema)
+        options["rows"] = str(nrows)  # the snapshot (module docstring)
     options["partitions"] = str(partitions or spark.sparkContext.defaultParallelism)
     reader = spark.readStream if stream else spark.read
     return reader.format(FORMAT_NAME).schema(schema).options(**options).load()

@@ -477,6 +477,27 @@ def test_one_split_read_is_a_snapshot_taken_at_open(spark, tmp_path):
     assert read_npy_columns(spark, d).agg(F.sum("x")).head()[0] == -55.0
 
 
+def test_multi_split_read_is_a_snapshot_taken_at_open(spark, tmp_path):
+    """A DataSource read holds the rows present at open too: after an
+    append, a repeated query and a newly planned one on the same frame
+    both read the 10 rows the open counted."""
+    d = str(tmp_path / "snap_big")
+
+    def save(nrows: int) -> None:
+        _add_big_key(d, nrows, 60_000)
+        os.makedirs(os.path.join(d, "x"), exist_ok=True)
+        np.save(os.path.join(d, "x", "data.npy"), np.arange(nrows, dtype="<i8"))
+
+    save(10)
+    df = read_npy_columns(spark, d, partitions=1)
+    assert _scan(df) == "python"
+    assert df.count() == 10
+    save(11)
+    assert df.count() == 10
+    assert df.filter("event_id > 3").count() == 6
+    assert read_npy_columns(spark, d).count() == 11
+
+
 def test_npy_and_arrow_sources_work_from_a_new_session(spark, npy_dataset, big_dataset, tmp_path):
     """A session made by ``newSession()`` can register and use both
     Python DataSources after its parent has: a multi-split batch read,
