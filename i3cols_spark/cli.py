@@ -23,6 +23,17 @@ import json
 import sys
 
 
+def _write(spark, df, out: str, partition_by=(), overwrite: bool = True) -> None:
+    """Write ``df`` with the parquet sink (``ingest.write_columns``),
+    partitioned by those of ``partition_by`` it has, and print the
+    result line ``{"written", "rows"}`` read back from ``out``."""
+    from i3cols_spark.sources.ingest import write_columns
+
+    part = tuple(c for c in partition_by if c in df.columns)
+    write_columns(df, out, partition_by=part, mode="overwrite" if overwrite else "error")
+    print(json.dumps({"written": out, "rows": spark.read.parquet(out).count()}))
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="i3cols-spark")
     p.add_argument("--cpus", type=int, default=0, help="local[N] cores")
@@ -96,11 +107,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "vacuum":
         # Pure filesystem walk over the manifest protocol — no Spark
         # session needed (and none should be paid for).
-        import json as _json
-
         from i3cols_spark.sources.arrow_ipc import vacuum
 
-        print(_json.dumps(vacuum(args.path, retain_last=args.retain_last)))
+        print(json.dumps(vacuum(args.path, retain_last=args.retain_last)))
         return 0
 
     if args.cmd == "bench":
@@ -139,27 +148,22 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("i3cols-cli", cpus=args.cpus or None)
 
     if args.cmd == "extract":
-        from i3cols_spark.sources.ingest import extract_jsonl, with_run_info, write_columns
+        from i3cols_spark.sources.ingest import extract_jsonl, with_run_info
 
         df = with_run_info(extract_jsonl(spark, args.inputs))
         if args.keys:
             df = df.select(*args.keys)
         if args.exclude_keys:
             df = df.drop(*args.exclude_keys)
-        part = tuple(c for c in args.partition_by if c in df.columns)
-        write_columns(
-            df, args.out, partition_by=part, mode="overwrite" if args.overwrite else "error"
-        )
-        print(json.dumps({"written": args.out, "rows": spark.read.parquet(args.out).count()}))
+        _write(spark, df, args.out, args.partition_by, args.overwrite)
     elif args.cmd == "index":
-        import json as _json
         import os as _os
 
         from i3cols_spark.operators.similarity import build_ivf_index
 
         idx = build_ivf_index(spark, args.sf_dir, refine_iters=args.refine_iters)
         with open(_os.path.join(idx, "_CENTROIDS.json")) as fh:
-            meta = _json.load(fh)
+            meta = json.load(fh)
         print(json.dumps({
             "index": idx,
             "nlist": len(meta["cid"]),
@@ -176,15 +180,10 @@ def main(argv: list[str] | None = None) -> int:
         compact(spark, args.input, args.out, args.target_files)
         print(json.dumps({"written": args.out}))
     elif args.cmd == "import-npy":
-        from i3cols_spark.sources.ingest import write_columns
         from i3cols_spark.sources.npy_cols import read_npy_columns
 
         df = read_npy_columns(spark, args.input, keys=args.keys)
-        part = tuple(c for c in args.partition_by if c in df.columns)
-        write_columns(
-            df, args.out, partition_by=part, mode="overwrite" if args.overwrite else "error"
-        )
-        print(json.dumps({"written": args.out, "rows": spark.read.parquet(args.out).count()}))
+        _write(spark, df, args.out, args.partition_by, args.overwrite)
     elif args.cmd == "export-npy":
         from i3cols_spark.sources.ingest import read_columns
         from i3cols_spark.sources.npy_cols import write_npy_columns
@@ -214,8 +213,7 @@ def main(argv: list[str] | None = None) -> int:
         if args.explain:
             df.explain("formatted")
         if args.out:
-            df.write.mode("overwrite").parquet(args.out)
-            print(json.dumps({"written": args.out, "rows": spark.read.parquet(args.out).count()}))
+            _write(spark, df, args.out)
         else:
             df.show(args.limit, truncate=False)
     if owns_session:

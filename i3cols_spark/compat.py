@@ -87,16 +87,12 @@ def compress(spark: SparkSession, path: str, out: str) -> None:
     """i3cols/cols.py::compress analog: rewrite with zstd (strongest
     codec available here; `.npz`'s whole-dir zip has no parquet analog
     because pages are already codec-compressed)."""
-    ingest.read_columns(spark, path).write.mode("overwrite").option(
-        "compression", "zstd"
-    ).parquet(out)
+    ingest.compact(spark, path, out)
 
 
 def decompress(spark: SparkSession, path: str, out: str) -> None:
     """i3cols/cols.py::decompress analog: rewrite uncompressed."""
-    ingest.read_columns(spark, path).write.mode("overwrite").option(
-        "compression", "none"
-    ).parquet(out)
+    ingest.compact(spark, path, out, compression="none")
 
 
 def extract_files_as_one(

@@ -1,22 +1,36 @@
-"""Temp-then-swap publishing of a write-once directory — the one
-protocol behind every write-once artifact of the engine: the derived
-layout mirrors (``sources/mirrors.write_once``) and the driver JVM's
-class-data-sharing archive (``session``).
+"""Temp-then-swap publishing of a directory — the one protocol behind
+every directory the engine writes whole.  Its users:
+
+- the write-once caches: the derived layout mirrors
+  (``sources/mirrors.write_once``) and the driver JVM's class-data-
+  sharing archive (``jvm_archive``, which builds at start and publishes
+  at exit, so it calls the three steps itself);
+- the dataset sinks, through ``sink``: parquet
+  (``sources/ingest.write_columns``, and so ``combine``, ``compact``,
+  ``compat.save``/``compress``/``decompress`` and the CLI's
+  ``extract``/``import-npy``/``sql --out``) and npy
+  (``sources/npy_cols.write_npy_columns``, and so ``export-npy``).
+
+The steps (``building`` runs them in order):
 
 - temp: every build writes into its own unique sibling
   ``<out>.tmp-<pid>-<uuid>`` (``tmp_name``), so a build never sees,
-  appends to or leaves behind another build's files;
+  appends to or leaves behind another build's files, and a build that
+  raises leaves ``out`` as it was;
 - publish: ``publish`` moves a stale ``out`` aside (under the same
   naming), renames the finished temp dir into place and deletes the
   old copy; of two concurrent builders the later one discards its copy
   once it sees that ``out`` is already current;
 - reclaim: a build killed outright (SIGKILL, OOM) cannot clean up, so
-  every cache miss first removes, with ``reclaim``, the siblings whose
+  every build first removes, with ``reclaim``, the siblings whose
   ``<pid>`` names no live process.  Siblings of live processes — this
   one's other threads included — and legacy ``<out>.tmp-<uuid>`` names
-  are left alone.  This assumes every builder of ``out`` runs on ONE
-  host: a pid is only meaningful there, and a live build from another
-  host whose pid is free here would be removed.
+  are left alone.
+
+Paths are POSIX filesystem paths (``os.replace`` is the swap), and
+every builder of ``out`` runs on ONE host: a pid is only meaningful
+there, and a live build from another host whose pid is free here would
+be removed.
 """
 
 from __future__ import annotations
@@ -25,7 +39,8 @@ import errno
 import os
 import shutil
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import AbstractContextManager, contextmanager
 
 
 def tmp_name(out: str) -> str:
@@ -79,3 +94,32 @@ def publish(tmp: str, out: str, current: Callable[[str], bool]) -> None:
             if aside:
                 shutil.rmtree(aside, ignore_errors=True)
     shutil.rmtree(tmp)
+
+
+@contextmanager
+def building(out: str, current: Callable[[str], bool]) -> Iterator[str]:
+    """Reclaim, then yield a fresh private sibling of ``out`` for the
+    body to create and fill, then ``publish`` it; a body (or publish)
+    that raises removes the sibling and leaves ``out`` as it was."""
+    reclaim(out)
+    tmp = tmp_name(out)
+    try:
+        yield tmp
+        publish(tmp, out, current)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+
+
+def sink(out: str, overwrite: bool) -> AbstractContextManager[str]:
+    """``building`` for a dataset sink: the build replaces ``out``, or,
+    unless ``overwrite``, raises FileExistsError when ``out`` exists —
+    checked before the build and again at publish."""
+
+    def current(o: str) -> bool:
+        if not overwrite and os.path.exists(o):
+            raise FileExistsError(errno.EEXIST, "dataset already exists", o)
+        return False
+
+    current(out)
+    return building(out, current)

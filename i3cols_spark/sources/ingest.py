@@ -16,10 +16,13 @@ and declarative — exactly the point of SURVEY §4.1.
 
 from __future__ import annotations
 
+import glob
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from i3cols_spark.publish import sink
 from i3cols_spark.session import configure
 from i3cols_spark.sources.tables import read_parquet
 
@@ -73,11 +76,28 @@ def write_columns(
     semantics of i3cols' per-category (start, stop) slices.  zstd
     replaces `.npz` (S8) — compression is a write option, not an
     operator.
+
+    The job writes a private sibling of ``path`` that is published by
+    directory swap (``i3cols_spark.publish.sink``), so a job that fails
+    leaves the previous dataset whole.  ``mode`` is ``"overwrite"`` or
+    ``"error"`` (FileExistsError when ``path`` exists); Spark's
+    ``append`` and ``ignore`` cannot be published whole and raise
+    ValueError.
     """
-    writer = df.write.mode(mode).option("compression", compression)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    if mode not in ("error", "overwrite"):
+        raise ValueError(f"mode must be 'error' or 'overwrite', not {mode!r}")
+    with sink(path, overwrite=mode == "overwrite") as tmp:
+        df.write.option("compression", compression).partitionBy(*partition_by).parquet(tmp)
+
+
+def partition_columns(path: str) -> tuple[str, ...]:
+    """The category (``partitionBy``) columns of the dataset at
+    ``path``: its ``name=value`` directory levels, outermost first."""
+    cols: list[str] = []
+    while level := sorted(glob.glob(f"{glob.escape(path)}/*=*/")):
+        path = level[0]
+        cols.append(path.split("/")[-2].partition("=")[0])
+    return tuple(cols)
 
 
 def read_columns(
@@ -117,14 +137,20 @@ def combine(spark: SparkSession, paths: list[str], out: str | None = None, run_v
     return merged
 
 
-def compact(spark: SparkSession, path: str, out: str, target_files: int = 0) -> None:
-    """Maintenance: rewrite a dataset into ``target_files`` files per
-    partition (0 = one per core).  The small-files problem is the
-    100 TB analog of i3cols' per-file temp dirs needing a combine step.
+def compact(spark: SparkSession, path: str, out: str, target_files: int = 0, compression: str = "zstd") -> None:
+    """Maintenance: rewrite a dataset with ``compression`` into at most
+    ``target_files`` files per partition (0 = one per core).  The
+    small-files problem is the 100 TB analog of i3cols' per-file temp
+    dirs needing a combine step.  Also the body of
+    ``compat.compress``/``decompress``.
+
+    The output keeps the source's category layout: it is partitioned
+    by the source's ``partition_columns``, so filters on them still
+    prune.  The scan is coalesced to ``target_files`` tasks, each
+    writing at most one file per partition.
     """
-    df = read_columns(spark, path)
-    n = target_files or spark.sparkContext.defaultParallelism
-    df.coalesce(n).write.mode("overwrite").option("compression", "zstd").parquet(out)
+    df = read_columns(spark, path).coalesce(target_files or spark.sparkContext.defaultParallelism)
+    write_columns(df, out, partition_by=partition_columns(path), compression=compression, mode="overwrite")
 
 
 def events_to_i3_shape(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,13 +17,14 @@ implementation of that protocol:
   ``data_fingerprint``) PLUS whatever layout parameters
   the caller records, so a CODE change to the layout (bucket count,
   Morton bits) invalidates the mirror exactly like a data change;
-- temp-then-swap and reclaim: ``i3cols_spark.publish`` — every build
-  writes into its own unique sibling ``<out>.tmp-<pid>-<uuid>`` and
-  writes the ``_MIRROR.json`` marker there LAST, then publishes it by
-  directory swap; a build that raises removes its temp dir, of two
-  concurrent builders the later one discards its copy once it sees
-  the other's current marker, and every cache miss first removes the
-  siblings that dead builders left behind.
+- temp-then-swap and reclaim: ``i3cols_spark.publish.building`` —
+  every build writes into its own unique sibling
+  ``<out>.tmp-<pid>-<uuid>`` and writes the ``_MIRROR.json`` marker
+  there LAST, then publishes it by directory swap; a build that
+  raises removes its temp dir, of two concurrent builders the later
+  one discards its copy once it sees the other's current marker, and
+  every cache miss first removes the siblings that dead builders left
+  behind.
 """
 
 from __future__ import annotations
@@ -31,12 +32,11 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import shutil
 from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
-from i3cols_spark.publish import publish, reclaim, tmp_name
+from i3cols_spark.publish import building
 
 
 def _warehouse_root(spark: SparkSession, kind: str) -> str:
@@ -113,16 +113,10 @@ def write_once(
     }
     if _marker(out) == expected:
         return out, False
-    reclaim(out)
-    tmp = tmp_name(out)
-    try:
+    with building(out, lambda o: _marker(o) == expected) as tmp:
         build(tmp)
         with open(os.path.join(tmp, _MARKER), "w") as fh:
             json.dump(expected, fh)
-        publish(tmp, out, lambda o: _marker(o) == expected)
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
     return out, True
 
 

@@ -66,8 +66,12 @@ Spark-first design notes:
 
 ``write_npy_columns`` is the inverse — a **driver-side migration/
 export utility** (collects through Arrow), not a scale sink; the
-engine's real sink is partitioned parquet (sources/ingest.py).  The
-round trip is property-tested in tests/test_npy_source.py.
+engine's real sink is partitioned parquet (sources/ingest.py).  Like
+that sink it builds each export in a private sibling directory and
+publishes it whole by directory swap (``i3cols_spark.publish``), so a
+failed export leaves the previous one readable and a rewrite needs no
+pruning of stale keys.  The round trip is property-tested in
+tests/test_npy_source.py.
 
 Unsigned integers widen to the next signed Spark type (u1→short,
 u2→int, u4→long); u8 maps to long and raises on values above 2^63-1
@@ -112,6 +116,7 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from i3cols_spark.publish import sink
 from i3cols_spark.session import register_data_source
 
 FORMAT_NAME = "i3cols_npy"
@@ -511,45 +516,36 @@ def write_npy_columns(df, path: str, overwrite: bool = False) -> None:
     """Export a DataFrame to the reference's column-dir layout
     (``<key>/data.npy`` + ``index.npy`` for array columns) so results
     flow back to an i3cols/NumPy consumer.  Collects via Arrow on the
-    driver — a migration tool, deliberately not a distributed sink."""
-    os.makedirs(path, exist_ok=overwrite)
-    tbl = df.toArrow()
-    if overwrite:
-        # Prune key dirs left by a previous export with other columns
-        # or row counts — stale keys would later read back misaligned
-        # (or silently resurrect a dropped column).
-        import shutil
+    driver — a migration tool, deliberately not a distributed sink.
 
-        for entry in os.listdir(path):
-            sub = os.path.join(path, entry)
-            if os.path.isdir(sub) and entry not in tbl.column_names:
-                shutil.rmtree(sub)
-    for name in tbl.column_names:
-        col = _one_chunk(tbl.column(name))
-        # The npy layout has no null representation (structured arrays
-        # are dense) — refuse rather than silently writing garbage.
-        flat = col.flatten() if pa.types.is_list(col.type) else col
-        if col.null_count or (flat is not col and flat.null_count):
-            raise ValueError(
-                f"column {name!r} contains nulls; the npy column format "
-                "cannot represent them (fill or drop before export)"
-            )
-        kdir = os.path.join(path, name)
-        os.makedirs(kdir, exist_ok=True)
-        if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
-            import pyarrow.compute as pc
+    The export is built in a fresh private sibling of ``path`` and
+    published by directory swap (``i3cols_spark.publish.sink``): an
+    export that raises (a null, an unsupported type) leaves the
+    previous one whole, and a rewrite holds only this export's keys.
+    Unless ``overwrite``, an existing ``path`` raises FileExistsError."""
+    with sink(path, overwrite) as tmp:
+        os.makedirs(tmp)
+        tbl = df.toArrow()
+        for name in tbl.column_names:
+            col = _one_chunk(tbl.column(name))
+            # The npy layout has no null representation (structured arrays
+            # are dense) — refuse rather than silently writing garbage.
+            flat = col.flatten() if pa.types.is_list(col.type) else col
+            if col.null_count or (flat is not col and flat.null_count):
+                raise ValueError(
+                    f"column {name!r} contains nulls; the npy column format "
+                    "cannot represent them (fill or drop before export)"
+                )
+            kdir = os.path.join(tmp, name)
+            os.mkdir(kdir)
+            if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
+                import pyarrow.compute as pc
 
-            lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
-            offs = np.zeros(len(col) + 1, dtype=np.uint64)
-            np.cumsum(lens.astype(np.uint64), out=offs[1:])
-            index = np.empty(len(col), dtype=[("start", "<u8"), ("stop", "<u8")])
-            index["start"], index["stop"] = offs[:-1], offs[1:]
-            np.save(os.path.join(kdir, "index.npy"), index)
-            np.save(os.path.join(kdir, "data.npy"), _arrow_col_to_np(col.flatten()))
-        else:
-            # A stale index.npy (key was ragged in a previous export)
-            # would make the reader treat this scalar key as ragged.
-            stale_idx = os.path.join(kdir, "index.npy")
-            if os.path.exists(stale_idx):
-                os.remove(stale_idx)
+                lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+                offs = np.zeros(len(col) + 1, dtype=np.uint64)
+                np.cumsum(lens.astype(np.uint64), out=offs[1:])
+                index = np.empty(len(col), dtype=[("start", "<u8"), ("stop", "<u8")])
+                index["start"], index["stop"] = offs[:-1], offs[1:]
+                np.save(os.path.join(kdir, "index.npy"), index)
+                col = col.flatten()
             np.save(os.path.join(kdir, "data.npy"), _arrow_col_to_np(col))

@@ -159,6 +159,21 @@ def test_overwrite_prunes_stale_keys(spark, tmp_path):
     assert back.count() == 10
 
 
+def test_failed_export_keeps_the_previous_one(spark, tmp_path):
+    """An export that raises on a null in a later column, after the
+    earlier columns were converted, leaves the previous export whole:
+    it reads back unchanged and no temp sibling remains."""
+    out = str(tmp_path / "export")
+    good = spark.range(10).select(F.col("id").alias("a"), (F.col("id") * 2).alias("b"))
+    write_npy_columns(good, out, overwrite=True)
+    before = sorted(map(tuple, read_npy_columns(spark, out).collect()))
+    bad = spark.sql("SELECT * FROM VALUES (1, 1.0), (2, CAST(NULL AS DOUBLE)) AS t(a, b)")
+    with pytest.raises(ValueError, match="nulls"):
+        write_npy_columns(bad, out, overwrite=True)
+    assert sorted(map(tuple, read_npy_columns(spark, out).collect())) == before
+    assert [n for n in os.listdir(tmp_path) if n.startswith("export.tmp-")] == []
+
+
 def test_export_rejects_nulls(spark, tmp_path):
     df = spark.sql("SELECT * FROM VALUES (1, 1.0), (2, CAST(NULL AS DOUBLE)) AS t(k, x)")
     with pytest.raises(Exception, match="nulls"):
