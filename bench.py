@@ -1,5 +1,5 @@
-"""Benchmark harness — prints ONE JSON line for the driver
-(BENCH_r{N}.json): headline queries at $SPARK_GRAFT_SF_DIR (default
+"""Benchmark harness — prints ONE JSON line of headline-query timings
+(``cli.py bench`` runs it too) at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 Headline set: one representative per operator family (scan+filter,
@@ -40,28 +40,24 @@ HEADLINE = [
     "q_source_npy_scan",
     "q_stream_tumbling",
     "q_stream_session",
-    # Round-6 breadth (VERDICT r05 item 7): the heaviest post-r5
-    # operators, so regressions in the expensive tail stay visible
-    # round-over-round.  Their first-inclusion baselines are recorded
-    # in BASELINE.md §round-6.
+    # The heaviest later operators, so regressions in the expensive
+    # tail stay visible.
     "q_multimodal_video_frames",
     "q_text_bigram_lm",
     "q_dedup_clusters",
     # Round-7 additions: the production near-dup output mode (linear
     # rep mapping instead of quadratic pairs) and the completed audio
-    # path (real polyphase PCM synthesis).  First-inclusion baselines
-    # in BASELINE.md §round-7.
+    # path (real polyphase PCM synthesis).
     "q_dedup_ngram_cluster_rep",
     "q_multimodal_audio_pcm",
     # Round-7 seventh wave: the heaviest plan in the engine (41M
     # oriented wedges at sf0.1) — the graph-join tail stays
-    # regression-visible.  First-inclusion baseline in BASELINE.md.
+    # regression-visible.
     "q_graph_triangles",
     # Round-7 late waves: the sketch family (geometry-bounded state),
     # join-driven partition pruning, and the frontier-BFS loop —
     # cheap individually but structurally distinct plans worth
-    # regression-watching.  First-inclusion baselines in BASELINE.md
-    # §round-7 late waves.
+    # regression-watching.
     "q_agg_sketch_countmin",
     "q_agg_sketch_bloom",
     "q_scan_dpp_join",
@@ -69,8 +65,7 @@ HEADLINE = [
     # Round-7 session-3: the heaviest new plans — fuzzy-match CC
     # closure (the engine's longest iterative loop after triangles),
     # the Gram/power-iteration pair, and the LSH cost-model audit
-    # (signature + 4-band explode).  First-inclusion baselines in
-    # BASELINE.md §round-7 session-3.
+    # (signature + 4-band explode).
     "q_entity_resolution",
     "q_embedding_pca_power",
     "q_dedup_lsh_bucket_audit",
@@ -79,7 +74,6 @@ HEADLINE = [
     # skeleton, the 64-bit pHash band join, the IVF recall audit
     # (index probe + exact GEMM side), BM25 (explode + double
     # aggregate + postings join), and the per-frame video decode.
-    # First-inclusion baselines in BASELINE.md §round-8.
     "q_dedup_minhash_lsh_verified",
     "q_basket_assoc_rules_rel",
     "q_dedup_phash64_hamming",
@@ -91,19 +85,17 @@ HEADLINE = [
     # lacks) and the k-core peel.
     "q_text_bpe_merges",
     "q_graph_kcore_peel",
-    # Round-9 additions (VERDICT r08 items 6+8): the interval-overlap
-    # aggregate (rewritten round 10 from the Θ(pairs) grid join to the
-    # O(n log n) sweep-line — VERDICT r09 item 1; was 353 s here, now
-    # seconds) and the partition-column IVF mirror probe (the
-    # production serving layout).  First-inclusion baselines in
-    # BASELINE.md §round-9; post-rewrite baseline in §round-10.
+    # Round-9 additions: the interval-overlap aggregate (rewritten
+    # round 10 from the Θ(pairs) grid join to the O(n log n)
+    # sweep-line; was 353 s here, now seconds) and the
+    # partition-column IVF mirror probe (the production serving
+    # layout).
     "q_join_interval_grid",
     "q_similarity_ann_ivf_partitioned",
     # Round-9 waves 4-6: the heaviest new plans — the collapsed
     # TF-IDF posting self-join, the two-ranker RRF fusion, the
     # two-round HITS iteration, and the full Lloyd k-means iteration
-    # (two argmin folds + an M-step).  First-inclusion baselines in
-    # BASELINE.md §round-9 wave-4/5/6.
+    # (two argmin folds + an M-step).
     "q_text_tfidf_cosine",
     "q_similarity_hybrid_rrf",
     "q_graph_hits",
@@ -113,8 +105,7 @@ HEADLINE = [
     # expression in the engine) and LPA-community conductance (the 4
     # LPA rounds plus an edge-sized two-key label join — conductance
     # subsumes q_graph_label_propagation's plan, so one entry watches
-    # both).  First-inclusion baselines in BASELINE.md §round-9
-    # wave-13/16.
+    # both).
     "q_dedup_simhash_verified",
     "q_graph_conductance",
 ]
@@ -122,14 +113,14 @@ HEADLINE = [
 #: Timed in pass 1 only — queries too expensive to triple.  Empty
 #: since round 10: the one former member (q_join_interval_grid,
 #: ~305 s/pass as the Θ(pairs) grid join) became an O(n log n)
-#: sweep-line (VERDICT r09 item 1) and rides the normal min-of-3.
+#: sweep-line and rides the normal min-of-3.
 #: The mechanism stays for future audit-class heavyweights.
 HEAVY: set[str] = set()
 
 #: The round-1 headline set — the stable cross-round regression
-#: subset (VERDICT r09 item 8: emit the core/heavy split so the
-#: shared-subset ratio is computable without reverse-engineering
-#: query lists).  ``core_suite_wall_seconds`` sums exactly these;
+#: subset (the core/heavy split makes the shared-subset ratio
+#: computable without reverse-engineering query lists).
+#: ``core_suite_wall_seconds`` sums exactly these;
 #: ``heavy_suite_wall_seconds`` is everything added since (the
 #: audit-class / first-inclusion tail).
 LEGACY_CORE = {
@@ -186,7 +177,7 @@ def main() -> None:
             # the suite 50 s -> 110 s purely on py4j/driver-loop time
             # and was reverted to keep the series comparable.
             #
-            # ADDITIONS-ONLY honesty field (VERDICT r12 item 2): a few
+            # ADDITIONS-ONLY honesty field: a few
             # pre-r12 operators run real cluster work at construction
             # under historical EAGER checkpoints (q_dedup_near_minhash's
             # exact-Jaccard truth side, q_text_tfidf_cosine's weighted

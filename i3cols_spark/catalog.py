@@ -1,4 +1,4 @@
-"""Generated operator catalog (VERDICT r10 item 7).
+"""Generated operator catalog.
 
 At 323 distinct operators, discoverability is the engine's remaining
 usability gap: ``build_catalog()`` renders one markdown document —

@@ -68,10 +68,10 @@ def assert_driver_sortable(columns: list[str], rows: list[tuple], name: str) -> 
     """Replicate the driver's canonicalizer failure mode.
 
     The driver canonicalizes results by loading them into a pandas
-    DataFrame and ``sort_values`` over every column (CORRECTNESS_r01
-    tracebacks); unhashable cells (numpy arrays from ArrayType/MapType
-    output columns) crash pandas' lexsort and the query is recorded as
-    FAIL even when values match.  Running the same sort here makes the
+    DataFrame and ``sort_values`` over every column; unhashable cells
+    (numpy arrays from ArrayType/MapType output columns) crash pandas'
+    lexsort and the query is recorded as FAIL even when values match.
+    Running the same sort here makes the
     local gate predict that crash.
     """
     import pandas as pd

@@ -1,5 +1,5 @@
 """Pure-stdlib media codecs — the honest baseline behind the
-multimodal operators (SURVEY north-star; VERDICT r04 item 2).
+multimodal operators (SURVEY north-star).
 
 The container has no Pillow/librosa, but several real formats are
 decodable with nothing beyond ``struct``/``zlib``/``wave``:

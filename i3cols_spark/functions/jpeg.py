@@ -1,8 +1,7 @@
 """Baseline JPEG (ITU-T T.81 sequential DCT) encoder + decoder in
 numpy + stdlib — closing the last per-format gate in the multimodal
-codec surface (VERDICT r04 item 2 follow-through: BMP/PPM/PGM/PNG/WAV
-went real in round 5; JPEG was the one image format still behind
-``NotImplementedError``).
+codec surface (BMP/PPM/PGM/PNG/WAV went real in round 5; JPEG was the
+one image format still behind ``NotImplementedError``).
 
 Scope — the honest baseline, not a libjpeg replacement:
 

@@ -151,7 +151,7 @@ def _skip_leading_junk(payload: bytes) -> int:
 
 def parse_frames(payload: bytes) -> list[FrameHeader]:
     """Walk the whole stream header-to-header, starting at the first
-    syncword (leading junk / ID3v2 skipped — ADVICE r06).  From the
+    syncword (leading junk / ID3v2 skipped).  From the
     first frame on, frames must be back-to-back and fully inside the
     payload; anything else is a malformed stream."""
     if len(payload) < 4:

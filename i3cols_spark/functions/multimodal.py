@@ -833,7 +833,7 @@ def image_ahash(df: DataFrame) -> DataFrame:
 def image_ahash64(df: DataFrame) -> DataFrame:
     """(media_id, payload) → (media_id, ahash_lo, ahash_hi): the
     PRODUCTION-width 64-bit average hash (8×8 nearest-neighbor grid —
-    VERDICT r07 item 4: the 16-bit space saturates once the corpus
+    the 16-bit space saturates once the corpus
     outgrows 2¹⁶ buckets), emitted as two 32-bit halves because
     ``1 << 63`` overflows signed BIGINT arithmetic in SQL engines —
     each half stays a small positive long, XOR/popcount compose

@@ -5,7 +5,7 @@ doubles HALF_UP while DuckDB rounds them half-to-even.  Ratios of
 integers (counts, ranks, integer-valued measures) are exact binary/
 decimal fractions, so ``k/n`` landing exactly on x.…5 at the rounding
 precision is a real event — a sf0.1 soak caught cume_dist (k/1280)
-differing in the last digit between engines (VERDICT r04 evidence).
+differing in the last digit between engines.
 
 ``floor(x·10^dp + 0.5)/10^dp`` computes the HALF_UP result from plain
 IEEE arithmetic, which is bit-identical across engines for identical

@@ -125,7 +125,7 @@ def q_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     differs), so the ESTIMATE can't ride a value-hash oracle — but the
     ±5% accuracy CONTRACT can: the oracle asserts TRUE per group, so a
     drifted/broken sketch flips the official row red instead of
-    hiding behind a rows-only record (VERDICT r07 item 5).
+    hiding behind a rows-only record.
     tests/test_properties.py additionally bounds the raw estimate.
     At 100 TB the approx path is THE way to count distinct users:
     fixed-size sketch, no giant shuffle of raw ids — the exact
@@ -873,7 +873,7 @@ _HIST_QS = (0.25, 0.50, 0.75, 0.90, 0.99)
     ),
     cells AS (
         -- binning divisor mirrors the Spark-side degenerate-width
-        -- guard (ADVICE r08): constant column -> all rows bin 0 in
+        -- guard: constant column -> all rows bin 0 in
         -- BOTH engines instead of a NULL-bin divergence; the ESTIMATE
         -- width below stays unguarded exactly like the Spark side.
         SELECT CAST(least({_HIST_BINS - 1},
@@ -1030,7 +1030,7 @@ def _hist_width() -> "F.Column":
 def hist_cells(priced: DataFrame) -> DataFrame:
     """(bin, cnt) of the ≤256-cell equi-width grid over a frame of
     (o_totalprice, mn, mx) — q_agg_sketch_histogram and its streaming
-    twin.  Binning guard (ADVICE r07): a constant-valued column makes
+    twin.  Binning guard: a constant-valued column makes
     the width 0 and the unguarded index NULL (double div-by-zero), so
     the index falls back to width 1.0 and maps everything to bin 0;
     the quantile ESTIMATE keeps the true width (0 then), so the

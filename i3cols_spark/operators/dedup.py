@@ -92,8 +92,9 @@ def _minhash_rep_graph(
     q_dedup_minhash_cluster_rep).  Single-plan pair callers
     (q_dedup_near_minhash) must keep the default: for them
     ReuseExchange already shares the exchange, and an eager
-    checkpoint was measured WORSE (BASELINE.md round-11 negative
-    result on q_dedup_simhash_verified)."""
+    checkpoint of q_dedup_simhash_verified's 3-consumer signature
+    table measured WORSE (8.8 → 10.5 s at sf0.1, local[32];
+    NEGATIVES.md N9)."""
     num_perm, bands, rows_per_band = 32, 8, 4
     # Single-file fixture ⇒ single input split; spread the per-row
     # shingle/hash work across cores (at 100 TB the file count does it).
@@ -282,7 +283,7 @@ def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dedup, emitted as its oracle-checkable AUDIT
-    (the q_agg_approx_distinct r8 precedent, VERDICT r08 item 4): one
+    (the q_agg_approx_distinct r8 precedent): one
     row with the EXACT ground truth the oracle recomputes — doc count,
     exact-duplicate pair count, true pair counts at Jaccard ≥ 0.5 and
     ≥ 0.9 (inverted-index exact Jaccard, the q_dedup_ngram_jaccard
@@ -596,7 +597,7 @@ def q_dedup_text_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def minhash_cluster_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-representative output for the MinHash+LSH near-dup path
-    (VERDICT r06 item 6's second emitter): one ``(doc_id, rep_id)``
+    (the family's second emitter): one ``(doc_id, rep_id)``
     row per document, rep_id = min doc_id of the LSH-candidate,
     Jaccard-≥0.5-verified cluster — linear output where the pair mode
     is quadratic in cluster size.  The PRODUCTION stream behind
@@ -665,7 +666,7 @@ def minhash_cluster_members(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_minhash_cluster_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH cluster-representative mapping, emitted as its
-    oracle-checkable AUDIT (VERDICT r09 item 5 — same flip as
+    oracle-checkable AUDIT (same flip as
     q_dedup_near_minhash/q_dedup_simhash; the per-doc stream is
     ``minhash_cluster_members`` above, and the md5-family pipeline is
     value-hash-pinned end to end by
@@ -856,7 +857,7 @@ def simhash_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """xxhash64 SimHash path, emitted as its oracle-checkable AUDIT
-    (VERDICT r09 item 5 — the q_dedup_near_minhash r9 precedent;
+    (the q_dedup_near_minhash r9 precedent;
     the per-doc sketch stream itself is ``simhash_sketches`` above,
     and the md5-family construction is value-hash-pinned end to end
     by q_dedup_simhash_verified): one row with the exact corpus
@@ -984,7 +985,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and REVERTED — measured slower at sf0.1 (checkpoint write/read
     # of the |distinct texts|×|tokens| table beats nothing, since the
     # post-shuffle aggregate is all the consumers re-run), same
-    # single-plan lesson as q_dedup_simhash_verified.
+    # single-plan lesson as q_dedup_simhash_verified (NEGATIVES.md N11).
     tc = (
         docs0.groupBy(F.xxhash64(normalize("text")).alias("th"))
         .agg(F.min("doc_id").alias("rep"), F.first("text").alias("text"))
@@ -1163,7 +1164,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dedup_ngram_cluster_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION output mode for near-dup dedup (VERDICT r06 item 6):
+    """PRODUCTION output mode for near-dup dedup:
     one ``(doc_id, rep_id)`` row per document — rep_id = the min
     doc_id of its n-gram-Jaccard-≥0.2 cluster — instead of the
     all-pairs list q_dedup_ngram_jaccard emits.
@@ -1191,7 +1192,7 @@ def q_dedup_ngram_cluster_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
     at oracle SF, which is exactly the asymmetry that makes the rep
     mode the production path.
 
-    Density ceiling (measured, BASELINE.md §round-7): EXACT Jaccard
+    Density ceiling (measured at the round-7 d100 probe): EXACT Jaccard
     over every true pair costs O(Σ|posting|²) in the inverted-index
     join — at the d100 probe (every text has 99 near-partners) that
     is ~10^10 intermediate rows, a real-cluster-sized job that an
@@ -1685,8 +1686,8 @@ def q_text_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_embedding_cluster_rep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-representative output for EMBEDDING near-dup — the
-    third emitter of the cluster_rep family (VERDICT r06 item 6:
-    ngram = oracle-checked, minhash = rows-only), and the only
+    third emitter of the cluster_rep family (ngram =
+    oracle-checked, minhash = rows-only), and the only
     SQL-expressible SIMILARITY-graph closure: one (vec_id, rep_id)
     row per vector, rep = component min of the ≥τ cosine pair graph,
     singletons representing themselves.  Near-dup semantics differ
@@ -1797,7 +1798,7 @@ def q_dedup_lsh_bucket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from i3cols_spark.functions.text import shingles
 
-    # r12 NEGATIVE RESULT, left as-is on measurement: the 4-branch
+    # r12 NEGATIVE RESULT (NEGATIVES.md N16), left as-is: the 4-branch
     # union is four 1-task scans at fixture scale (stage audit: 4.8 s
     # executor-run over 4 tasks), but BOTH rewrites tried against it
     # measured worse — spread()+union multiplied executor-run 8x
@@ -1914,17 +1915,17 @@ def q_dedup_minhash_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
         *md5_minhash("sh"),
     )
     cand = bucket_pairs(_md5_band_keys(hs, "doc_id"), "bucket")
-    # (r13 measured negative, reverted — the q_dedup_simhash_verified
-    # verify-stream pinning tried here: a pinned repartition of the
-    # doc-level (doc_id, hsh) side, shared by ha/hb via ReuseExchange,
-    # to spread the 6-task AQE-coalesced verify tail seen at the 10×
-    # probe.  d10: 10.4 → 9.95 s (marginal — the dominant 138 s stage
-    # already runs 128-wide); sf0.1 interleaved: 1.21/1.17 →
-    # 1.30/1.35 s, a real regression: shuffling the hashed-shingle
-    # ARRAYS costs more than the small verify tail it spreads — the
-    # same verdict as r12's hs disk-checkpoint negative.  Unlike
-    # simhash_verified, this verify's per-row work rides arrays the
-    # pinning must move.)
+    # (r13 measured negative, reverted, NEGATIVES.md N5 — the
+    # q_dedup_simhash_verified verify-stream pinning tried here: a
+    # pinned repartition of the doc-level (doc_id, hsh) side, shared
+    # by ha/hb via ReuseExchange, to spread the 6-task AQE-coalesced
+    # verify tail seen at the 10× probe.  d10: 10.4 → 9.95 s (marginal —
+    # the dominant 138 s stage already runs 128-wide); sf0.1
+    # interleaved: 1.21/1.17 → 1.30/1.35 s, a real regression: shuffling
+    # the hashed-shingle ARRAYS costs more than the small verify tail it
+    # spreads — the same verdict as r12's hs disk-checkpoint negative.
+    # Unlike simhash_verified, this verify's per-row work rides arrays
+    # the pinning must move.)
     ha = hs.select(F.col("doc_id").alias("doc_a"), F.col("hsh").alias("ha"))
     hb = hs.select(F.col("doc_id").alias("doc_b"), F.col("hsh").alias("hb"))
     jac = F.size(F.array_intersect("ha", "hb")) / F.size(F.array_union("ha", "hb"))
@@ -2120,7 +2121,7 @@ def q_dedup_simhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # propagation on the driver (OOM in QueryPlanConstraints under a
     # vanilla 1 GiB session — the driver-sim sweep crashed at this
     # query), and the no-checkpoint form measured FASTER anyway once
-    # the band union below became a single explode.
+    # the band union below became a single explode (NEGATIVES.md N10).
     d = docs.groupBy(F.md5(normalize("text")).alias("th")).agg(
         F.min("doc_id").alias("rep"),
         F.min(normalize("text")).alias("norm"),
@@ -2149,7 +2150,7 @@ def q_dedup_simhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # first 32-bit word (chars 0–7) resp. (15−j)·4.. of the second
     # (chars 8–15), so bit k of nibble j is one shiftright away —
     # identical integer votes, 8× fewer substring/conv per token.
-    # (r13 measured negatives, both reverted — VERDICT r12 item 7:
+    # (r13 measured negatives, both reverted — NEGATIVES.md N3, N4:
     #  1. dedup md5 calls per (text, token) IN-ROW (array_distinct +
     #     per-distinct frequency via transform/filter, no new
     #     exchange, votes as Σ cnt·(2b−1)): 4.08 s vs 3.57 s

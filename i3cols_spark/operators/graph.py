@@ -59,7 +59,7 @@ def connected_components(
     if max_iter < 1:
         # Without this, zero loop iterations would fall through to the
         # non-convergence branch with `changed` unbound (NameError
-        # instead of the intended contract error — ADVICE r03).
+        # instead of the intended contract error).
         raise ValueError(f"connected_components: max_iter must be >= 1, got {max_iter}")
     # Materialize the edge list ONCE: the hook join re-reads it every
     # round, and without this the entire upstream pipeline (e.g. the
@@ -99,7 +99,7 @@ def connected_components(
     # spark.newSession() (same context, own conf) — mutating the
     # caller's session conf would leak the graph-sized value into any
     # query compiled concurrently in that session, e.g. a streaming
-    # micro-batch (ADVICE r04 item 1).  Frames cross sessions via
+    # micro-batch.  Frames cross sessions via
     # global temp views; the loop's checkpoints are materialized by
     # its own fixpoint actions, so the handed-back frame is a cheap
     # RDD scan.  On big graphs p == the session value anyway.
@@ -1022,7 +1022,7 @@ def _assoc_rule_parts(spark, sf_dir: str):
 def q_basket_assoc_rules_rel(spark, sf_dir: str) -> DataFrame:
     """Association rules with a RELATIVE minimum support — the floor
     is ``max(2, ceil(frac · n_baskets))``, Apriori's native
-    parameterization (VERDICT r07 item 3): the absolute-floor twin
+    parameterization: the absolute-floor twin
     (q_basket_assoc_rules) stops pruning under data growth — the x10
     replication probe multiplies every pair count ×10, so ``c ≥ 2``
     keeps ALL 1.2M pairs and the marginals join + rank blow up 3.6×

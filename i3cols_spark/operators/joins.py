@@ -712,7 +712,7 @@ def q_join_interval_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     order activity intervals [orderdate, max shipdate] that overlap,
     plus the widest overlap — O(n log n), never Θ(pairs).
 
-    History (VERDICT r09 item 1): this query originally enumerated
+    History: this query originally enumerated
     candidate pairs through a grid-cell equi-join and claimed the
     Θ(true pairs) cost (~1.7 B at sf0.1, 353 s) was "inherent to the
     overlap-count semantics".  It is inherent only to pair
@@ -858,7 +858,7 @@ def q_join_interval_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NB: Spark's least() SKIPS nulls (unlike SQL's strict NULL-in →
     # NULL-out), so the empty w_prior frame on the first start-day per
     # priority would otherwise collapse candidate (a) to max_e - s — a
-    # phantom self-overlap of the earliest interval (ADVICE r10, high).
+    # phantom self-overlap of the earliest interval.
     prior_max = F.max("max_e").over(w_prior)
     cand = F.greatest(
         F.when(

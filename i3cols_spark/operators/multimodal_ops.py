@@ -416,7 +416,7 @@ def q_multimodal_audio_pcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedded near-perfect-reconstruction prototype window — round-trip
     SNR ≈ 78 dB), re-analyzed by the §C.1.3 filterbank — emitted in
     the oracle-checkable AUDIT form (the q_agg_approx_distinct r8
-    precedent, VERDICT r08 item 4):
+    precedent):
 
     * ``n_pcm`` — the decoded sample count, hash-compared against the
       oracle's CLOSED-FORM prediction (n_frames × 384, with n_frames
@@ -781,12 +781,12 @@ def q_dedup_phash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_dedup_phash64_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRODUCTION-width perceptual-hash near-dup pairs: the 64-bit
-    8×8-grid average hash at Hamming radius ≤ 2 (VERDICT r07 item 4 —
-    the 16-bit twin q_dedup_phash_hamming saturates once the corpus
-    outgrows its 2¹⁶ buckets: 43k → 4.6M radius-2 pairs at d10, a
-    107× blowup of COINCIDENTAL collisions; 64 bits keep the radius-2
-    ball at ~2×10⁻¹⁵ of the hash space, so emitted pairs are true
-    visual near-dups at any corpus size).
+    8×8-grid average hash at Hamming radius ≤ 2 (the 16-bit twin
+    q_dedup_phash_hamming saturates once the corpus outgrows its 2¹⁶
+    buckets: 43k → 4.6M radius-2 pairs at d10, a 107× blowup of
+    COINCIDENTAL collisions; 64 bits keep the radius-2 ball at ~2×10⁻¹⁵
+    of the hash space, so emitted pairs are true visual near-dups at any
+    corpus size).
 
     Banding with an exactness proof, one size up: the hash travels as
     two 32-bit halves (``1 << 63`` overflows signed BIGINT in any SQL

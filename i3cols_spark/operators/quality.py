@@ -557,7 +557,7 @@ def dp_laplace_noise(
     stream_dp_class_counts, whose equality test is exactly this
     determinism claim.
 
-    SECURITY (ADVICE r07): with ``secret=None`` the noise is a pure
+    SECURITY: with ``secret=None`` the noise is a pure
     function of the PUBLIC cell key, so anyone can recompute and
     subtract it — that form is a CROSS-ENGINE DETERMINISM TEST
     VECTOR, not a privacy mechanism, and must never guard a real
@@ -650,8 +650,8 @@ def q_quality_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the only cross-engine exposure is libm-vs-JVM ln (≤1 ulp),
     absorbed by HALF_UP 6 dp.
 
-    THIS QUERY IS A MECHANISM TEST VECTOR, NOT A PRIVATE RELEASE
-    (ADVICE r07): it hashes the public cell key with NO secret seed —
+    THIS QUERY IS A MECHANISM TEST VECTOR, NOT A PRIVATE RELEASE:
+    it hashes the public cell key with NO secret seed —
     which is precisely what makes it cross-engine checkable — so its
     noise is recomputable by anyone and carries zero ε-DP guarantee
     (it also emits true_count, which no release would).  The

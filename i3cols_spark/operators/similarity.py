@@ -245,8 +245,7 @@ def rep_pair_sims(
     # ``label`` rides along so blocked consumers (per-label components,
     # graph.py) can partition the pair stream without a re-join.  Its
     # type is DERIVED from the input: a hardcoded int silently
-    # overflowed bigint block keys and rejected string ones (ADVICE
-    # r03).
+    # overflowed bigint block keys and rejected string ones.
     label_type = dict(emb.dtypes)["label"]
     rep_sims = pairs.mapInPandas(
         score, f"label {label_type}, a_id bigint, b_id bigint, cos_sim double"
@@ -428,7 +427,7 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, refine_iters: int = 0) -> 
 
     This is the write-once index-build job of a real IVF deployment:
     the per-call ``count()`` + assignment GEMM that used to run inside
-    the query (12.6× at the 100× probe, VERDICT r01) happens here,
+    the query (12.6× at the 100× probe) happens here,
     amortized over every subsequent probe.  Centroids default to a
     deterministic stride sample of ~``_IVF_NLIST`` vectors; the
     stride-from-count keeps the centroid set O(nlist) and the
@@ -606,9 +605,9 @@ def ivf_topk(
 @query("q_similarity_ann_ivf_partitioned", oracle=_IVF_ORACLE)
 def q_similarity_ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF probe read as the PARTITION-COLUMN serving layout — the
-    production layout claim of BASELINE.md made evidence (VERDICT r08
-    item 6): the cell id of the ``build_ivf_index`` dataset is a real
-    partition column of a shared warehouse dataset, the probe's
+    production layout claim made evidence: the cell id of the
+    ``build_ivf_index`` dataset is a real partition column of a shared
+    warehouse dataset, the probe's
     ``cell IN probed`` binds as a PartitionFilter, and the scan reads
     exactly ``_IVF_NPROBE`` of the ``_IVF_NLIST`` cell directories
     (tests/test_plans.py checks the executed scan's partition count).
@@ -766,8 +765,8 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ, emitted as its oracle-checkable AUDIT (VERDICT r09
-    item 5 — the q_dedup_near_minhash r9 precedent; the approximate
+    """IVF-PQ, emitted as its oracle-checkable AUDIT (the
+    q_dedup_near_minhash r9 precedent; the approximate
     top-5 stream itself is ``ivfpq_topk`` above, and the ADC
     construction is value-hash-pinned by q_similarity_pq_adc_verified):
     one row with the exact ground truth the oracle recomputes — corpus
@@ -784,7 +783,7 @@ def q_similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
       recall from the IVF probe choice — measured 5/5 at
       sf0.001/sf0.01 and 2/5 at sf0.1 (deterministic stride-sample
       codebooks, fixed data); the floor sits at 1 so the audited
-      boolean has margin against recall drift (ADVICE r10).
+      boolean has margin against recall drift.
 
     Scale shape: the PQ side is the production plan (pruned cell
     scan, 8-byte codes, LUT scoring, exact re-rank of 20); the truth
@@ -816,7 +815,7 @@ def q_similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |Δ| ≤ 1.5e-6, not equality: the two sides compute the same
     # cosine through different float paths (numpy qnorm vs Spark
     # norm_l2), so the 6-dp roundings can land one quantum apart on a
-    # .xxxxxx5 boundary (ADVICE r10).  The bound sits at 1.5 quanta
+    # .xxxxxx5 boundary.  The bound sits at 1.5 quanta
     # because two ADJACENT 6-dp doubles usually differ by slightly
     # MORE than 1e-6 in IEEE arithmetic (|0.123457-0.123456| =
     # 1.000000000001e-06) — a bound of exactly 1e-6 would reject the
@@ -848,7 +847,7 @@ def q_similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_rerank_bad") == 0).alias("rerank_exact_ok"),
             # floor ≥ 1 (measured: 5/5 at sf0.001/0.01, exactly 2/5 at
             # sf0.1) — the earlier ≥ 2 bound had ZERO margin against a
-            # hardcoded-TRUE oracle (ADVICE r10); ≥ 1 still catches a
+            # hardcoded-TRUE oracle; ≥ 1 still catches a
             # broken shortlist (a corrupted codebook recovers 0) while
             # tolerating recall drift from codebook/stride changes.
             (F.col("n_overlap") >= 1).alias("pq_recall_vs_exact_cells_ok"),
@@ -877,8 +876,8 @@ _KNN_QUERY_MOD = 125
 _KNN_TILE = 4096
 
 #: Exact tiling costs one corpus scan per tile; past this many tiles
-#: the batch routes to the write-once IVF index instead (VERDICT r06
-#: item 5) — n_probe corpus CELLS per query rather than n_tiles full
+#: the batch routes to the write-once IVF index instead — n_probe
+#: corpus CELLS per query rather than n_tiles full
 #: scans.  With nprobe = nlist the IVF route is exhaustive, which is
 #: how the equivalence test pins it to the exact path.
 _KNN_IVF_ROUTE_TILES = 8
@@ -927,7 +926,7 @@ def q_similarity_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id asc) the final window ranks by, and the global top-k under
     a total order is contained in the union of per-partition top-k.
 
-    Tiles are EXACT-BOUND (ADVICE r06): membership is a dense
+    Tiles are EXACT-BOUND: membership is a dense
     row_number over vec_id, so tile t collects rows
     [t·_KNN_TILE, (t+1)·_KNN_TILE) — ≤ _KNN_TILE vectors per collect
     for ANY id distribution, not just uniform ones (the old
@@ -1578,9 +1577,9 @@ _RECALL_NQ = 50
 )
 def q_similarity_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k-vs-nprobe curve for the IVF index — the audit that
-    puts the ANN QUALITY/COST TRADEOFF itself under the oracle
-    (VERDICT r07 item 7), the way q_dedup_lsh_bucket_audit audits the
-    LSH cost model: q_similarity_ann_ivf is exact-checked only at its
+    puts the ANN QUALITY/COST TRADEOFF itself under the oracle, the way
+    q_dedup_lsh_bucket_audit audits the LSH cost model:
+    q_similarity_ann_ivf is exact-checked only at its
     operating point, but a deployment chooses nprobe from THIS curve
     — per nprobe ∈ {1, 2, 4, 8}: how many neighbors the probe
     returned, how many were true top-k, and recall@k against the

@@ -557,8 +557,8 @@ def q_sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at 64 in the statement, so the LEVEL guard (default 100) needs
     # no touch.  Raising the ROW guard for a provably list-shaped
     # recursion is the correct setting, not a bypass.  The limit is a
-    # FIXED constant (ADVICE r09: a data-sized bound ran an eager
-    # count() job inside the builder), and — ADVICE r10 — the raise is
+    # FIXED constant (a data-sized bound ran an eager count() job
+    # inside the builder), and the raise is
     # SCOPED: the conf is read at execution time, so the recursion is
     # materialized here (eager ``materialize``) and the session guard
     # restored in a finally, leaving later statements under the

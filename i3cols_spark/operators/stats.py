@@ -86,9 +86,9 @@ def exact_percentiles(
 def exact_percentiles_multi(
     df: DataFrame, key: str, specs: dict[str, dict[str, float]]
 ) -> DataFrame:
-    """``exact_percentiles`` over SEVERAL value columns in ONE scan
-    (VERDICT r04 item 5): the columns are unpivoted via ``stack`` into
-    (key, vcol, value) rows, so one groupBy builds every column's
+    """``exact_percentiles`` over SEVERAL value columns in ONE scan:
+    the columns are unpivoted via ``stack`` into (key, vcol, value)
+    rows, so one groupBy builds every column's
     distinct-value histogram together and one window pass cumsums each
     (key, vcol) distribution — the table is read once however many
     columns are profiled, vs one full scan per column in the naive
@@ -175,10 +175,9 @@ def q_agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumsum + bracket pick), NOT Spark's ``percentile`` aggregate — see
     ``exact_percentiles`` for why the buffering aggregate fails at
     scale (7.9× at the 10× probe).  Both value columns ride ONE
-    lineitem scan (VERDICT r04 item 5: the two-call form read the
-    table twice); ``approx_percentile`` (bounded-state sketch) remains
-    the alternative when even the distinct-value histogram is too
-    wide.
+    lineitem scan (the two-call form read the table twice);
+    ``approx_percentile`` (bounded-state sketch) remains the alternative
+    when even the distinct-value histogram is too wide.
     """
     li = table(spark, sf_dir, "lineitem")
     both = exact_percentiles_multi(
@@ -344,7 +343,7 @@ def q_agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's t-digest), so the VALUE can't ride a hash oracle — but
     the rank-accuracy CONTRACT can: the oracle asserts TRUE per
     group/quantile, so a drifted sketch flips the official row red
-    instead of hiding behind a rows-only record (VERDICT r08 item 4).
+    instead of hiding behind a rows-only record.
     tests/test_properties.py still bounds the raw estimates.
 
     Scale shape: pass 1 is the fixed-size sketch per group (map-side
@@ -669,8 +668,8 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     round at 6 dp and the score at 4 dp in both engines (registry
     discipline: interpolated doubles feed further arithmetic).
 
-    r13 negative (measured, reverted): scoring straight off the
-    deviation stream ``d`` (which already carries md) instead of
+    r13 negative (measured, reverted; NEGATIVES.md N2): scoring
+    straight off the deviation stream ``d`` (which already carries md) instead of
     ``ev ⋈ broadcast(m ⋈ s)`` shrinks the plan (one fewer events scan
     in the text, no m ⋈ s join, m's subtree no longer duplicated
     inside the stats broadcast build) but measured 1.17–1.19 s vs
@@ -1006,10 +1005,10 @@ def q_stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     with odd per-replicate multipliers — both engines draw the
     IDENTICAL resample (value-hash-checked where a rand() bootstrap
     would be rows-only), operands kept to 31 bits so products fit
-    int64 in both engines (the importance-sampling overflow lesson,
-    VERDICT r05).  The first cut hashed per (row, replicate) — B md5
-    evaluations per row, 20 s at sf0.1; hashing per row and mixing
-    per replicate is statistically equivalent here and ~5× cheaper.
+    int64 in both engines (the importance-sampling overflow lesson).
+    The first cut hashed per (row, replicate) — B md5 evaluations per
+    row, 20 s at sf0.1; hashing per row and mixing per replicate is
+    statistically equivalent here and ~5× cheaper.
     Replicate means are canonicalized at 6 dp BEFORE the
     SE/percentile reduction (multi-row float-sum discipline), and
     the percentile runs through the exact_percentiles engine (same
@@ -2950,7 +2949,7 @@ def q_stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n2",
         "runs",
         round_half_up(e_runs, 6).alias("e_runs"),
-        # degenerate-series guard (ADVICE r09): with every non-median
+        # degenerate-series guard: with every non-median
         # day on one side (n1·n2 = 0) — or the n1 = n2 = 1 corner —
         # Var[R] is 0 and z would be ±Inf/NaN, whose floor/round
         # behavior differs across engines; NULL is the statistic's
@@ -3309,7 +3308,7 @@ def q_stats_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the exact_percentiles bracket trick.  The z sums follow the
     q_agg_stats_corr double discipline → round 6 dp.
 
-    Scale (VERDICT r09 item 4 — the named escape, now implemented):
+    Scale (the named escape, now implemented):
     the r9 form ranked RAW rows in a window partitioned by |groups|
     (3 tasks each total-sorting n/3 rows; ×10 probe 3.9×).  Now the
     heavy reduction is ``groupBy(g, x).count()`` — map-side
@@ -3603,7 +3602,7 @@ def q_ml_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fn",
             "n_true",
             "n_pred",
-            # n_pred = 0 guard (ADVICE r10): Spark's 0/0 yields NULL
+            # n_pred = 0 guard: Spark's 0/0 yields NULL
             # but DuckDB's IEEE float path yields inf — make both
             # engines render NULL via an explicit CASE.  Unreachable
             # under the tertile rule (every class is predicted) but

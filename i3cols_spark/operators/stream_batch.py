@@ -262,7 +262,7 @@ def q_merge_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropDuplicates; this models upsert-compaction, the other half of
     every log-to-table pipeline.
 
-    Hot-key-proof shape (VERDICT r04 item 4): a ``max_by`` GROUP BY
+    Hot-key-proof shape: a ``max_by`` GROUP BY
     instead of a row_number window.  The window form shuffles EVERY
     row of a key to one reducer before ranking; ``max_by`` is a
     declarative aggregate, so each map task pre-combines its rows to
@@ -452,7 +452,7 @@ def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     a relational engine would pick); at 100 TB the walk form reads
     events once vs the oracle shape's three scans + three joins.
 
-    Skew containment (VERDICT r04): the walk only reads the three
+    Skew containment: the walk only reads the three
     funnel event types, so they are filtered INSIDE the collect —
     ``collect_list`` skips nulls, so a ``when`` guard drops non-funnel
     events during the map-side partial aggregation and a hot user's

@@ -1517,13 +1517,13 @@ _BPE_CHECKPOINT_EVERY = 8
 def _bpe_learn_ctes(rounds: int) -> list[str]:
     """The unrolled learner CTE chain (w0 → b{r}/w{r} per round) as a
     LIST of parts both oracle builders assemble directly — no string
-    surgery on assembled SQL (ADVICE r08: the old
+    surgery on assembled SQL (the old
     ``learn.rindex("SELECT CAST(1")`` slice also matched
     ``SELECT CAST(10`` and would silently mis-slice past 9 rounds).
 
     The w0 word table filters empty words: ``tokens()`` emits '' for
     empty/whitespace-only text, and an empty word's symbol sequence
-    diverges cross-engine (ADVICE r08: Spark's sequence(0, -1) is the
+    diverges cross-engine (Spark's sequence(0, -1) is the
     DESCENDING [0, -1] → a phantom pair; DuckDB's range(0) is empty).
     The Spark learner applies the identical filter."""
     m = "chr(31)"
@@ -1598,7 +1598,7 @@ def bpe_learn(
     ``(round, s1, s2, freq)`` and the final word table
     ``(word, cnt, seq)``.
 
-    Cost model (the 100 TB story, VERDICT r08 design note): learning
+    Cost model (the 100 TB story): learning
     is a DRIVER-COORDINATED loop — each merge round is exactly two
     Spark jobs (one vocabulary-sized pair aggregate feeding a 1-row
     top-1 collect, then a lazily-composed per-row replace), so a
@@ -1617,7 +1617,7 @@ def bpe_learn(
       merged), the loop stops — deeper budgets than the corpus
       supports terminate instead of crashing on an empty top-1.
 
-    Empty words are filtered before sequences are built (ADVICE r08:
+    Empty words are filtered before sequences are built (
     Spark's ``sequence(0, -1)`` descends, minting a phantom pair the
     DuckDB oracle never sees)."""
     words = (
@@ -1716,7 +1716,7 @@ def q_text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bpe_apply_oracle() -> str:
     """Shares the learner's unrolled CTE chain (as a parts LIST from
-    ``_bpe_learn_ctes`` — no slicing of assembled SQL, ADVICE r08),
+    ``_bpe_learn_ctes`` — no slicing of assembled SQL),
     then counts per-doc tokens under the FINAL merged vocabulary."""
     m = "chr(31)"
     ctes = ",\n    ".join(_bpe_learn_ctes(_BPE_ROUNDS))

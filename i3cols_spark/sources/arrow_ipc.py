@@ -134,7 +134,7 @@ class SnapshotConflictError(RuntimeError):
     any orphan snapshot before computing its own version
     (``_roll_forward``), so by the time a version collision is seen
     the only possible owner of the existing file is a live racer
-    (ADVICE r08: the old behavior wedged the table — every retry
+    (the old behavior wedged the table — every retry
     recomputed the same version from the unmoved HEAD and failed
     forever because part names are fresh uuids)."""
 
@@ -150,8 +150,7 @@ def _head_state(root: str) -> dict | None:
 
 def _flip_head(root: str, payload: dict) -> bool:
     """Atomically point HEAD at ``payload`` — the single place
-    ``_commit`` (and roll-forward) go through (ADVICE r08, both
-    findings):
+    ``_commit`` (and roll-forward) go through:
 
     * UNIQUE tmp name (pid+uuid, as ``_publish_snapshot``): the old
       shared ``manifest + ".tmp"`` let two processes in the flip
@@ -207,8 +206,7 @@ def _roll_forward(root: str, head: dict | None) -> dict | None:
 
 
 def _publish_snapshot(root: str, version: int, payload: dict) -> None:
-    """Atomically publish the immutable ``v{n}`` snapshot (ADVICE r07,
-    both manifest findings):
+    """Atomically publish the immutable ``v{n}`` snapshot:
 
     * TORN WRITES: the payload is fully written + fsynced to a tmp
       file first, then hard-linked into its final name — a crash can
@@ -389,7 +387,7 @@ def _commit(
 
     * Any crashed commit's orphan snapshot is adopted FIRST, so this
       commit's version is computed against the true latest state
-      (ADVICE r08 — recomputing the orphan's version from the unmoved
+      (recomputing the orphan's version from the unmoved
       HEAD wedged on SnapshotConflictError).  If the orphan IS this
       stream epoch (crash after snapshot, before flip), its adopted
       batches record makes the replay a no-op.

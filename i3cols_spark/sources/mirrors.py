@@ -48,21 +48,36 @@ def _warehouse_root(spark: SparkSession, kind: str) -> str:
     return os.path.join(wh, kind)
 
 
+def _spark_reads(name: str) -> bool:
+    """Whether Spark's file listing keeps ``name``: it skips names that
+    start with ``.``, or with ``_`` unless they hold ``=`` (a partition
+    dir), and in-flight ``._COPYING_`` files, but keeps the parquet
+    summary files ``_metadata`` and ``_common_metadata``."""
+    if name.startswith(("_metadata", "_common_metadata")):
+        return True
+    hidden = name.startswith(".") or (name.startswith("_") and "=" not in name)
+    return not (hidden or name.endswith("._COPYING_"))
+
+
 def data_fingerprint(path: str) -> str:
     """Cheap content fingerprint of a parquet file/dir: names + sizes +
-    mtimes of every data file, PLUS the tail bytes of each file — for
-    parquet that's the footer, whose row-group statistics change
+    mtimes of every file Spark would read, PLUS the tail bytes of each
+    — for parquet that's the footer, whose row-group statistics change
     whenever values change.  The metadata-only stat walk misses a
     regeneration that preserves sizes and mtimes (``rsync -a`` /
-    ``tar -p`` restores — ADVICE r04 item 3); the 4 KiB footer sample
-    closes that hole for a few metadata-sized reads, no data scan.  On
-    a real cluster both the stat-walk and the ranged tail read go to
-    the shared filesystem."""
+    ``tar -p`` restores); the 4 KiB footer sample closes that hole
+    for a few metadata-sized reads, no data scan.  Files and dirs
+    Spark's listing skips (Hadoop ``.crc`` checksums, ``_SUCCESS``)
+    are left out, which halves the files a fingerprint of a local
+    parquet dataset opens.  On a real cluster both the stat-walk and
+    the ranged tail read go to the shared filesystem."""
     h = hashlib.md5()
     if os.path.isdir(path):
-        files = sorted(
-            os.path.join(dp, f) for dp, _, fs in os.walk(path) for f in fs
-        )
+        files = []
+        for dp, dirs, fs in os.walk(path):
+            dirs[:] = [d for d in dirs if _spark_reads(d)]
+            files += [os.path.join(dp, f) for f in fs if _spark_reads(f)]
+        files.sort()
     else:
         files = [path]
     for f in files:

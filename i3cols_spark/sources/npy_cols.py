@@ -520,8 +520,9 @@ def write_npy_columns(df, path: str, overwrite: bool = False) -> None:
 
     The export is built in a fresh private sibling of ``path`` and
     published by directory swap (``i3cols_spark.publish.sink``): an
-    export that raises (a null, an unsupported type) leaves the
-    previous one whole, and a rewrite holds only this export's keys.
+    export that raises (a null, or a type the npy layout has no dtype
+    for, such as a DECIMAL, named with its column) leaves the previous
+    one whole, and a rewrite holds only this export's keys.
     Unless ``overwrite``, an existing ``path`` raises FileExistsError."""
     with sink(path, overwrite) as tmp:
         os.makedirs(tmp)
@@ -548,4 +549,11 @@ def write_npy_columns(df, path: str, overwrite: bool = False) -> None:
                 index["start"], index["stop"] = offs[:-1], offs[1:]
                 np.save(os.path.join(kdir, "index.npy"), index)
                 col = col.flatten()
-            np.save(os.path.join(kdir, "data.npy"), _arrow_col_to_np(col))
+            try:
+                data = _arrow_col_to_np(col)
+            except NotImplementedError as e:
+                raise NotImplementedError(
+                    f"column {name!r}: {e}; cast it to double or a fixed-width "
+                    "integer before export"
+                ) from e
+            np.save(os.path.join(kdir, "data.npy"), data)

@@ -75,8 +75,8 @@ TABLES = (
 #: ``table()`` checks this on every schema-memo fill — metadata-only,
 #: no scan — so a regenerated fixture that drifts a logical type fails LOUDLY
 #: at the choke point, naming the column, instead of surfacing as a
-#: cryptic mid-query error or a silent value change (VERDICT r04
-#: item 6; round 3's breakage class).
+#: cryptic mid-query error or a silent value change (round 3's
+#: breakage class).
 _DATE_FLAVORS = ("timestamp_ntz", "timestamp")
 FIXTURE_SCHEMAS: dict[str, dict[str, tuple[str, ...]]] = {
     "region": {"r_regionkey": ("int",), "r_name": ("string",)},
@@ -297,7 +297,7 @@ def spread(df: DataFrame, spark: SparkSession, min_bytes: int = 256 << 10) -> Da
     when the input is already split at least ``defaultParallelism``
     ways or is too small (< ``min_bytes``) for task-spreading to beat
     the fixed cost of a 32-task shuffle — at oracle SF (sf0.01) the
-    unconditional form was pure per-query overhead (VERDICT r01).
+    unconditional form was pure per-query overhead.
     """
     import os
     from urllib.parse import unquote
@@ -307,7 +307,7 @@ def spread(df: DataFrame, spark: SparkSession, min_bytes: int = 256 << 10) -> Da
         files = df.inputFiles()
         # inputFiles() returns URIs: strip the scheme AND percent-decode
         # — a path with spaces/unicode arrives URL-encoded and a raw
-        # getsize() on it silently reports the file missing (ADVICE r03).
+        # getsize() on it silently reports the file missing.
         paths = [unquote(f.removeprefix("file:")) for f in files]
         nbytes = sum(os.path.getsize(p) for p in paths if os.path.exists(p))
     except Exception:  # non-file-backed plan — keep the old behavior

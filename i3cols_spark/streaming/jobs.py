@@ -370,7 +370,7 @@ def stream_histogram_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from i3cols_spark.operators.aggregates import hist_cells, hist_extrema
 
     ext = hist_extrema(table(spark, sf_dir, "orders")).first()
-    # Geometry guard (ADVICE r07): an empty table has no extrema to
+    # Geometry guard: an empty table has no extrema to
     # pin edges from — fail loudly before the stream starts.
     if ext["mn"] is None or ext["mx"] is None:
         raise ValueError(
@@ -396,7 +396,7 @@ def stream_dp_class_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch and silently multiply the privacy spend.  The stream≡batch
     test is exactly that claim.  Like its batch twin this is a
     MECHANISM TEST VECTOR, not a private release: no secret seed is
-    mixed in (ADVICE r07) — a production release passes
+    mixed in — a production release passes
     ``secret=<config value>`` to dp_laplace_noise."""
     from i3cols_spark.operators.quality import dp_classes, dp_release
 

@@ -12,7 +12,7 @@ Usage: python scripts/driver_sim.py [sf_dir] [query ...]
 
 ``--chunk i/N`` (1-based) runs the i-th of N contiguous slices of the
 alphabetically-sorted surface — the full sf0.1 sweep no longer fits
-one 30-minute invocation (VERDICT r07 item 6), so the standing recipe
+one 30-minute invocation, so the standing recipe
 is N sequential chunk runs whose TOTAL lines add up to the full
 surface.  ``--names-file`` reads one query name per line (blank lines
 and #-comments ignored) for arbitrary batching.

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Regenerate CATALOG.md from the live registry (VERDICT r10 item 7)."""
+"""Regenerate CATALOG.md from the live registry."""
 
 import pathlib
 import sys

@@ -1,22 +1,20 @@
-"""Optimization measurement harness (rounds 12+).
+"""Per-query plan capture and timing.
 
-Per-query tooling for the optimization loop (guide §1): capture
-``explain("formatted")`` to ``plans/<round>/<name>_<tag>.txt`` and time
-the query with the noop sink (bench.py's exact convention: construction
-untimed, min over N timed actions), without paying the full 48-query
-suite for every iteration.
+Captures ``explain("formatted")`` to ``plan-dumps/<name>_<tag>.txt``
+(gitignored) and times the query with the noop sink (bench.py's exact
+convention: construction untimed, min over N timed actions), without
+paying the full 48-query suite for every iteration.
 
 Usage:
-  python scripts/opt_measure.py explain <tag> <query> [...]   # plans/<round>/<q>_<tag>.txt
+  python scripts/opt_measure.py explain <tag> <query> [...]   # plan-dumps/<q>_<tag>.txt
   python scripts/opt_measure.py time [--passes N] <query> [...]
   python scripts/opt_measure.py both <tag> <query> [...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default os.cpu_count()),
-     SPARK_GRAFT_PLANS_ROUND (default r13 — plans/<round>/ target dir).
+     SPARK_GRAFT_CPUS (default os.cpu_count()).
 
-Import-path rule (VERDICT r12 "What's wrong" #4): the engine is
-imported from THIS script's checkout, not a hardcoded /root/repo, so a
-detached-worktree "before" run measures the before code.  Every run
+Import-path rule: the engine is imported from THIS script's checkout,
+not a hardcoded path, so a detached-worktree "before" run measures the
+before code.  Every run
 prints the resolved package path so an interleaved A/B transcript
 self-documents which tree each JVM imported.
 """
@@ -30,9 +28,7 @@ import time
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
-PLANS_DIR = os.path.join(
-    _REPO, "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r13")
-)
+PLANS_DIR = os.path.join(_REPO, "plan-dumps")
 
 
 def main() -> int:

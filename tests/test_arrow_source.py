@@ -283,7 +283,7 @@ def test_stream_through_arrowipc_exactly_once(spark, tmp_path):
 
 
 def test_publish_snapshot_conflict_and_idempotence(tmp_path):
-    """ADVICE r07: snapshot publication must be atomic (no torn
+    """Snapshot publication must be atomic (no torn
     v{n} file possible) and exclusive (two committers computing the
     same next version cannot both win — loser gets a retryable
     conflict; the shared snapshot is never overwritten).  A replayed
@@ -320,7 +320,7 @@ def test_publish_snapshot_conflict_and_idempotence(tmp_path):
 
 
 def test_crashed_commit_rolls_forward_instead_of_wedging(spark, tmp_path):
-    """ADVICE r08 (medium): a crash between _publish_snapshot and the
+    """A crash between _publish_snapshot and the
     HEAD flip leaves an orphan v{head+1} snapshot.  Part names are
     fresh uuids, so a retried commit can never reproduce the orphan's
     payload — under the old code every retry recomputed the same
@@ -362,7 +362,7 @@ def test_crashed_commit_rolls_forward_instead_of_wedging(spark, tmp_path):
 
 
 def test_head_flip_is_monotonic_and_uses_unique_tmp(spark, tmp_path):
-    """ADVICE r08 (low): the HEAD flip must refuse to regress to an
+    """The HEAD flip must refuse to regress to an
     older version (stale duplicate retry racing a newer committer)
     and must not use a shared fixed tmp name two processes could
     interleave writes into."""

@@ -675,7 +675,7 @@ def test_mpeg_gates_and_errors():
 
 def test_mpeg_sync_scan_skips_id3v2_and_junk():
     """parse_frames must find the first real frame behind an ID3v2 tag
-    or ripper junk (ADVICE r06) — and not be fooled by a false 0xFFEx
+    or ripper junk — and not be fooled by a false 0xFFEx
     pattern inside the junk."""
     import pytest as _pytest
 
@@ -833,12 +833,12 @@ def test_mpeg_via_multimodal_dispatch():
     assert len(d["features"]) > 3  # Layer I contributes subband samples
 
 
-# ------------------------------------------------- ADVICE r05 error contracts
+# ------------------------------------------------------- error contracts
 
 
 def test_gif_frame_without_color_table_raises_value_error():
     """A frame with neither global nor local palette must hit the
-    module's ValueError contract, not IndexError (ADVICE r05)."""
+    module's ValueError contract, not IndexError."""
     from i3cols_spark.functions.gif import decode_gif
 
     # Header + logical screen descriptor WITHOUT global color table
@@ -855,7 +855,7 @@ def test_gif_frame_without_color_table_raises_value_error():
 
 def test_avi_truncated_header_chunks_raise_value_error():
     """avih/strh chunks whose declared size is too small for their
-    fixed fields must raise ValueError, not struct.error (ADVICE r05)."""
+    fixed fields must raise ValueError, not struct.error."""
     from i3cols_spark.functions.avi import decode_mjpeg_avi
 
     def riff(*chunks: bytes) -> bytes:

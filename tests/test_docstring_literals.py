@@ -1,4 +1,4 @@
-"""Docstring-literal tripwire (ADVICE r11, low): several operator
+"""Docstring-literal tripwire: several operator
 docstrings state a tuning constant's VALUE in prose next to its name —
 e.g. "After 4 (_LPA_ROUNDS) sync rounds", "first 16 (_TRUNC_DIM)
 dimensions", "the df cap (<= 200, _TFIDF_DFCAP)".  Those literals are

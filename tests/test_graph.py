@@ -61,7 +61,7 @@ def test_non_convergence_raises_runtime_error(spark):
 
 def test_cc_does_not_mutate_caller_session_conf(spark):
     """The graph-sized shuffle.partitions override must live in an
-    isolated session (ADVICE r04 item 1): a concurrently compiled
+    isolated session: a concurrently compiled
     query in the caller's session must never see the loop's value.
     The caller conf is asserted unchanged and a frame compiled right
     after the loop plans with the session-default partition count."""

@@ -115,7 +115,7 @@ def test_i3_shape_ragged_roundtrip(spark, sf_dir, tmp_path):
 
 
 def test_events_ts_normalized_for_both_parquet_flavors(spark, tmp_path):
-    """Fixture contract pin (VERDICT r03): the driver has shipped
+    """Fixture contract pin: the driver has shipped
     events.ts as parquet TIMESTAMP(NANOS) (read: bigint under
     nanosAsLong) AND as timestamp[us] without timezone (read:
     TIMESTAMP_NTZ).  ``table()`` must yield the same contract for
@@ -159,7 +159,7 @@ def test_events_ts_normalized_for_both_parquet_flavors(spark, tmp_path):
 def test_spread_handles_url_encoded_paths(spark, tmp_path):
     """inputFiles() returns percent-encoded URIs; spread() must decode
     them before stat'ing, or a path with spaces reads as 0 bytes and
-    skips the repartition it was sized for (ADVICE r03)."""
+    skips the repartition it was sized for."""
     from i3cols_spark.sources.tables import spread
 
     d = tmp_path / "with space"
@@ -176,7 +176,7 @@ def test_spread_handles_url_encoded_paths(spark, tmp_path):
 def test_schema_drift_tripwire(spark, tmp_path, sf_dir):
     """A regenerated fixture whose logical types drift (the round-3
     breakage class) must fail LOUDLY at table() load, naming the
-    drifted column — not surface mid-query (VERDICT r04 item 6)."""
+    drifted column — not surface mid-query."""
     import pytest
 
     from i3cols_spark.sources.tables import SchemaDriftError, table

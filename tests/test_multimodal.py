@@ -84,7 +84,7 @@ def test_resize_halves_payload_and_metadata(spark, sf_dir):
 
 def test_video_with_zero_frames_raises_value_error(spark):
     """An AVI whose movi list holds no frames must produce a clear
-    per-payload ValueError, not a NaN mean_luma (ADVICE r05)."""
+    per-payload ValueError, not a NaN mean_luma."""
     import struct
 
     from i3cols_spark.functions.multimodal import extract_video_features

@@ -174,6 +174,21 @@ def test_failed_export_keeps_the_previous_one(spark, tmp_path):
     assert [n for n in os.listdir(tmp_path) if n.startswith("export.tmp-")] == []
 
 
+def test_export_names_the_column_it_cannot_write(spark, tmp_path):
+    """A DECIMAL column (what ``id * 0.5`` makes) has no npy dtype: the
+    error names the column and the casts that would export it, and the
+    previous export at the path stays byte-identical."""
+    out = tmp_path / "export"
+    write_npy_columns(spark.range(3).selectExpr("id AS k"), str(out), overwrite=True)
+    files = sorted(p for p in out.rglob("*") if p.is_file())
+    before = {p: p.read_bytes() for p in files}
+    decimal = spark.range(3).selectExpr("id * 0.5 AS x")
+    with pytest.raises(NotImplementedError, match=r"column 'x'.*decimal.*cast it to double"):
+        write_npy_columns(decimal, str(out), overwrite=True)
+    assert sorted(p for p in out.rglob("*") if p.is_file()) == files
+    assert {p: p.read_bytes() for p in files} == before
+
+
 def test_export_rejects_nulls(spark, tmp_path):
     df = spark.sql("SELECT * FROM VALUES (1, 1.0), (2, CAST(NULL AS DOUBLE)) AS t(k, x)")
     with pytest.raises(Exception, match="nulls"):

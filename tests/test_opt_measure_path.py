@@ -1,12 +1,12 @@
-"""Worktree self-test for scripts/opt_measure.py (VERDICT r12 item 5).
+"""Worktree self-test for scripts/opt_measure.py.
 
-The r12 harness hardcoded ``sys.path.insert(0, "/root/repo")``, so a
-"before" run launched from a detached git worktree silently imported
-the NEW engine — an A/B footgun that would eventually fabricate a
-measurement.  The script now resolves the repo root from its own file
-location; this test proves it by copying the script into a synthetic
-worktree with a stub ``i3cols_spark`` package and checking that
-``--where`` resolves the STUB, not the real repo.
+An earlier version of the script put a hardcoded absolute repo path on
+``sys.path``, so a "before" run launched from a detached git worktree
+silently imported the NEW engine — an A/B footgun that would
+eventually fabricate a measurement.  The script now resolves the repo
+root from its own file location; this test proves it by copying the
+script into a synthetic worktree with a stub ``i3cols_spark`` package
+and checking that ``--where`` resolves the STUB, not the real repo.
 """
 
 from __future__ import annotations

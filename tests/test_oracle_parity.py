@@ -27,8 +27,8 @@ def test_query_vs_oracle(spark, sf_dir, name):
 def test_output_schema_driver_safe(spark, sf_dir, name):
     """No registered query may emit a top-level array/map/struct column:
     the driver's canonicalizer pandas-sorts every output column and
-    crashes on unhashable numpy arrays (CORRECTNESS_r01 q_array_collect
-    / q_map_funcs).  Complex types belong upstream of the final
+    crashes on unhashable numpy arrays (seen on q_array_collect and
+    q_map_funcs).  Complex types belong upstream of the final
     projection; outputs are scalars."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
@@ -83,8 +83,8 @@ def test_catalog_first_sentence_keeps_et_al():
 
 
 def test_catalog_current():
-    """CATALOG.md is generated from the live registry (VERDICT r10
-    item 7) — a stale committed copy fails here, same discipline as
+    """CATALOG.md is generated from the live registry — a stale
+    committed copy fails here, same discipline as
     the README count tripwire.  Regenerate with
     ``python scripts/gen_catalog.py``."""
     import pathlib
@@ -100,7 +100,7 @@ def test_catalog_current():
 
 
 def test_readme_surface_count_in_sync():
-    """Surface-count tripwire (VERDICT r09 item 7): round 9 needed
+    """Surface-count tripwire: round 9 needed
     three manual 'count sync' commits because README counts drifted
     from the registry.  One source of truth: every '<N> registered
     entries' mention in README.md must equal len(surface_order()),
@@ -118,7 +118,7 @@ def test_readme_surface_count_in_sync():
     readme = (
         pathlib.Path(__file__).resolve().parent.parent / "README.md"
     ).read_text()
-    # Normalize whitespace FIRST (VERDICT r10: a line-wrapped
+    # Normalize whitespace FIRST (a line-wrapped
     # "(310\ndistinct operators" mention slipped through the
     # space-only regex for a whole round) so wrapped mentions match.
     flat = re.sub(r"\s+", " ", readme)

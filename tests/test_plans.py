@@ -314,12 +314,13 @@ def test_salted_join_matches_plain_join(spark, sf_dir):
 
 
 def test_salted_join_fans_hot_key_across_salts(spark, sf_dir):
-    """The skew claim itself (VERDICT r06 item 2): a hot key's rows
+    """The skew claim itself: a hot key's rows
     must leave the salted join spread across all n_salts sub-keys —
     i.e. the hot key's fact rows carry ≥ n_salts-1 distinct salt
     values — and the dim side must be replicated exactly n_salts×.
-    The wall-clock spread collapse is measured by scripts/
-    skew_probe.py (BASELINE.md round 7: 31.2× → 4.2×)."""
+    Measured at round 7 (1M rows, Zipf hot key with 29.3 % of them,
+    local[8], 32 partitions): the max/median task-time spread fell
+    from 31.2× unsalted to 4.2× with 8 salts."""
     from pyspark.sql import functions as F
 
     from i3cols_spark.sources.ingest import salted_join
@@ -400,7 +401,7 @@ def test_centroids_aggregate_partially(spark, sf_dir):
 
 
 def test_merge_latest_is_partial_maxby_not_window(spark, sf_dir):
-    """CDC compaction must pre-combine map-side (VERDICT r04 item 4):
+    """CDC compaction must pre-combine map-side:
     a row_number window ships a hot key's ENTIRE history to one
     reducer; the max_by aggregate sends one candidate row per upstream
     partition.  The plan must show partial/final aggregation and no
@@ -413,7 +414,7 @@ def test_merge_latest_is_partial_maxby_not_window(spark, sf_dir):
 
 
 def test_funnel_filters_inside_collect_not_before_groupby(spark, sf_dir):
-    """Funnel skew containment (VERDICT r04 item 3): non-funnel events
+    """Funnel skew containment: non-funnel events
     must be dropped inside the partial collect_list (CASE WHEN guard —
     collect_list skips nulls) rather than by a pre-groupBy filter,
     because a user with only non-funnel events still counts at stage
@@ -429,7 +430,7 @@ def test_funnel_filters_inside_collect_not_before_groupby(spark, sf_dir):
 def test_percentile_scans_lineitem_once(spark, sf_dir):
     """q_agg_percentile profiles two value columns; the stacked
     exact_percentiles_multi form must read lineitem ONCE (the two-call
-    form planned two FileScans — VERDICT r04 item 5)."""
+    form planned two FileScans)."""
 
 
     plan = explain_str(QUERIES["q_agg_percentile"](spark, sf_dir))
@@ -441,7 +442,7 @@ def test_percentile_scans_lineitem_once(spark, sf_dir):
 def test_data_fingerprint_detects_mtime_preserving_rewrite(tmp_path):
     """A regeneration that preserves file sizes and mtimes (rsync -a /
     tar -p restore) must still change the fingerprint: the tail-bytes
-    (parquet footer) sample is what catches it (ADVICE r04 item 3)."""
+    (parquet footer) sample is what catches it."""
     import os
 
     from i3cols_spark.sources.mirrors import data_fingerprint
@@ -457,6 +458,39 @@ def test_data_fingerprint_detects_mtime_preserving_rewrite(tmp_path):
     os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns))
     fp2 = data_fingerprint(str(d))
     assert fp1 != fp2
+
+
+def test_data_fingerprint_reads_only_what_spark_reads(tmp_path):
+    """The fingerprint skips the names Spark's file listing skips
+    (Hadoop ``.crc`` checksums, ``_SUCCESS``, hidden dirs): rewriting
+    only those leaves it unchanged, while rewriting a data file, a
+    partition dir's file or the parquet ``_metadata`` summary changes
+    it."""
+    from i3cols_spark.sources.mirrors import data_fingerprint
+
+    d = tmp_path / "ds"
+    (d / "run=1").mkdir(parents=True)
+    (d / "_temporary").mkdir()
+    data = d / "run=1" / "part-0.parquet"
+    data.write_bytes(b"A" * 100)
+    skipped = [
+        d / "run=1" / ".part-0.parquet.crc",
+        d / "_SUCCESS",
+        d / "._SUCCESS.crc",
+        d / "_temporary" / "part-1.parquet",
+        d / "part-2.parquet._COPYING_",
+    ]
+    for f in skipped:
+        f.write_bytes(b"x")
+    fp = data_fingerprint(str(d))
+    for f in skipped:
+        f.write_bytes(b"rewritten")
+        assert data_fingerprint(str(d)) == fp, f
+    data.write_bytes(b"B" * 100)
+    assert data_fingerprint(str(d)) != fp
+    fp = data_fingerprint(str(d))
+    (d / "_metadata").write_bytes(b"summary")
+    assert data_fingerprint(str(d)) != fp
 
 
 def test_fixed_n_sample_uses_take_ordered(spark, sf_dir):
@@ -915,7 +949,7 @@ def test_knn_batch_tiles_bound_the_query_collect(spark, sf_dir, monkeypatch):
 
 def test_knn_batch_routes_to_ivf_past_tile_threshold(spark, sf_dir):
     """Past _KNN_IVF_ROUTE_TILES tiles the batch must auto-route to
-    the IVF index (VERDICT r06 item 5).  With nprobe = nlist the IVF
+    the IVF index.  With nprobe = nlist the IVF
     route is exhaustive, so its results must EXACTLY equal the tiled
     exact path — and the route must actually engage (pinned by
     shrinking the tile size so the fixture's 4 queries become 4 tiles
@@ -952,7 +986,7 @@ def test_knn_batch_routes_to_ivf_past_tile_threshold(spark, sf_dir):
 
 
 def test_knn_batch_tile_bound_is_exact_for_strided_ids(spark, sf_dir):
-    """ADVICE r06: tile membership is a dense row_number, so the
+    """Tile membership is a dense row_number, so the
     per-tile collect bound holds for ANY vec_id distribution.  With
     tile_rows=3 and 4 fixture queries the tiles must be [3, 1] — the
     old floor(id/mod) % n_tiles scheme put ids 0,125,250,375 → tiles
@@ -980,7 +1014,7 @@ def test_knn_batch_tile_bound_is_exact_for_strided_ids(spark, sf_dir):
 
 
 def test_interval_grid_is_sweep_not_pair_join(spark, sf_dir):
-    """VERDICT r09 item 1: the interval-overlap AGGREGATE must run as
+    """The interval-overlap AGGREGATE must run as
     the O(n log n) sweep-line over the day-value distribution — never
     by enumerating candidate pairs.  Concretely: no nested-loop or
     cartesian shape anywhere, no grid-cell explode (the Θ(pairs)
@@ -1297,7 +1331,7 @@ def test_asof_nearest_is_one_shuffle_no_join(spark, sf_dir):
 
 
 def test_dp_noise_secret_seed_changes_noise(spark):
-    """ADVICE r07: the secret-free noise is a cross-engine test
+    """The secret-free noise is a cross-engine test
     vector, not a privacy mechanism — a production release mixes a
     config-supplied secret into the hash preimage.  Pin the API: a
     secret changes the realized noise (so the public-key form cannot
@@ -1415,7 +1449,7 @@ def test_kcore_rounds_use_semi_joins(spark, sf_dir):
 
 
 def test_ann_ivf_partitioned_scans_exactly_nprobe_cells(spark, sf_dir):
-    """VERDICT r08 item 6 evidence: the probe of the cell-partitioned
+    """The probe of the cell-partitioned
     IVF index must READ exactly _IVF_NPROBE of the cell directories
     (partition pruning at the file-listing level, not a post-scan
     filter), agree row-for-row with q_similarity_ann_ivf, and carry

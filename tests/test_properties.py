@@ -118,7 +118,7 @@ def test_minhash_candidates_superset_of_high_jaccard(spark, sf_dir):
 
 
 def test_cluster_rep_modes_are_valid_clusterings(spark, sf_dir):
-    """q_dedup_{ngram,minhash}_cluster_rep (VERDICT r06 item 6): each
+    """q_dedup_{ngram,minhash}_cluster_rep: each
     must emit exactly one row per document, rep_id must be the MIN
     doc_id of its own cluster (so reps are self-mapped), and the rep
     mapping must be consistent with the corresponding pair emitter:
@@ -217,8 +217,8 @@ def test_ann_ivf_results_agree_with_exact_cosines(spark, sf_dir):
 
 
 def test_ivf_lloyd_refinement_recall(spark, sf_dir):
-    """The flagged k-means refinement (build_ivf_index refine_iters>0,
-    VERDICT r04 item 7) must not lose recall vs the stride-sample seed
+    """The flagged k-means refinement (build_ivf_index refine_iters>0)
+    must not lose recall vs the stride-sample seed
     at equal nprobe — averaged over several query vectors against the
     exact brute-force top-k (the LSH-recall pattern)."""
     import numpy as np
@@ -267,7 +267,7 @@ def test_approx_percentile_within_rank_band(spark, sf_dir):
     """Weak check for q_agg_approx_percentile: each RAW estimate must
     fall between the exact (p-1%) and (p+1%) percentile values —
     computed here independently of the query, whose output is now the
-    rank-bound boolean form (VERDICT r08 item 4) and must be all-TRUE."""
+    rank-bound boolean form and must be all-TRUE."""
     from pyspark.sql import functions as F
 
     from i3cols_spark.operators.stats import exact_percentiles
@@ -302,7 +302,7 @@ def test_approx_percentile_within_rank_band(spark, sf_dir):
 def test_rep_pair_sims_label_type_follows_input(spark):
     """The pair stream's label column must carry the INPUT's label
     type: a hardcoded int overflowed bigint block keys and rejected
-    string ones (ADVICE r03)."""
+    string ones."""
     from i3cols_spark.operators.similarity import rep_pair_sims
 
     big = 10_000_000_000  # > int32
@@ -325,7 +325,7 @@ def test_rep_pair_sims_label_type_follows_input(spark):
 def test_pair_cells_bounded_under_residue_skew(spark):
     """Chunking hashes the id: ids that are all congruent mod the
     chunk count (a stride-sampled id space) must still spread across
-    cells instead of collapsing into one (ADVICE r03)."""
+    cells instead of collapsing into one."""
     import pyspark.sql.functions as F
     from i3cols_spark.operators.similarity import _CELL_CAP
 
@@ -896,7 +896,7 @@ def test_bpe_learning_properties(spark, sf_dir):
 
 
 def test_bpe_deep_trajectory_32_merges(spark, sf_dir):
-    """VERDICT r08 item 5: the learner takes any merge budget, not
+    """The learner takes any merge budget, not
     just the oracle's 4-round unroll.  32 merges on the fixture, with
     the exact telescoped conservation law — every merge round removes
     exactly ``freq`` symbols from the weighted corpus, so
@@ -948,7 +948,7 @@ def test_bpe_deep_trajectory_32_merges(spark, sf_dir):
 
 
 def test_bpe_empty_word_cross_engine_parity(spark, tmp_path):
-    """ADVICE r08: an empty/whitespace-only document used to mint a
+    """An empty/whitespace-only document used to mint a
     phantom ('','') pair on the Spark side (sequence(0,-1) descends)
     while the oracle's range(0) stayed empty.  Both engines now filter
     empty words; full cross-engine compare on a fixture that contains
@@ -3055,7 +3055,7 @@ def test_interval_sweep_equals_bruteforce_pairs(spark, sf_dir):
     """q_join_interval_grid's sweep-line identities (disjoint-pair
     complement + prior-end running max) vs literal pair enumeration
     over the same intervals — the check the grid→sweep rewrite
-    (VERDICT r09 item 1) must never drift from."""
+    must never drift from."""
     from itertools import combinations
 
     from pyspark.sql import functions as F
@@ -3100,7 +3100,7 @@ def test_interval_sweep_equals_bruteforce_pairs(spark, sf_dir):
 def test_interval_sweep_first_start_day_no_phantom_self_overlap(
     spark, tmp_path
 ):
-    """ADVICE r10 (high) regression: Spark's least() SKIPS nulls, so
+    """Regression: Spark's least() SKIPS nulls, so
     before the fix the empty prior-max frame on the FIRST start-day per
     priority made candidate (a) collapse to max_e - s — a phantom
     self-overlap of the earliest interval.  Repro from the advice:

@@ -194,7 +194,7 @@ def test_stream_anomaly_screen_matches_batch(spark, sf_dir):
     assert streamed == batch and len(batch) > 0
 
 
-# ------------------- multi-micro-batch state eviction (VERDICT r06 item 3)
+# ------------------------------------ multi-micro-batch state eviction
 
 
 def _write_event_file(path, rows, seq=0):
@@ -511,7 +511,7 @@ def test_stream_hll_registers_equals_batch(spark, sf_dir):
 
 
 def test_stream_histogram_grid_degenerate_geometry(spark, tmp_path):
-    """ADVICE r07: the static-scan histogram geometry must not divide
+    """The static-scan histogram geometry must not divide
     by zero on a constant-valued column (single-bin fallback) and
     must fail loudly, naming the column, on an empty table — both
     BEFORE the stream starts."""
@@ -598,7 +598,7 @@ def test_batch_histogram_degenerate_constant_column(spark, tmp_path):
         assert r["exact_price"] == 7.5, r
         assert r["rel_err"] == 0.0, r
 
-    # ADVICE r08: the ORACLE must take the same single-bin fallback —
+    # The ORACLE must take the same single-bin fallback —
     # the unguarded SQL divided by zero (NULL bin) on exactly this
     # degenerate fixture, flipping the official row red.  Full
     # cross-engine compare on the degenerate dir pins the parity.
