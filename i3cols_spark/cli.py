@@ -27,11 +27,11 @@ def _write(spark, df, out: str, partition_by=(), overwrite: bool = True) -> None
     """Write ``df`` with the parquet sink (``ingest.write_columns``),
     partitioned by those of ``partition_by`` it has, and print the
     result line ``{"written", "rows"}`` read back from ``out``."""
-    from i3cols_spark.sources.ingest import write_columns
+    from i3cols_spark.sources.ingest import read_columns, write_columns
 
     part = tuple(c for c in partition_by if c in df.columns)
     write_columns(df, out, partition_by=part, mode="overwrite" if overwrite else "error")
-    print(json.dumps({"written": out, "rows": spark.read.parquet(out).count()}))
+    print(json.dumps({"written": out, "rows": read_columns(spark, out).count()}))
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from i3cols_spark.operators.registry import query
-from i3cols_spark.sources.tables import table
+from i3cols_spark.sources.tables import read_parquet, table
 
 #: Files per mirror = pruning units.  At real scale this is thousands
 #: of files; 32 keeps the fixture mirror cheap while leaving pruning
@@ -153,7 +153,7 @@ def q_scan_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = zorder_mirror(spark, sf_dir, "z")
     lo_us = 1_704_672_000_000_000  # 2024-01-08 00:00 UTC in µs
     hi_us = 1_705_276_800_000_000  # 2024-01-15 00:00 UTC
-    df = spark.read.parquet(path).filter(
+    df = read_parquet(spark, path).filter(
         (F.col("user_id") >= 3)
         & (F.col("user_id") <= 75)
         & (F.col("us") >= lo_us)
@@ -227,7 +227,7 @@ def q_scan_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     are all value-hash-checked.
     """
     path = _month_partitioned_mirror(spark, sf_dir)
-    fact = spark.read.parquet(path)
+    fact = read_parquet(spark, path)
     dim = (
         table(spark, sf_dir, "orders")
         .select(F.date_format("o_orderdate", "yyyy-MM").alias("m"))

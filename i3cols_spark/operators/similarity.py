@@ -27,7 +27,7 @@ from i3cols_spark.functions.arrays import member_pairs, pair_structs
 from i3cols_spark.functions.vectors import as_double, cosine, dot, lsh_bucket, norm_l2
 from i3cols_spark.operators.registry import query
 from i3cols_spark.sources.mirrors import dataset_tag, write_once
-from i3cols_spark.sources.tables import materialize, table
+from i3cols_spark.sources.tables import materialize, read_parquet, table
 
 #: Fixed random hyperplanes (seed 42) shared by the Spark plan and the
 #: SQL oracle; 6 dp literals parse to identical doubles in both engines.
@@ -594,7 +594,7 @@ def ivf_topk(
         6,
     )
     return (
-        spark.read.parquet(idx)
+        read_parquet(spark, idx)
         .filter((F.col("vec_id") != query_vec_id) & F.col("cell").isin(probed))
         .select("vec_id", F.col("cell").cast("long").alias("cell"), cos_sim.alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
@@ -718,7 +718,7 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     pruned = (
-        spark.read.parquet(idx)
+        read_parquet(spark, idx)
         .filter((F.col("vec_id") != 0) & F.col("cell").isin(probed))
         .select("vec_id", F.col("cell").cast("long").alias("cell"), "v")
     )
@@ -1175,7 +1175,7 @@ def _knn_batch_ivf(
     # Bounded by nlist (index geometry), not by |Q| or corpus size.
     cells_needed = [int(r[0]) for r in probes.select("cell").distinct().collect()]
     corpus = (
-        spark.read.parquet(idx)
+        read_parquet(spark, idx)
         .filter(F.col("cell").isin(cells_needed))
         .select("vec_id", F.col("cell").cast("long").alias("cell"), "v")
     )
@@ -1636,7 +1636,7 @@ def q_similarity_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame
         probe_rows,
         "qid bigint, qv array<double>, qnorm double, cell bigint, cell_rank int",
     )
-    idx_df = spark.read.parquet(idx).select(
+    idx_df = read_parquet(spark, idx).select(
         "vec_id", F.col("cell").cast("long").alias("cell"), "v"
     )
     cos = F.round(

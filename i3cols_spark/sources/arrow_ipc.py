@@ -10,7 +10,9 @@ https://spark.apache.org/docs/latest/api/python/user_guide/sql/python_data_sourc
   maps its file and yields ``pyarrow.RecordBatch`` objects directly —
   Spark 4's arrow-batch read path, so rows never materialize in
   Python object form (the row-yield fallback is 10-100× slower).
-- WRITE: each task serializes its partition to a uniquely-named
+- WRITE: the sinks are Arrow writers (``DataSourceArrowWriter`` /
+  ``DataSourceStreamArrowWriter``): each task writes the record
+  batches Spark hands it straight into one uniquely-named
   ``part-*.arrow`` file and returns the name as its commit message;
   ``commit()`` atomically replaces ``_ARROW_MANIFEST.json`` with the
   list of files from SUCCESSFUL tasks only.  The reader trusts the
@@ -21,7 +23,8 @@ https://spark.apache.org/docs/latest/api/python/user_guide/sql/python_data_sourc
 - Supported Arrow↔Spark types are the explicit subset the engine's
   mirrors need (int64/float64/string/bool/int32); anything else
   raises NotImplementedError loudly rather than silently coercing —
-  the repo's codec-gating convention.
+  the repo's codec-gating convention.  The sinks check it once on
+  the driver, before any task writes a file.
 
 - STREAM: the same directory doubles as a streaming source
   (``spark.readStream.format("arrowipc")``): append commits extend
@@ -38,7 +41,7 @@ https://spark.apache.org/docs/latest/api/python/user_guide/sql/python_data_sourc
 
 At 100 TB: files are the parallelism unit exactly as with parquet;
 the manifest is one small JSON read on the driver; per-task memory is
-one record batch (reader) / one 64k-row chunk (writer).
+one record batch, reader and writer alike.
 """
 
 from __future__ import annotations
@@ -51,10 +54,10 @@ from typing import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
+    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     InputPartition,
     WriterCommitMessage,
 )
@@ -430,46 +433,41 @@ def _commit(
     _flip_head(root, payload)
 
 
-class ArrowIPCWriter(DataSourceWriter):
-    _CHUNK = 65536
+def _arrow_schema(schema):
+    """The Arrow schema the sinks write for Spark ``schema`` — the
+    supported-type gate, run once on the driver (``writer()`` /
+    ``streamWriter()``) so an unsupported column fails before any
+    task writes a file."""
+    import pyarrow as pa
 
-    def __init__(self, options: dict, schema, overwrite: bool) -> None:
+    return pa.schema(
+        [pa.field(f.name, _arrow_type(f.dataType.simpleString())) for f in schema.fields]
+    )
+
+
+def _write_part(root: str, arrow_schema, batches: Iterator) -> _Committed:
+    """One task's part file: every record batch Spark hands the task,
+    cast to ``arrow_schema`` and written straight into one uniquely
+    named IPC file; its name is the commit message."""
+    import pyarrow as pa
+
+    os.makedirs(root, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.arrow"
+    with pa.OSFile(os.path.join(root, name), "wb") as sink:
+        with pa.ipc.new_file(sink, arrow_schema) as writer:
+            for batch in batches:
+                writer.write_batch(batch.cast(arrow_schema))
+    return _Committed(name)
+
+
+class ArrowIPCWriter(DataSourceArrowWriter):
+    def __init__(self, options: dict, arrow_schema, overwrite: bool) -> None:
         self.root = options["path"]
-        self.schema = schema
+        self.arrow_schema = arrow_schema
         self.overwrite = overwrite
 
-    def write(self, rows: Iterator) -> _Committed:
-        import pyarrow as pa
-
-        fields = [
-            pa.field(f.name, _arrow_type(f.dataType.simpleString()))
-            for f in self.schema.fields
-        ]
-        arrow_schema = pa.schema(fields)
-        os.makedirs(self.root, exist_ok=True)
-        name = f"part-{uuid.uuid4().hex}.arrow"
-        with pa.OSFile(os.path.join(self.root, name), "wb") as sink:
-            with pa.ipc.new_file(sink, arrow_schema) as writer:
-                chunk: list = []
-                for row in rows:
-                    chunk.append(row)
-                    if len(chunk) >= self._CHUNK:
-                        writer.write_table(self._to_table(arrow_schema, chunk))
-                        chunk = []
-                writer.write_table(self._to_table(arrow_schema, chunk))
-        return _Committed(name)
-
-    @staticmethod
-    def _to_table(arrow_schema, rows: list):
-        import pyarrow as pa
-
-        cols = list(zip(*rows)) if rows else [[] for _ in arrow_schema]
-        return pa.table(
-            {
-                f.name: pa.array(list(c), type=f.type)
-                for f, c in zip(arrow_schema, cols)
-            }
-        )
+    def write(self, batches: Iterator) -> _Committed:
+        return _write_part(self.root, self.arrow_schema, batches)
 
     def commit(self, messages) -> None:
         _commit(self.root, messages, overwrite=self.overwrite)
@@ -480,7 +478,7 @@ class ArrowIPCWriter(DataSourceWriter):
         pass
 
 
-class ArrowIPCStreamWriter(DataSourceStreamWriter):
+class ArrowIPCStreamWriter(DataSourceStreamArrowWriter):
     """Streaming SINK with exactly-once semantics by IDEMPOTENT batch
     commits: the engine passes ``batchId`` (its checkpointed epoch) to
     ``commit``, and the manifest records which batch ids are already
@@ -495,13 +493,12 @@ class ArrowIPCStreamWriter(DataSourceStreamWriter):
     (manifest is the source of truth) until vacuum — identical to the
     failed-task orphan story."""
 
-    def __init__(self, options: dict, schema) -> None:
+    def __init__(self, options: dict, arrow_schema) -> None:
         self.root = options["path"]
-        self.schema = schema
-        self._delegate = ArrowIPCWriter(options, schema, overwrite=False)
+        self.arrow_schema = arrow_schema
 
-    def write(self, rows: Iterator) -> _Committed:
-        return self._delegate.write(rows)
+    def write(self, batches: Iterator) -> _Committed:
+        return _write_part(self.root, self.arrow_schema, batches)
 
     def commit(self, messages, batchId: int) -> None:
         _commit(self.root, messages, batch_id=batchId)
@@ -551,7 +548,7 @@ class ArrowIPCDataSource(DataSource):
         return ArrowIPCStreamReader(self.options)
 
     def writer(self, schema, overwrite: bool) -> ArrowIPCWriter:
-        return ArrowIPCWriter(self.options, schema, overwrite)
+        return ArrowIPCWriter(self.options, _arrow_schema(schema), overwrite)
 
     def streamWriter(self, schema, overwrite: bool) -> ArrowIPCStreamWriter:
         if overwrite:
@@ -560,7 +557,7 @@ class ArrowIPCDataSource(DataSource):
                 "complete/update would rewrite history that snapshot "
                 "readers may hold"
             )
-        return ArrowIPCStreamWriter(self.options, schema)
+        return ArrowIPCStreamWriter(self.options, _arrow_schema(schema))
 
 
 def register_arrow_ipc(spark) -> None:

@@ -24,7 +24,10 @@ implementation of that protocol:
   raises removes its temp dir, of two concurrent builders the later
   one discards its copy once it sees the other's current marker, and
   every cache miss first removes the siblings that dead builders left
-  behind.
+  behind;
+- reading: a parquet mirror's readers open it through
+  ``tables.read_parquet``, so a repeat open is a schema-memo hit and
+  a rebuilt mirror (new part files, new fingerprint) is re-inferred.
 """
 
 from __future__ import annotations

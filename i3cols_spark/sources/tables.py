@@ -12,10 +12,17 @@ just ``.select()``.
 Schema memo (the ``cols.load``-once analog): inferring a parquet
 schema launches one Spark job, and every query opens its tables
 afresh, so ``table_schema`` memoises each dataset's inferred
-``StructType`` and ``read_parquet`` (behind ``table()``) serves later
-opens with ``spark.read.schema(s).parquet(path)`` — no job.  A miss
+``StructType`` and ``read_parquet`` serves later opens with
+``spark.read.schema(s).parquet(path)`` — no inference job (a dataset
+with more partition directories than
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` is still
+listed in a job, hit or miss).  A miss
 hands back the frame that inferred the schema, so no open lists the
-path twice.
+path twice.  The memo serves fixture tables (``table()``), ``ingest``
+datasets (``read_columns``) and the derived mirrors
+(``sources/mirrors.py``) alike: outside this module, every parquet
+read in the package either goes through ``read_parquet`` or passes an
+explicit schema.
 
 * Key: the SparkSession (weakly held, so a dropped session drops its
   entries), the fixture name (``None`` for an unchecked read) and the
