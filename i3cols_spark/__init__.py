@@ -4,7 +4,7 @@ Spark-first (see SURVEY.md).
 
 Layout:
     session     SparkSession construction + defensive runtime config
-    jvm_archive the driver JVM's write-once class-data-sharing archive
+    jvm_archive the driver JVM's launch home and write-once class-data-sharing archive
     publish     temp-then-swap publishing of write-once directories
     sources     table loading, schema registry, ingest/ETL (i3cols S1-S11)
     functions   reusable column-expression libraries (i3cols S13 analog)

@@ -2,9 +2,9 @@
 every directory the engine writes whole.  Its users:
 
 - the write-once caches: the derived layout mirrors
-  (``sources/mirrors.write_once``) and the driver JVM's class-data-
-  sharing archive (``jvm_archive``, which builds at start and publishes
-  at exit, so it calls the three steps itself);
+  (``sources/mirrors.write_once``), the driver JVM's launch home and its
+  class-data-sharing archive (``jvm_archive``; the archive is built at
+  start and published at exit, so it calls the three steps itself);
 - the dataset sinks, through ``sink``: parquet
   (``sources/ingest.write_columns``, and so ``combine``, ``compact``,
   ``compat.save``/``compress``/``decompress`` and the CLI's

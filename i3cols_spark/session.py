@@ -10,15 +10,23 @@ single process — SURVEY §3.1); this module is where its implicit
 "environment" (UTC times, mmap laziness, pool parallelism) becomes
 explicit Spark config.
 
-JVM start: when ``get_spark`` itself launches the driver JVM, it starts
-it from a write-once class-data-sharing archive
-(``i3cols_spark.jvm_archive``), which roughly halves the launch.  The
-first launch on a host builds the archive (the JVM dumps it at exit,
-10–16 s, and an ``atexit`` hook waits for it and publishes it under
-``$XDG_CACHE_HOME/i3cols_spark/jvm/``); every later launch maps it.
-A session the package did not launch — a live JVM, ``newSession()``,
+JVM start: when ``get_spark`` itself launches the driver JVM
+(``i3cols_spark.jvm_archive``), it launches it from a package-owned
+*launch home* — ``SPARK_HOME`` pointed, for the launch only, at
+``$XDG_CACHE_HOME/i3cols_spark/jvm/home-<hash>/``, which links Spark's
+``bin`` and ``jars`` but has no ``python/lib`` zips — so every Python
+process Spark starts imports pyspark from the worker interpreter's
+site-packages and cached bytecode, not from ``pyspark.zip``.  When
+that interpreter cannot import the driver's pyspark (one cached probe
+per interpreter), the launch uses the real home instead.  The JVM also
+starts from a write-once class-data-sharing archive, which roughly
+halves the launch: the first launch on a host builds it (the JVM dumps
+it at exit, 10–16 s, and an ``atexit`` hook waits for it and publishes
+it under ``…/jvm/<key>/``); every later launch maps it.  A session the
+package did not launch — a live JVM, ``newSession()``,
 ``PYSPARK_GATEWAY_PORT`` — is left untouched, and any archive trouble
-falls back to a normal start, logged on the ``jvm_archive`` logger.
+falls back to a normal start; each choice is logged on the
+``jvm_archive`` logger.
 """
 
 from __future__ import annotations
@@ -53,6 +61,10 @@ _RUNTIME_CONFS: dict[str, str] = {
 #: depend on them, so a session that refuses one must fail loudly.
 _VALUE_CONFS = ("spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong")
 
+#: Raised on a local master while it is still Spark's stock 32 (``configure``).
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_LOCAL_LISTING_THRESHOLD = "1024"
+
 
 def configure(spark: SparkSession) -> SparkSession:
     """Apply required runtime confs; idempotent, foreign-session-safe.
@@ -74,6 +86,18 @@ def configure(spark: SparkSession) -> SparkSession:
                 f"session refused {key}={_RUNTIME_CONFS[key]!r} (reads back "
                 f"{actual!r}); timestamp values would silently differ"
             )
+    try:
+        # Spark lists a dataset's subdirectories in a Spark job once
+        # there are more than this many (the IVF index has 63 ``cell=``
+        # dirs, the month mirror 80), even on a memo-hit open.  A local
+        # master lists in this JVM either way, and the job only adds
+        # its launch, so raise the stock threshold there.
+        master = spark.sparkContext.master
+        if ((master == "local" or master.startswith("local["))
+                and spark.conf.get(_LISTING_THRESHOLD) == "32"):
+            spark.conf.set(_LISTING_THRESHOLD, _LOCAL_LISTING_THRESHOLD)
+    except Exception:
+        pass
     try:
         # Only touch shuffle.partitions when it's still Spark's stock 200
         # (a deliberate user setting is respected): 200 tiny shuffle
@@ -144,8 +168,8 @@ def get_spark(
     at local scale 200 tiny shuffle partitions is pure scheduling
     overhead, while on a 1000-executor cluster the same code path would
     set it to ~2-3× total cores (AQE coalesces the excess).  A JVM
-    this call launches starts from the class-data-sharing archive
-    (module docstring).
+    this call launches starts from the launch home and the
+    class-data-sharing archive (module docstring).
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4

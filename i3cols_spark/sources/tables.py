@@ -13,10 +13,12 @@ Schema memo (the ``cols.load``-once analog): inferring a parquet
 schema launches one Spark job, and every query opens its tables
 afresh, so ``table_schema`` memoises each dataset's inferred
 ``StructType`` and ``read_parquet`` serves later opens with
-``spark.read.schema(s).parquet(path)`` — no inference job (a dataset
-with more partition directories than
-``spark.sql.sources.parallelPartitionDiscovery.threshold`` is still
-listed in a job, hit or miss).  A miss
+``spark.read.schema(s).parquet(path)`` — no job at all on a local
+master, where ``session.configure`` raises
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` from its
+stock 32 so that the IVF index (63 ``cell=`` dirs) and the month
+mirror (80) are listed in the driver; elsewhere a dataset with more
+partition directories than the threshold is listed in a job.  A miss
 hands back the frame that inferred the schema, so no open lists the
 path twice.  The memo serves fixture tables (``table()``), ``ingest``
 datasets (``read_columns``) and the derived mirrors
